@@ -41,8 +41,7 @@ def main() -> None:
 
     cfg = DedupConfig.from_json(args.config) if args.config else DedupConfig()
     if args.master:
-        spark = recommended_session(master=args.master,
-                                    shuffle_partitions=cfg.shuffle_partitions)
+        spark = recommended_session(master=args.master)
     else:
         from pyspark.sql import SparkSession
 

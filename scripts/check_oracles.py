@@ -50,7 +50,8 @@ def main():
     import __spark_entry__ as entrymod
     from spaczz_spark.plans.pipeline import recommended_session
 
-    spark = recommended_session(app="oracle-check", master="local[16]",
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+    spark = recommended_session(app="oracle-check", master=f"local[{cores}]",
                                 shuffle_partitions=16)
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -29,6 +29,7 @@ def main():
     from spaczz_spark import queries as Q
     from spaczz_spark.functions.signatures import (
         normalize,
+        pack_band_keys,
         with_fused_signatures,
     )
     from spaczz_spark.operators.lsh import minhash_candidates
@@ -42,45 +43,34 @@ def main():
 
     sections = []
 
-    import spaczz_spark.operators.lsh as lsh
-
     files = Q._files(spark, sf)
     sig = with_fused_signatures(normalize(files))
-    # Full dataflow view: disable the sized-table materialization so the
-    # audit shows the complete explode -> exchange -> window -> tiered-join
-    # shape in one plan (in production the part up to and including the
-    # Window is materialized ONCE via localCheckpoint and the tier joins
-    # read the checkpointed RDD — see the executed view below).
-    _saved_mat = lsh.MATERIALIZE_SIZED
-    lsh.MATERIALIZE_SIZED = False
-    try:
-        cand_full = minhash_candidates(sig, dedup=False)
-        full_plan = grab(cand_full)
-    finally:
-        lsh.MATERIALIZE_SIZED = _saved_mat
+    banded = sig.select(
+        "file_id", F.explode(pack_band_keys(64, 2)).alias("bucket_key")
+    )
+    sections.append((
+        "MinHash band rows — the input of the bucket-sizing window "
+        "(normalize -> fused signature UDF -> band explode)",
+        "Check: exactly ONE ArrowEvalPython node computes every per-row "
+        "signature (a chained shingle->minhash/simhash UDF pair would be "
+        "two pipelined Python runners per task - the deadlock shape); the "
+        "band keys are packed JVM-side; scan reads only the needed columns.",
+        grab(banded),
+    ))
+    # minhash_candidates materializes the sized (bucket_key, fid, bsize,
+    # bmin) window table with an eager localCheckpoint; this plan is the
+    # tier joins over it
     cand = minhash_candidates(sig, dedup=False)
     sections.append((
-        "MinHash LSH candidates — full dataflow (normalize -> fused "
-        "signature UDF -> band explode -> bucket window -> tiered pair "
-        "joins; sized-table materialization disabled for this view)",
-        "Check: exactly ONE ArrowEvalPython node computes every per-row "
-        "signature (the composed shingle->minhash/simhash chain would be "
-        "two pipelined Python runners per task - the deadlock shape); one "
-        "Exchange on the bucket key feeds the sizing window (window impl "
-        "- it beat the grouped-array aggregation 2.4-3.7x at scale4 and "
-        "scales better, see BENCH/profile_candidates_scale4.json); "
-        "oversized buckets go through the salted mid / star tiers; scan "
-        "reads only the needed columns.",
-        full_plan,
-    ))
-    sections.append((
-        "MinHash LSH candidates — executed shape (sized table "
-        "localCheckpointed once, r7)",
+        "MinHash LSH candidates — tier joins over the sized table",
         "Check: the signature UDF + explode + exchange + window run ONCE "
-        "in the materialization job; this plan's tier joins read the "
-        "checkpointed RDD (Scan ExistingRDD) instead of recomputing the "
-        "window subtree per tier reference (5x before r7), and the small "
-        "tier self-joins it via BroadcastHashJoin.",
+        "in the materialization job (the window plan beat a grouped-array "
+        "aggregation 2.4-3.7x at scale4, see "
+        "BENCH/profile_candidates_scale4.json); this plan's tier joins "
+        "read the checkpointed RDD (Scan ExistingRDD) instead of "
+        "recomputing the window subtree per tier reference, the small "
+        "tier self-joins it via BroadcastHashJoin, and oversized buckets "
+        "go through the salted mid / star tiers.",
         grab(cand),
     ))
 

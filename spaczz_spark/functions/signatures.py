@@ -1,4 +1,4 @@
-"""Normalization, shingling, and MinHash/SimHash signatures.
+"""Normalization and the fused per-row signature kernel.
 
 Design (SURVEY.md §2.2 P1 / §4.2):
 
@@ -6,16 +6,16 @@ Design (SURVEY.md §2.2 P1 / §4.2):
   path, commit)`` (stable, resume-safe; never ``monotonically_increasing_id``),
   ``content_sha256 = sha2(content, 256)`` (the per-row invariant demanded by
   BASELINE.json's input_hint).
-- **shingle**: tokenization + k-gram shingling stays JVM-side
-  (``regexp_extract_all`` + ``transform``/``slice`` + ``xxhash64``) so it
-  rides whole-stage codegen and needs no Python round-trip; output is an
-  ``array<long>`` of distinct hashed shingles.
-- **minhash / simhash**: Arrow-batched pandas UDFs over the hashed-shingle
-  arrays; per batch the work is numpy matrix arithmetic (no per-row Python
-  loops over characters). MinHash uses 128 multiply-shift permutations in
-  uint64 wrap-around arithmetic (odd multipliers), seeded deterministically —
-  the signature of a row is a pure function of (content, config), which is
-  what makes checkpoints resumable and the pipeline's output reproducible.
+- **signatures**: ONE Arrow-batched pandas UDF
+  (:func:`make_fused_signature_udf`) turns ``content`` into every per-row
+  signature in a single Python pass: token k-shingles (blake2b-64 token
+  hashes folded into uint64 k-gram hashes, made distinct with
+  ``np.unique``), MinHash-128 (multiply-shift permutations in uint64
+  wrap-around arithmetic, odd multipliers, seeded deterministically),
+  SimHash-64 (per-bit majority vote) and, optionally, winnowed substring
+  fingerprints with their byte offsets. A row's signature is a pure
+  function of (content, config), which is what makes checkpoints
+  resumable and the pipeline's output reproducible.
 
 The scan->verify split mirrors the reference's cheap-gate-then-verify design
 (reference: ``_search/phrasesearcher.py:46-48,195-201`` — ``min_r1`` scan
@@ -24,6 +24,8 @@ Jaccard/edit-ratio the verify.
 """
 
 from __future__ import annotations
+
+import sys
 
 import numpy as np
 import pandas as pd
@@ -35,9 +37,7 @@ __all__ = [
     "TOKEN_PATTERN",
     "SHINGLE_SEP",
     "normalize",
-    "with_shingles",
     "minhash_coefficients",
-    "with_signatures",
     "with_fused_signatures",
     "pack_band_keys",
 ]
@@ -48,11 +48,7 @@ __all__ = [
 TOKEN_PATTERN = r"[a-z0-9_]+|[^a-z0-9_\s]"
 SHINGLE_SEP = "\x1f"
 
-_MERSENNE_61 = np.uint64((1 << 61) - 1)
-
-import sys as _sys
-
-_LITTLE_ENDIAN = _sys.byteorder == "little"
+_LITTLE_ENDIAN = sys.byteorder == "little"
 
 
 def normalize(files: DataFrame) -> DataFrame:
@@ -71,212 +67,6 @@ def normalize(files: DataFrame) -> DataFrame:
     )
 
 
-def tokens_col(content: Column = None) -> Column:
-    """Lower-cased token stream of ``content`` (JVM-side)."""
-    c = content if content is not None else F.col("content")
-    return F.regexp_extract_all(F.lower(c), F.lit(TOKEN_PATTERN), 0)
-
-
-def make_shingle_udf(k: int = 3):
-    """pandas UDF: content -> array<long> of distinct hashed token k-shingles.
-
-    Why not JVM higher-order functions: Spark evaluates lambda expressions
-    interpreted (no whole-stage codegen), and inline argument expressions
-    get re-evaluated per element — measured 0.2-0.4 ms *per shingle* on the
-    transform/concat_ws/xxhash64 formulation. This UDF is the Arrow path the
-    input contract prescribes: per batch, tokens are hashed once through a
-    memoized blake2b-64, and k-gram combination is a vectorized numpy
-    multiply-add over the token-hash array (O(n·k) word ops, no per-element
-    Python).
-
-    Shingle identity: hash_combine(h(t_i), ..., h(t_{i+k-1})) — distinct via
-    np.unique. Deterministic across workers/runs (no PYTHONHASHSEED
-    dependence).
-    """
-    import hashlib
-    import re as _re
-
-    token_re = _re.compile(TOKEN_PATTERN)
-    A = np.uint64(0x9E3779B97F4A7C15)
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def shingles(content: pd.Series) -> pd.Series:
-        cache: dict[str, int] = {}
-
-        def tok_hash(t: str) -> int:
-            v = cache.get(t)
-            if v is None:
-                v = int.from_bytes(
-                    hashlib.blake2b(t.encode(), digest_size=8).digest(), "little"
-                )
-                cache[t] = v
-            return v
-
-        out = []
-        for text in content:
-            if not text:
-                out.append(np.array([], dtype=np.int64))
-                continue
-            toks = token_re.findall(text.lower())
-            n = len(toks)
-            if n == 0:
-                out.append(np.array([], dtype=np.int64))
-                continue
-            h = np.fromiter(
-                (tok_hash(t) for t in toks), dtype=np.uint64, count=n
-            )
-            if n < k:
-                acc = h[:1].copy()
-                for j in range(1, n):
-                    acc = acc * A + h[j : j + 1]
-            else:
-                m = n - k + 1
-                acc = h[:m].copy()
-                for j in range(1, k):
-                    acc = acc * A + h[j : j + m]
-            out.append(np.unique(acc).astype(np.int64))
-        return pd.Series(out)
-
-    return shingles
-
-
-def with_shingles(df: DataFrame, k: int = 3) -> DataFrame:
-    """Add ``shingles: array<long>`` — distinct hashed token k-shingles."""
-    udf = make_shingle_udf(k)
-    return df.withColumn("shingles", udf("content")).withColumn(
-        "n_shingles", F.size("shingles")
-    )
-
-
-def make_shingle_fp_udf(
-    k: int = 3, fp_k: int = 32, fp_w: int = 32, fp_min_bytes: int = 100
-):
-    """Fused pandas UDF: content -> (shingles, fingerprints) in ONE pass.
-
-    The token-shingle set (MinHash/SimHash input) and the winnowed k-gram
-    fingerprint set (substring-candidate input) were previously two
-    separate Arrow passes over the same content column — two full
-    serializations of the corpus text into Python. Fusing them halves the
-    Arrow transfer and lets the candidate stage run pure-JVM (explode +
-    bucket joins only), which is what its wall-clock scaling needs.
-
-    Rows shorter than ``fp_min_bytes`` get an empty fingerprint array —
-    identical semantics to the downstream ``n_bytes >= min_bytes`` filter
-    (tiny files share boilerplate k-grams and are covered by MinHash).
-    """
-    import hashlib
-    import re as _re
-
-    from ..operators.substring import winnow_fingerprints_pos
-
-    token_re = _re.compile(TOKEN_PATTERN)
-    A = np.uint64(0x9E3779B97F4A7C15)
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    out_type = StructType(
-        [
-            StructField("shingles", ArrayType(LongType())),
-            StructField("fingerprints", ArrayType(LongType())),
-            # byte offset of each fingerprint's selected k-gram, aligned
-            # with `fingerprints` — the substring verifier's anchor votes
-            # come from these arrays instead of a per-pair content rehash
-            StructField("fp_positions", ArrayType(IntegerType())),
-        ]
-    )
-
-    @F.pandas_udf(out_type)
-    def shingle_fp(content: pd.Series) -> pd.DataFrame:
-        cache: dict[str, int] = {}
-
-        def tok_hash(t: str) -> int:
-            v = cache.get(t)
-            if v is None:
-                v = int.from_bytes(
-                    hashlib.blake2b(t.encode(), digest_size=8).digest(), "little"
-                )
-                cache[t] = v
-            return v
-
-        empty = np.array([], dtype=np.int64)
-        empty32 = np.array([], dtype=np.int32)
-        sh_out, fp_out, pos_out = [], [], []
-        for text in content:
-            if not text:
-                sh_out.append(empty)
-                fp_out.append(empty)
-                pos_out.append(empty32)
-                continue
-            toks = token_re.findall(text.lower())
-            n = len(toks)
-            if n == 0:
-                sh_out.append(empty)
-            else:
-                h = np.fromiter(
-                    (tok_hash(t) for t in toks), dtype=np.uint64, count=n
-                )
-                if n < k:
-                    acc = h[:1].copy()
-                    for j in range(1, n):
-                        acc = acc * A + h[j : j + 1]
-                else:
-                    m = n - k + 1
-                    acc = h[:m].copy()
-                    for j in range(1, k):
-                        acc = acc * A + h[j : j + m]
-                sh_out.append(np.unique(acc).astype(np.int64))
-            if len(text.encode("utf-8", errors="ignore")) >= fp_min_bytes:
-                vals, pos = winnow_fingerprints_pos(text, fp_k, fp_w)
-                fp_out.append(vals)
-                pos_out.append(pos)
-            else:
-                fp_out.append(empty)
-                pos_out.append(empty32)
-        return pd.DataFrame(
-            {"shingles": sh_out, "fingerprints": fp_out,
-             "fp_positions": pos_out}
-        )
-
-    # asNondeterministic stops CollapseProject from inlining the struct into
-    # its three field references and re-running the UDF per field (the same
-    # Catalyst double-eval the InDel kernel hit in operators/verify.py)
-    return shingle_fp.asNondeterministic()
-
-
-def with_shingles_and_fingerprints(
-    df: DataFrame,
-    k: int = 3,
-    fp_k: int = 32,
-    fp_w: int = 32,
-    fp_min_bytes: int = 100,
-) -> DataFrame:
-    """Add ``shingles``, ``n_shingles`` and ``fingerprints`` via the fused
-    single-pass UDF (see :func:`make_shingle_fp_udf`)."""
-    udf = make_shingle_fp_udf(k, fp_k, fp_w, fp_min_bytes)
-    return (
-        df.withColumn("_sig", udf("content"))
-        .withColumns(
-            {
-                "shingles": F.col("_sig.shingles"),
-                # provenance metadata rides the column (and survives the
-                # parquet checkpoint round-trip in the Spark schema footer)
-                # so downstream consumers can verify the winnowing params
-                # instead of trusting the column name — see
-                # operators.substring.substring_candidates
-                "fingerprints": F.col("_sig.fingerprints").alias(
-                    "fingerprints",
-                    metadata={
-                        "fp_k": fp_k, "fp_w": fp_w,
-                        "fp_min_bytes": fp_min_bytes,
-                    },
-                ),
-                "fp_positions": F.col("_sig.fp_positions"),
-                "n_shingles": F.size("_sig.shingles"),
-            }
-        )
-        .drop("_sig")
-    )
-
-
 def minhash_coefficients(num_perm: int = 128, seed: int = 42) -> tuple[np.ndarray, np.ndarray]:
     """Deterministic multiply-shift permutation coefficients (a odd, b any)."""
     rng = np.random.RandomState(seed)
@@ -291,70 +81,6 @@ def minhash_coefficients(num_perm: int = 128, seed: int = 42) -> tuple[np.ndarra
     return a, b
 
 
-def make_minhash_udf(num_perm: int = 128, seed: int = 42):
-    """pandas UDF: array<long> shingles -> array<long> minhash signature.
-
-    Per Arrow batch: one numpy broadcast ``min((a * s + b))`` per row in
-    uint64 wrap-around arithmetic (a fixed consistent total order — any
-    consistent order is a valid MinHash order). Signed reinterpretation on
-    the way out because Spark longs are signed; order consistency is all
-    that matters and both sides reinterpret identically.
-    """
-    a_co, b_co = minhash_coefficients(num_perm, seed)
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def minhash(shingles: pd.Series) -> pd.Series:
-        out = []
-        empty = np.full(num_perm, np.iinfo(np.int64).max, dtype=np.int64)
-        for arr in shingles:
-            if arr is None or len(arr) == 0:
-                out.append(empty)
-                continue
-            s = np.asarray(arr, dtype=np.int64).astype(np.uint64)
-            # (len(s), num_perm) broadcast; uint64 wrap-around is the hash
-            hashed = s[:, None] * a_co[None, :] + b_co[None, :]
-            out.append(hashed.min(axis=0).astype(np.int64))
-        return pd.Series(out)
-
-    return minhash
-
-
-def make_simhash_udf(bits: int = 64):
-    """pandas UDF: array<long> shingles -> long 64-bit SimHash.
-
-    Majority vote per bit over the (already hashed) shingle set. numpy
-    unpacks bits via byte view — no per-bit Python loop.
-    """
-    assert bits == 64, "only 64-bit simhash supported"
-
-    @F.pandas_udf(LongType())
-    def simhash(shingles: pd.Series) -> pd.Series:
-        out = np.zeros(len(shingles), dtype=np.int64)
-        for i, arr in enumerate(shingles):
-            if arr is None or len(arr) == 0:
-                continue
-            s = np.asarray(arr, dtype=np.int64).astype(np.uint64)
-            # (n, 64) bit matrix
-            bits_m = (s[:, None] >> np.arange(64, dtype=np.uint64)[None, :]) & np.uint64(1)
-            votes = 2 * bits_m.astype(np.int64).sum(axis=0) - len(s)
-            sig = np.uint64(0)
-            sig_bits = (votes > 0).astype(np.uint64)
-            sig = (sig_bits << np.arange(64, dtype=np.uint64)).sum(dtype=np.uint64)
-            out[i] = sig.astype(np.int64)
-        return pd.Series(out)
-
-    return simhash
-
-
-def with_signatures(
-    df: DataFrame, num_perm: int = 128, seed: int = 42
-) -> DataFrame:
-    """Add ``minhash: array<long>`` and ``simhash: long`` signature columns."""
-    mh = make_minhash_udf(num_perm, seed)
-    sh = make_simhash_udf()
-    return df.withColumns({"minhash": mh("shingles"), "simhash": sh("shingles")})
-
-
 def make_fused_signature_udf(
     k: int = 3,
     num_perm: int = 128,
@@ -367,32 +93,30 @@ def make_fused_signature_udf(
     Arrow pass (shingles, MinHash-128, SimHash-64, and — when ``fp_k`` is
     set — winnowed substring fingerprints + byte positions).
 
-    Why one pass instead of composing :func:`make_shingle_fp_udf` with
-    :func:`with_signatures` (the round-5 shape):
+    Why one pass instead of a chain of UDFs (shingles in one, MinHash and
+    SimHash in the next — the round-5 shape):
 
-    1. **Deadlock.** The composed shape compiles to TWO chained
-       ArrowEvalPython nodes inside one stage. Spark 4's PythonRunner
-       services each worker socket from the task thread with a selector;
-       with two pipelined runners per task the thread can end up
-       select()-ing on the downstream worker while BOTH workers are
-       blocked in ``tcp_sendmsg`` (their 4 MB socket send buffers full)
-       and the upstream's output goes undrained — observed live on the
-       560k-file corpus (stage stuck 20+ min at 0 CPU, jstack:
+    1. **Deadlock.** A chain compiles to TWO chained ArrowEvalPython nodes
+       inside one stage. Spark 4's PythonRunner services each worker
+       socket from the task thread with a selector; with two pipelined
+       runners per task the thread can end up select()-ing on the
+       downstream worker while BOTH workers are blocked in
+       ``tcp_sendmsg`` (their 4 MB socket send buffers full) and the
+       upstream's output goes undrained — observed live on the 560k-file
+       corpus (stage stuck 20+ min at 0 CPU, jstack:
        ``BasePythonRunner$ReaderInputStream.read`` epoll-wait; both
        pyspark.daemon workers in ``sk_stream_wait_memory``). Shingle
        arrays are the fattest per-row payload in the engine, so this
        stage is exactly where the buffers fill. One ArrowEvalPython node
        = one worker per task = the cycle cannot form.
-    2. **Boundary bytes.** Composed, the shingle array crosses the
+    2. **Boundary bytes.** Chained, the shingle array crosses the
        JVM<->Python boundary three times (out of the shingle UDF, back in
        for MinHash and SimHash). Fused it crosses once — at 100 TB the
        shingle stream is the dominant Arrow traffic, so this is a ~2x cut
        in serialization for the signature stage.
 
-    Bit-identity with the composed path is pinned by
-    ``tests/test_fused_signatures.py`` (same uint64 k-gram accumulator,
-    same ``np.unique``/int64 reinterpretation, same multiply-shift
-    MinHash and bit-vote SimHash kernels).
+    ``tests/test_fused_signatures.py`` pins every output column, row by
+    row, against a per-row numpy reference of the same arithmetic.
 
     Memory note (ADVICE r6): the batch kernel materializes the whole Arrow
     batch's token stream (token lists + the flattened array fed to
@@ -488,9 +212,8 @@ def make_fused_signature_udf(
                     acc = h[:m].copy()
                     for j in range(1, k):
                         acc = acc * A + h[j : j + m]
-                # identical int64 reinterpretation as make_shingle_fp_udf,
-                # then the exact make_minhash_udf / make_simhash_udf kernels
-                # over the same values
+                # distinct shingles reinterpreted as Spark's signed longs;
+                # MinHash and SimHash run over the same uint64 values
                 sh = np.unique(acc).astype(np.int64)
                 sh_out.append(sh)
                 s = sh.astype(np.uint64)
@@ -541,7 +264,7 @@ def make_fused_signature_udf(
 
     # asNondeterministic stops CollapseProject from inlining the struct into
     # its field references and re-running the UDF per extracted field (same
-    # Catalyst double-eval guard as make_shingle_fp_udf / the InDel kernel)
+    # Catalyst double-eval guard as the InDel kernel in operators/verify.py)
     return fused_signature.asNondeterministic()
 
 

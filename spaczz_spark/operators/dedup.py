@@ -28,6 +28,7 @@ from ..functions.signatures import (
     with_fused_signatures,
 )
 from .lsh import minhash_candidates, simhash_candidates
+from .verify import attach_pair_sides, shingle_jaccard
 
 __all__ = [
     "exact_duplicates",
@@ -92,8 +93,8 @@ def fingerprint_duplicates(
 
 def shingle_strings(toks: Column, k: int = 5) -> Column:
     """Distinct token k-shingle strings from a *materialized* token-array
-    column (see functions.signatures.kgram_hashes for why it must be
-    materialized — inline expressions re-evaluate per element)."""
+    column: Spark evaluates lambda bodies interpreted, and an inline
+    argument expression would be re-evaluated once per element."""
     idx = F.sequence(F.lit(1), F.greatest(F.size(toks) - (k - 1), F.lit(1)))
     return F.array_distinct(
         F.transform(
@@ -159,7 +160,7 @@ def ngram_jaccard_pairs(
     )
 
 
-def _docs_with_signatures(
+def _doc_signatures(
     docs: DataFrame, k: int, num_perm: int, seed: int,
     id_col: str, text_col: str,
 ) -> DataFrame:
@@ -189,29 +190,20 @@ def _docs_with_signatures(
 def _verify_jaccard(
     pairs: DataFrame, sigs: DataFrame, threshold: float
 ) -> DataFrame:
-    side = sigs.select("file_id", "shingles")
+    # No sha-equality short-circuit (unlike the pipeline's verify):
+    # token-free docs have empty shingle sets and score 0.0 even when
+    # identical, so they never pass the threshold. The brute-force
+    # shingle_strings path (and its DuckDB oracle) gives such docs one
+    # empty-string shingle instead, so the two operators differ on them.
+    sides = attach_pair_sides(pairs, sigs, ["n_shingles", "shingles"])
+    jaccard = shingle_jaccard(
+        F.col("isz"), F.col("a_n_shingles"), F.col("b_n_shingles")
+    )
     return (
-        pairs.join(
-            side.withColumnsRenamed({"file_id": "a_id", "shingles": "a_sh"}),
-            "a_id",
+        sides.withColumn(
+            "isz", F.size(F.array_intersect("a_shingles", "b_shingles"))
         )
-        .join(
-            side.withColumnsRenamed({"file_id": "b_id", "shingles": "b_sh"}),
-            "b_id",
-        )
-        .withColumn(
-            "jaccard",
-            # token-free docs have empty shingle sets and still reach here
-            # (sentinel MinHash collides in every band): define 0/0 as 0.0
-            # rather than ANSI-aborting the job. Such pairs never appear in
-            # the brute-force oracle (the exploded equi-join needs a shared
-            # shingle), so filtering them out preserves output equality.
-            F.when(F.size(F.array_union("a_sh", "b_sh")) == 0, F.lit(0.0))
-            .otherwise(
-                F.size(F.array_intersect("a_sh", "b_sh"))
-                / F.size(F.array_union("a_sh", "b_sh"))
-            ),
-        )
+        .withColumn("jaccard", jaccard)
         .where(F.col("jaccard") >= threshold)
         .select("a_id", "b_id", F.round("jaccard", 6).alias("jaccard"))
     )
@@ -244,7 +236,7 @@ def minhash_neardup_pairs(
     whose largest single LSH bucket is < ``star_cap`` docs; lower it only
     when trading pair completeness for skew protection.
     """
-    sigs = _docs_with_signatures(docs, k, num_perm, seed, id_col, text_col)
+    sigs = _doc_signatures(docs, k, num_perm, seed, id_col, text_col)
     cand = minhash_candidates(sigs, bands, rows, bucket_cap, star_cap=star_cap)
     return _verify_jaccard(cand.select("a_id", "b_id"), sigs, threshold)
 
@@ -264,6 +256,6 @@ def simhash_neardup_pairs(
     Jaccard. Note: SimHash recall at a Jaccard threshold is heuristic (the
     two measures differ); pairs it finds are exactly verified, so precision
     is exact even where recall is approximate."""
-    sigs = _docs_with_signatures(docs, k, 128, seed, id_col, text_col)
+    sigs = _doc_signatures(docs, k, 128, seed, id_col, text_col)
     cand = simhash_candidates(sigs, max_hamming, bucket_cap)
     return _verify_jaccard(cand.select("a_id", "b_id"), sigs, threshold)

@@ -17,14 +17,11 @@ Scale design:
   upstream (group by sha256, keep one representative) removes identical-file
   pileups; residual oversized buckets fall back to star expansion
   (min-member -> others, linear) instead of all-pairs — connected components
-  downstream restores the transitive clustering. The count of star-expanded
-  buckets is surfaced as a metric.
+  downstream restores the transitive clustering.
 - AQE (adaptive skew-join splitting) is expected ON in the session config.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -33,27 +30,6 @@ from pyspark.sql.window import Window
 from ..functions.signatures import pack_band_keys
 
 __all__ = ["minhash_candidates", "simhash_candidates", "pairs_from_buckets"]
-
-# Materialize the bucket-sizing window table (and the payload map) once
-# per enumeration instead of recomputing it per tier reference — see the
-# comment at the localCheckpoint site. Toggleable for interleaved A/Bs on
-# a noisy host (same pattern as SPARK_GRAFT_PAIRS_IMPL below).
-MATERIALIZE_SIZED = os.environ.get("SPARK_GRAFT_PAIRS_MATERIALIZE", "1") != "0"
-
-# Pair-enumeration physical strategy. "window" (the default) is the
-# count/min-over-window + self-join plan; "grouped" collects each
-# bucket's members into a sorted array with one hash aggregation and
-# enumerates small-tier pairs as a pure projection. The grouped shape
-# looked cheaper on paper (no window sort, no self-join) but LOST the
-# round-6 scale4 A/B decisively (BENCH/profile_candidates_scale4.json,
-# 560k files, same checkpoint, identical pair counts): full stage 724s
-# vs window's 301s at local[2] and 390s vs 105s at local[8], and it
-# scales worse (1.86x vs 2.86x at 4x cores) — materializing per-bucket
-# member arrays pushes the many-singleton-bucket aggregation past the
-# ObjectHashAggregate hash budget into sort-based fallback, which
-# spills. Kept selectable for the profiler A/B; both impls produce the
-# identical pair set (parametrized tests pin it).
-PAIRS_IMPL = os.environ.get("SPARK_GRAFT_PAIRS_IMPL", "window")
 
 
 def pairs_from_buckets(
@@ -64,7 +40,6 @@ def pairs_from_buckets(
     star_cap: int = 4096,
     dedup: bool = True,
     payload_col: str | None = None,
-    impl: str | None = None,
 ) -> DataFrame:
     """Enumerate candidate pairs from (bucket_key, file_id) rows.
 
@@ -90,156 +65,17 @@ def pairs_from_buckets(
 
     Returns distinct (a_id, b_id) with a_id < b_id.
     """
-    impl = impl or PAIRS_IMPL
-    if impl == "grouped":
-        return _pairs_grouped(
-            buckets, bucket_cap, id_col, n_salt, star_cap, dedup, payload_col
-        )
-    return _pairs_window(
-        buckets, bucket_cap, id_col, n_salt, star_cap, dedup, payload_col
-    )
-
-
-def _pairs_grouped(
-    buckets: DataFrame,
-    bucket_cap: int,
-    id_col: str,
-    n_salt: int,
-    star_cap: int,
-    dedup: bool,
-    payload_col: str | None,
-) -> DataFrame:
-    """Grouped-array pair enumeration (the round-6 default).
-
-    ONE hash aggregation (``collect_list`` into a sorted members array)
-    replaces the window's shuffle+sort AND the small-tier self-join: for
-    buckets ≤ ``bucket_cap`` the pair set is a pure JVM projection
-    (``transform`` × ``slice`` over the sorted array), so the banded
-    table crosses the exchange once and is never sorted or joined. The
-    mid tier re-explodes only its (rare) oversized buckets into the same
-    salted join as the window plan; the large tier stars around
-    ``members[0]`` (== min, the array is sorted). Requires
-    ``spark.sql.objectHashAggregate.sortBased.fallbackThreshold`` to be
-    raised (recommended_session does) or the many-singleton-bucket agg
-    falls back to sort-based and the sort comes back.
-    """
-    member = (
-        F.struct(F.col(id_col).alias("fid"), F.col(payload_col).alias("pl"))
-        if payload_col
-        else F.col(id_col)
-    )
-    grouped = (
-        buckets.groupBy("bucket_key")
-        .agg(F.array_sort(F.collect_list(member)).alias("members"))
-        .where(F.size("members") >= 2)
-    )
-
     if payload_col:
-        pair_struct = (
-            "struct(x.fid AS a_id, y.fid AS b_id, x.pl AS a_pl, y.pl AS b_pl)"
-        )
-    else:
-        pair_struct = "struct(x AS a_id, y AS b_id)"
-    pair_cols = ["p.a_id", "p.b_id"] + (
-        ["p.a_pl", "p.b_pl"] if payload_col else []
-    )
-
-    small = grouped.where(F.size("members") <= bucket_cap)
-    small_pairs = (
-        small.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(members, (x, i) -> "
-                    "transform(slice(members, i + 2, size(members) - i - 1), "
-                    f"y -> {pair_struct})))"
-                )
-            ).alias("p")
-        )
-        # the sorted array makes a_id <= b_id structural; strict < drops
-        # self-pairs from duplicate (bucket, id) input rows
-        .where(F.col("p.a_id") < F.col("p.b_id"))
-        .select(*pair_cols)
-    )
-
-    mid = grouped.where(
-        (F.size("members") > bucket_cap) & (F.size("members") <= star_cap)
-    ).select("bucket_key", F.explode("members").alias("m"))
-    mid_fid = F.col("m.fid") if payload_col else F.col("m")
-    mid_a = mid.select(
-        "bucket_key",
-        F.col("m").alias("ma"),
-        F.pmod(F.xxhash64(mid_fid), F.lit(n_salt)).alias("salt"),
-    )
-    mid_b = mid.select(
-        "bucket_key",
-        F.col("m").alias("mb"),
-        F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1)).cast("array<bigint>"))
-        .alias("salt"),
-    )
-    if payload_col:
-        mid_sel = [
-            F.col("ma.fid").alias("a_id"), F.col("mb.fid").alias("b_id"),
-            F.col("ma.pl").alias("a_pl"), F.col("mb.pl").alias("b_pl"),
-        ]
-        mid_lt = F.col("ma.fid") < F.col("mb.fid")
-    else:
-        mid_sel = [F.col("ma").alias("a_id"), F.col("mb").alias("b_id")]
-        mid_lt = F.col("ma") < F.col("mb")
-    mid_pairs = (
-        mid_a.join(mid_b, ["bucket_key", "salt"]).where(mid_lt).select(*mid_sel)
-    )
-
-    large = grouped.where(F.size("members") > star_cap)
-    large_pairs = (
-        large.select(
-            F.col("members")[0].alias("ma"),
-            F.explode(F.expr("slice(members, 2, size(members) - 1)")).alias(
-                "mb"
-            ),
-        )
-        .where(
-            (F.col("ma.fid") < F.col("mb.fid"))
-            if payload_col
-            else (F.col("ma") < F.col("mb"))
-        )
-        .select(*mid_sel)
-    )
-
-    out = small_pairs.unionByName(mid_pairs).unionByName(large_pairs)
-    if dedup:
-        out = (
-            out.groupBy("a_id", "b_id").agg(
-                F.first("a_pl").alias("a_pl"), F.first("b_pl").alias("b_pl")
-            )
-            if payload_col
-            else out.distinct()
-        )
-    return out
-
-
-def _pairs_window(
-    buckets: DataFrame,
-    bucket_cap: int,
-    id_col: str,
-    n_salt: int,
-    star_cap: int,
-    dedup: bool,
-    payload_col: str | None,
-) -> DataFrame:
-    """Original window-sizing + self-join enumeration (pre-round-6 plan)."""
-    if payload_col:
-        ids = _pairs_window(
-            buckets, bucket_cap, id_col, n_salt, star_cap, dedup, None
+        ids = pairs_from_buckets(
+            buckets, bucket_cap, id_col, n_salt, star_cap, dedup
         )
         # materialized once: referenced by BOTH side-joins below, and the
         # distinct is itself a shuffle of the whole exploded bucket table —
         # without the checkpoint it ran twice (same nondeterministic-
-        # upstream reuse blocker as `sized` above)
+        # upstream reuse blocker as `sized` below)
         pl = buckets.select(
             F.col(id_col).alias("fid"), F.col(payload_col).alias("pl")
-        ).distinct()
-        if MATERIALIZE_SIZED:
-            pl = pl.localCheckpoint()
+        ).distinct().localCheckpoint()
         return (
             ids.join(
                 pl.select(F.col("fid").alias("a_id"), F.col("pl").alias("a_pl")),
@@ -268,8 +104,7 @@ def _pairs_window(
     # pipeline candidates stage). One localCheckpoint replaces five
     # recomputations; the slim (bucket_key, fid, bsize, bmin) schema keeps
     # the materialized footprint small at any scale (~32 B/row).
-    if MATERIALIZE_SIZED:
-        sized = sized.localCheckpoint()
+    sized = sized.localCheckpoint()
 
     small = sized.where(F.col("bsize").between(2, bucket_cap))
     small_pairs = (
@@ -322,7 +157,9 @@ def minhash_candidates(
     """Candidate pairs from MinHash LSH banding: (a_id, b_id, stage).
 
     ``sig_df`` needs (file_id, minhash). One explode + one shuffle on the
-    band bucket key; singleton buckets are dropped before the join.
+    band bucket key. Every banded row goes through the bucket-sizing
+    window; singleton buckets are dropped after it (``bsize >= 2``), before
+    the tier joins.
     """
     banded = sig_df.select(
         "file_id",

@@ -37,7 +37,6 @@ from .lsh import pairs_from_buckets
 from .verify import CHAR_KERNEL_MAX, attach_pair_sides
 
 __all__ = [
-    "make_fingerprint_udf",
     "substring_candidates",
     "verify_substring_pairs",
     "anchored_partial_ratio",
@@ -229,16 +228,6 @@ def _sliding_first_argmin(h: np.ndarray, w: int) -> np.ndarray:
     return np.where(s_min <= p_min, s_arg, p_arg)
 
 
-def make_fingerprint_udf(k: int = 32, w: int = 32):
-    @F.pandas_udf(ArrayType(LongType()))
-    def fingerprints(content: pd.Series) -> pd.Series:
-        return content.map(
-            lambda t: winnow_fingerprints(t, k, w) if t else np.array([], np.int64)
-        )
-
-    return fingerprints
-
-
 def substring_candidates(
     corpus: DataFrame,
     *,
@@ -249,53 +238,46 @@ def substring_candidates(
 ) -> DataFrame:
     """Candidate pairs sharing a winnowed fingerprint: (a_id, b_id, stage).
 
-    Documents below ``min_bytes`` are excluded — tiny files share
-    boilerplate k-grams and are already fully covered by the MinHash path.
-
-    When the corpus already carries a precomputed ``fingerprints`` column
-    (the fused signatures stage —
-    ``functions.signatures.with_shingles_and_fingerprints``), this stage is
-    pure JVM: explode + bucket joins, no Arrow pass over content at all.
-    Short docs have empty precomputed arrays, so the explode reproduces the
-    ``min_bytes`` filter exactly. The fused stage stamps its winnowing
+    ``corpus`` must carry the precomputed ``fingerprints`` column of the
+    fused signatures stage (``functions.signatures.with_fused_signatures``
+    with ``fp_k``/``fp_w``/``fp_min_bytes`` set), so this stage is pure
+    JVM: explode + bucket joins, no Arrow pass over content at all.
+    Documents below ``min_bytes`` carry empty arrays — tiny files share
+    boilerplate k-grams and are already fully covered by the MinHash path —
+    so the explode drops them. The fused stage stamps its winnowing
     parameters into the column's metadata (which survives parquet
-    checkpoints); the fast path verifies them against the requested
-    (k, w, min_bytes) and raises on mismatch — a column merely *named*
-    ``fingerprints`` but computed with different winnowing would silently
-    yield wrong candidate pairs otherwise. Columns without metadata
-    (hand-built inputs) get a warning instead of a hard failure.
+    checkpoints); they are checked against the requested (k, w, min_bytes)
+    and a mismatch raises — a column merely *named* ``fingerprints`` but
+    computed with different winnowing would silently yield wrong candidate
+    pairs otherwise. Columns without metadata (hand-built inputs) get a
+    warning instead of a hard failure.
     """
-    if "fingerprints" in corpus.columns:
-        meta = corpus.schema["fingerprints"].metadata or {}
-        have = tuple(
-            meta.get(key) for key in ("fp_k", "fp_w", "fp_min_bytes")
+    if "fingerprints" not in corpus.columns:
+        raise ValueError(
+            "substring_candidates needs a precomputed `fingerprints` "
+            "column; build the corpus with with_fused_signatures("
+            f"fp_k={k}, fp_w={w}, fp_min_bytes={min_bytes})"
         )
-        if all(v is not None for v in have):
-            if tuple(int(v) for v in have) != (k, w, min_bytes):
-                raise ValueError(
-                    f"precomputed fingerprints were winnowed with "
-                    f"(k, w, min_bytes)={tuple(int(v) for v in have)} but "
-                    f"this stage was asked for {(k, w, min_bytes)}; "
-                    f"recompute the signatures or align the config"
-                )
-        else:
-            import warnings
-
-            warnings.warn(
-                "fingerprints column carries no winnowing-parameter "
-                f"metadata; trusting it matches (k={k}, w={w}, "
-                f"min_bytes={min_bytes})",
-                stacklevel=2,
+    meta = corpus.schema["fingerprints"].metadata or {}
+    have = tuple(meta.get(key) for key in ("fp_k", "fp_w", "fp_min_bytes"))
+    if all(v is not None for v in have):
+        if tuple(int(v) for v in have) != (k, w, min_bytes):
+            raise ValueError(
+                f"precomputed fingerprints were winnowed with "
+                f"(k, w, min_bytes)={tuple(int(v) for v in have)} but "
+                f"this stage was asked for {(k, w, min_bytes)}; "
+                f"recompute the signatures or align the config"
             )
-        buckets = corpus.select(
-            "file_id", F.explode("fingerprints").alias("bucket_key")
-        )
     else:
-        fp = make_fingerprint_udf(k, w)
-        buckets = (
-            corpus.where(F.col("n_bytes") >= min_bytes)
-            .select("file_id", F.explode(fp("content")).alias("bucket_key"))
+        import warnings
+
+        warnings.warn(
+            "fingerprints column carries no winnowing-parameter "
+            f"metadata; trusting it matches (k={k}, w={w}, "
+            f"min_bytes={min_bytes})",
+            stacklevel=2,
         )
+    buckets = corpus.select("file_id", F.explode("fingerprints").alias("bucket_key"))
     return pairs_from_buckets(buckets, bucket_cap).withColumn(
         "stage", F.lit("substring")
     )

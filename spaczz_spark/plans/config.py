@@ -31,8 +31,7 @@ class DedupConfig:
     bands: int = 64
     rows: int = 2
     seed: int = 42
-    # simhash
-    simhash_bits: int = 64
+    # simhash (64-bit)
     max_hamming: int = 3
     # verification thresholds (reference semantics)
     min_r: int = 75
@@ -55,13 +54,12 @@ class DedupConfig:
     substring_partial: bool = True
     # skew handling
     bucket_cap: int = 64
-    # layout
-    shuffle_partitions: int = 32
     # checkpoint-layout version: folded into config_hash so schema changes
-    # to stage outputs (e.g. r7: `content` dropped from the `signatures`
-    # checkpoint — verify joins text from `normalized` instead)
+    # to stage outputs (e.g. 5: `content` dropped from the `signatures`
+    # checkpoint — verify joins text from `normalized` instead) and config
+    # field changes (6: unread `simhash_bits`/`shuffle_partitions` removed)
     # invalidate incompatible checkpoints from older engine builds
-    layout_version: int = 5
+    layout_version: int = 6
 
     def __post_init__(self):
         if self.bands * self.rows != self.num_perm:

@@ -8,7 +8,8 @@ collapse is a slim recomputed view over ``normalized``, not a commit):
       ·· exact collapse  group identical sha256 -> one representative
                          (kills quadratic LSH buckets from boilerplate BEFORE
                          they exist; the removed members rejoin via star edges)
-      -> signatures      shingles (JVM) + MinHash-128 / SimHash-64 (pandas UDFs)
+      -> signatures      shingles + MinHash-128 / SimHash-64 + winnowed
+                         fingerprints (one fused pandas UDF)
       -> candidate_pairs MinHash banding ∪ SimHash blocking ∪ winnowed
                          substring fingerprints (skew-capped bucket joins)
       -> verified_pairs  sha fast path / exact Jaccard (JVM) / InDel kernel
@@ -67,13 +68,14 @@ def recommended_session(
         .config("spark.sql.files.openCostInBytes", "8m")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1024")
-        # the grouped pair enumeration (operators/lsh.py) aggregates the
-        # banded table into per-bucket member arrays; Spark's default
-        # ObjectHashAggregate fallback threshold (128 keys per partition)
-        # would immediately demote that to sort-based aggregation and
-        # re-pay the sort the plan exists to avoid. Buckets are capped
-        # (star tier), so per-group state is tiny; 4M keys/partition is
-        # ~100MB worst case.
+        # collect_list/collect_set plan as ObjectHashAggregate: the
+        # components stage's provenance collect_set("stage") per file_id,
+        # pair_prf's per-component collect_list, exact_duplicates' and
+        # fingerprint_duplicates' member lists, and the ANN / ruler-
+        # provenance groupings. Spark's default fallback threshold (128
+        # keys per partition) demotes them to sort-based aggregation
+        # almost at once on file_id-keyed inputs and re-pays a sort per
+        # aggregate. 4M keys/partition is ~100MB worst case.
         .config(
             "spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
             "4000000",
@@ -226,8 +228,8 @@ class DedupPipeline:
             # (shingles + winnowed fingerprints + MinHash + SimHash): a
             # single ArrowEvalPython node, so content serializes to Python
             # once, shingles cross the boundary once, the candidate stage
-            # downstream is pure JVM explode/join work — and the chained
-            # two-runner deadlock the composed shape could hit at scale
+            # downstream is pure JVM explode/join work — and the
+            # two-runner deadlock a chain of signature UDFs could hit
             # cannot form (see make_fused_signature_udf).
             #
             # Layout (r7, guide §2.3 "shuffle keys and metadata instead of

@@ -43,7 +43,10 @@ from .operators.substring import (
     verify_substring_pairs,
 )
 
-FIXTURE_ROOT = "/root/repo/fixtures"
+# committed fixtures live next to the package, at the repository root
+FIXTURE_ROOT = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "fixtures"
+)
 US = "\x1f"
 
 
@@ -482,14 +485,15 @@ def q_files_substring_partial(spark, sf_dir):
     f = spark.read.parquet(
         os.path.join(FIXTURE_ROOT, "files_partial", "files.parquet")
     ).withColumn("file_key", F.concat_ws(US, "repo", "path", "commit"))
-    from .functions.signatures import with_shingles_and_fingerprints
+    from .functions.signatures import with_fused_signatures
 
-    corpus = with_shingles_and_fingerprints(
+    corpus = with_fused_signatures(
         f.select(
             F.col("file_key").alias("file_id"),
             "content",
             F.octet_length("content").alias("n_bytes"),
-        )
+        ),
+        fp_k=32, fp_w=32, fp_min_bytes=100,
     ).repartition(spark.sparkContext.defaultParallelism, "file_id")
     cand = substring_candidates(corpus)
     return verify_substring_pairs(

@@ -1,27 +1,34 @@
-"""Bit-identity of the fused single-pass signature UDF vs the composed
-(chained) UDF shape it replaces.
+"""Bit-identity of the fused single-pass signature UDF against the composed
+per-row reference (shingle -> MinHash/SimHash -> fingerprint, each step
+computed on its own in numpy).
 
-The pipeline/streaming/dedup signature stages now run ONE ArrowEvalPython
-node (``with_fused_signatures``) instead of chaining a shingle/fingerprint
-UDF into MinHash/SimHash UDFs — the chained shape could deadlock at scale
-(two pipelined Python runners per task, both socket directions full; see
-``make_fused_signature_udf``'s docstring). These tests pin that the fusion
-changed ONLY the physical shape: every signature column is exactly equal,
-row by row, to the composed path's output, on a corpus that exercises the
-edge rows (empty content, fewer tokens than k, non-ASCII, below/above the
-fingerprint min-bytes gate).
+The pipeline/streaming/dedup signature stages run ONE ArrowEvalPython node
+(``with_fused_signatures``): a chain of shingle -> MinHash/SimHash UDFs
+could deadlock at scale (two pipelined Python runners per task, both
+socket directions full; see ``make_fused_signature_udf``'s docstring). The
+fused kernel batch-vectorizes tokenization and reuses buffers, so these
+tests pin every signature column, row by row, to the plain per-row
+arithmetic it must reproduce: blake2b-64 token hashes, a uint64 k-gram
+fold, ``np.unique``, multiply-shift MinHash, bit-vote SimHash, and
+``winnow_fingerprints_pos`` behind the fingerprint byte gate. The corpus
+exercises the edge rows (empty content, fewer tokens than k, non-ASCII,
+below/above the fingerprint min-bytes gate).
 """
 
+import hashlib
+import re
+
+import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from spaczz_spark.functions.signatures import (
+    TOKEN_PATTERN,
+    minhash_coefficients,
     with_fused_signatures,
-    with_shingles,
-    with_shingles_and_fingerprints,
-    with_signatures,
 )
+from spaczz_spark.operators.substring import winnow_fingerprints_pos
 
 EDGE_ROWS = [
     ("empty", ""),
@@ -30,7 +37,71 @@ EDGE_ROWS = [
     ("two_tokens", "if x"),
     ("nonascii", "def café(α, β): return α + β\n" * 8),
     ("short_under_fp_gate", "return 1 + 2"),
+    ("tiny_assignment", "x=1"),
+] + [
+    # repeated bodies of growing length straddle the 100-byte gate
+    (f"repeated_{i}",
+     ("def f%d():\n    return query_big_table(%d)\n" % (i, i)) * (i + 1))
+    for i in range(8)
 ]
+
+_TOKEN_RE = re.compile(TOKEN_PATTERN)
+_FOLD = np.uint64(0x9E3779B97F4A7C15)
+_BITS = np.arange(64, dtype=np.uint64)
+
+
+def reference_signatures(text, k=3, num_perm=128, seed=42, fp=None):
+    """Per-row signatures computed the plain way, one document at a time."""
+    toks = _TOKEN_RE.findall(text.lower()) if text else []
+    if toks:
+        h = np.array(
+            [
+                int.from_bytes(
+                    hashlib.blake2b(t.encode(), digest_size=8).digest(),
+                    "little",
+                )
+                for t in toks
+            ],
+            dtype=np.uint64,
+        )
+        # k-gram fold; documents with fewer than k tokens fold all of them
+        width = min(len(h), k)
+        m = len(h) - width + 1
+        acc = h[:m].copy()
+        for j in range(1, width):
+            acc = acc * _FOLD + h[j : j + m]
+        shingles = np.unique(acc).astype(np.int64)
+        s = shingles.astype(np.uint64)
+        a, b = minhash_coefficients(num_perm, seed)
+        minhash = (s[:, None] * a[None, :] + b[None, :]).min(axis=0)
+        bits = (s[:, None] >> _BITS[None, :]) & np.uint64(1)
+        votes = 2 * bits.astype(np.int64).sum(axis=0) - len(s)
+        simhash = (
+            ((votes > 0).astype(np.uint64) << _BITS)
+            .sum(dtype=np.uint64)
+            .astype(np.int64)
+        )
+        out = {
+            "shingles": list(shingles),
+            "minhash": list(minhash.astype(np.int64)),
+            "simhash": int(simhash),
+        }
+    else:
+        out = {
+            "shingles": [],
+            "minhash": [np.iinfo(np.int64).max] * num_perm,
+            "simhash": 0,
+        }
+    out["n_shingles"] = len(out["shingles"])
+    if fp is not None:
+        fp_k, fp_w, fp_min_bytes = fp
+        if text and len(text.encode("utf-8", errors="ignore")) >= fp_min_bytes:
+            vals, pos = winnow_fingerprints_pos(text, fp_k, fp_w)
+        else:
+            vals, pos = [], []
+        out["fingerprints"] = list(vals)
+        out["fp_positions"] = list(pos)
+    return out
 
 
 @pytest.fixture(scope="module")
@@ -47,23 +118,16 @@ def sig_input(spark, tiny_files):
     return base.unionByName(edges)
 
 
-def _collected(df, cols):
-    return (
-        df.select("file_id", *cols)
-        .toPandas()
-        .sort_values("file_id")
-        .reset_index(drop=True)
-    )
-
-
-def _assert_frames_equal(got, want, cols):
-    assert len(got) == len(want) and len(got) > 0
-    for c in cols:
-        for i, (g, w) in enumerate(zip(got[c], want[c])):
-            if isinstance(g, (list, tuple)) or hasattr(g, "__len__"):
-                assert list(g) == list(w), f"{c} differs at row {i}"
-            else:
-                assert g == w, f"{c} differs at row {i}: {g} != {w}"
+def _assert_matches_reference(fused, cols, fp=None):
+    rows = fused.select("file_id", "content", *cols).collect()
+    assert len(rows) > len(EDGE_ROWS)
+    for r in rows:
+        want = reference_signatures(r["content"], fp=fp)
+        for c in cols:
+            got = r[c]
+            if isinstance(got, list):
+                got = list(got)
+            assert got == want[c], f"{c} differs for file_id={r['file_id']}"
 
 
 def test_fused_equals_composed_with_fingerprints(sig_input):
@@ -71,22 +135,14 @@ def test_fused_equals_composed_with_fingerprints(sig_input):
         "shingles", "n_shingles", "minhash", "simhash",
         "fingerprints", "fp_positions",
     ]
-    composed = with_signatures(
-        with_shingles_and_fingerprints(sig_input, 3, 32, 32, 100), 128, 42
-    )
     fused = with_fused_signatures(sig_input, 3, 128, 42, 32, 32, 100)
-    _assert_frames_equal(
-        _collected(fused, cols), _collected(composed, cols), cols
-    )
+    _assert_matches_reference(fused, cols, fp=(32, 32, 100))
 
 
 def test_fused_equals_composed_without_fingerprints(sig_input):
     cols = ["shingles", "n_shingles", "minhash", "simhash"]
-    composed = with_signatures(with_shingles(sig_input, 3), 128, 42)
     fused = with_fused_signatures(sig_input, 3, 128, 42)
-    _assert_frames_equal(
-        _collected(fused, cols), _collected(composed, cols), cols
-    )
+    _assert_matches_reference(fused, cols)
     assert "fingerprints" not in fused.columns
 
 
@@ -99,18 +155,13 @@ def test_fused_fingerprint_metadata_survives(sig_input):
 
 
 def test_fused_single_python_eval_node(sig_input):
-    """The whole point: ONE ArrowEvalPython node in the physical plan
-    (the composed shape has two, which is the deadlock-prone pipeline)."""
+    """The whole point: ONE ArrowEvalPython node in the physical plan, even
+    with every signature column projected."""
     fused = with_fused_signatures(sig_input, 3, 128, 42, 32, 32, 100).select(
         "file_id", "shingles", "minhash", "simhash", "fingerprints"
     )
     plan = fused._jdf.queryExecution().executedPlan().toString()
     assert plan.count("ArrowEvalPython") == 1, plan
-    composed = with_signatures(
-        with_shingles_and_fingerprints(sig_input, 3, 32, 32, 100), 128, 42
-    ).select("file_id", "shingles", "minhash", "simhash", "fingerprints")
-    cplan = composed._jdf.queryExecution().executedPlan().toString()
-    assert cplan.count("ArrowEvalPython") >= 2, cplan
 
 
 def test_partial_fingerprint_params_rejected_eagerly(sig_input):

@@ -1,23 +1,36 @@
 """Salted bucket pair enumeration: completeness across all three size tiers.
 
-Parametrized over BOTH physical strategies (``window``, the production
-default — it won the round-6 scale4 A/B — and the ``grouped`` hash-agg
-projection plan kept for the profiler) — the pair set must be identical,
-only the plan shape differs (grouped: one hash agg + projection; window:
-count/min window + self-join).
+``pairs_from_buckets`` sizes each bucket with a window and enumerates
+pairs by tier: all-pairs up to ``bucket_cap``, salted all-pairs up to
+``star_cap``, star edges around the bucket minimum above it.
 """
 
+import random
+from collections import defaultdict
 from itertools import combinations
-
-import pytest
 
 from spaczz_spark.operators.lsh import pairs_from_buckets
 
-IMPLS = ["grouped", "window"]
+
+def bruteforce_pairs(rows, star_cap):
+    """The three tier rules in plain Python over (bucket_key, id) rows.
+    The small and salted mid tiers both yield every pair, so only
+    ``star_cap`` shapes the set; bucket size counts duplicate rows, as the
+    sizing window does."""
+    buckets = defaultdict(list)
+    for key, fid in rows:
+        buckets[key].append(fid)
+    pairs = set()
+    for members in buckets.values():
+        ids = sorted(set(members))
+        if len(members) <= star_cap:
+            pairs |= set(combinations(ids, 2))
+        else:
+            pairs |= {(ids[0], m) for m in ids[1:]}
+    return pairs
 
 
-@pytest.mark.parametrize("impl", IMPLS)
-def test_salted_tiers_enumerate_exactly_the_small_and_mid_pairs(spark, impl):
+def test_salted_tiers_enumerate_exactly_the_small_and_mid_pairs(spark):
     rows = []
     # small bucket (4 members), mid/hot bucket (30 > cap 8), huge (60 > star_cap 40)
     for i in range(4):
@@ -32,7 +45,7 @@ def test_salted_tiers_enumerate_exactly_the_small_and_mid_pairs(spark, impl):
     got = {
         (r["a_id"], r["b_id"])
         for r in pairs_from_buckets(
-            df, bucket_cap=8, n_salt=4, star_cap=40, impl=impl
+            df, bucket_cap=8, n_salt=4, star_cap=40
         ).collect()
     }
 
@@ -46,17 +59,15 @@ def test_salted_tiers_enumerate_exactly_the_small_and_mid_pairs(spark, impl):
     assert got == expect
 
 
-@pytest.mark.parametrize("impl", IMPLS)
-def test_duplicate_bucket_rows_do_not_duplicate_pairs(spark, impl):
+def test_duplicate_bucket_rows_do_not_duplicate_pairs(spark):
     df = spark.createDataFrame(
         [("b", 1), ("b", 2), ("c", 1), ("c", 2)], ["bucket_key", "file_id"]
     )
-    out = pairs_from_buckets(df, bucket_cap=8, impl=impl).collect()
+    out = pairs_from_buckets(df, bucket_cap=8).collect()
     assert [(r["a_id"], r["b_id"]) for r in out] == [(1, 2)]
 
 
-@pytest.mark.parametrize("impl", IMPLS)
-def test_payload_rides_through_every_tier(spark, impl):
+def test_payload_rides_through_every_tier(spark):
     """payload_col must attach each id's payload to both pair sides across
     all three tiers (SimHash's hamming filter depends on it)."""
     rows = []
@@ -69,7 +80,7 @@ def test_payload_rides_through_every_tier(spark, impl):
     df = spark.createDataFrame(rows, ["bucket_key", "file_id", "sig"])
 
     out = pairs_from_buckets(
-        df, bucket_cap=8, n_salt=4, star_cap=40, payload_col="sig", impl=impl
+        df, bucket_cap=8, n_salt=4, star_cap=40, payload_col="sig"
     ).collect()
 
     ids = {(r["a_id"], r["b_id"]) for r in out}
@@ -84,50 +95,25 @@ def test_payload_rides_through_every_tier(spark, impl):
         assert r["a_pl"] - r["a_id"] == r["b_pl"] - r["b_id"]
 
 
-def test_grouped_and_window_pair_sets_are_identical(spark):
-    """Property-style cross-check on a pseudo-random bucket layout."""
-    import random
-
+def test_random_layout_pair_set_matches_bruteforce(spark):
+    """Property-style cross-check on a pseudo-random bucket layout that
+    hits every tier, with duplicate (bucket, id) rows sprinkled in."""
     rng = random.Random(7)
     rows = []
     for b in range(40):
         size = rng.choice([1, 1, 2, 3, 5, 9, 20, 50])
         members = rng.sample(range(10_000), size)
         rows.extend((f"bk{b}", m) for m in members)
-    # duplicate rows sprinkled in
     rows.extend(rows[:17])
     df = spark.createDataFrame(rows, ["bucket_key", "file_id"])
 
-    kw = dict(bucket_cap=8, n_salt=4, star_cap=30)
-    got_g = {
+    got = [
         (r["a_id"], r["b_id"])
-        for r in pairs_from_buckets(df, impl="grouped", **kw).collect()
-    }
-    got_w = {
-        (r["a_id"], r["b_id"])
-        for r in pairs_from_buckets(df, impl="window", **kw).collect()
-    }
-    assert got_g == got_w
-    assert got_g  # non-vacuous
-
-
-def test_grouped_plan_has_no_window_and_no_join_for_small_buckets(spark):
-    """Plan-shape pin for the round-6 grouped enumeration: with every
-    bucket under ``bucket_cap`` the pair set must come from ONE hash
-    aggregation plus a pure projection — no Window sort, no self-join
-    anywhere in the physical plan (the mid/star tiers contribute empty
-    subtrees whose joins Spark still plans, so they are filtered out by
-    checking the executed plan of the small-only input BEFORE AQE prunes;
-    we assert on the analyzed physical plan string)."""
-    rows = [("b1", i) for i in range(5)] + [("b2", 10 + i) for i in range(3)]
-    df = spark.createDataFrame(rows, ["bucket_key", "file_id"])
-    out = pairs_from_buckets(df, bucket_cap=8, impl="grouped")
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in plan
-    # the whole enumeration is agg + projection: the only joins in the
-    # plan would be the (empty-at-runtime) mid/star tiers' salted joins
-    # hanging under the union — the small tier itself must not join.
-    small_only = out.where("a_id < 100")
-    assert small_only.count() == len(
-        [(a, b) for a in range(5) for b in range(5) if a < b]
-    ) + len([(a, b) for a in range(3) for b in range(3) if a < b])
+        for r in pairs_from_buckets(
+            df, bucket_cap=8, n_salt=4, star_cap=30
+        ).collect()
+    ]
+    assert len(got) == len(set(got))
+    expect = bruteforce_pairs(rows, star_cap=30)
+    assert set(got) == expect
+    assert expect  # non-vacuous

@@ -1,5 +1,7 @@
 """Unit tests for standalone operators: dedup, ANN, matcher, text, multimodal."""
 
+import os
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -19,6 +21,8 @@ from spaczz_spark.operators.dedup import (
 )
 from spaczz_spark.operators.matcher import Pattern, match_patterns, ruler
 from spaczz_spark.operators.multimodal import decode_images, with_media_metadata
+
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.fixture(scope="module")
@@ -524,7 +528,7 @@ def test_media_backend_validation_script_skips_cleanly():
 
     proc = subprocess.run(
         [_sys.executable, "scripts/validate_media_backends.py"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=240,
+        capture_output=True, text=True, cwd=REPO_ROOT, timeout=240,
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
     assert "SKIP" in proc.stderr or "validated" in proc.stdout
@@ -536,12 +540,11 @@ def test_cc_path_graph_converges_logarithmically(spark):
     must converge in O(log n) iterations with flat per-iteration walls,
     labeling every node with the component minimum."""
     import math
-    import os
     import sys as _sys
 
-    fix = "/root/repo/fixtures/cc_path/edges.parquet"
+    fix = os.path.join(REPO_ROOT, "fixtures", "cc_path", "edges.parquet")
     if not os.path.exists(fix):
-        _sys.path.insert(0, "/root/repo/scripts")
+        _sys.path.insert(0, os.path.join(REPO_ROOT, "scripts"))
         from make_fixtures import make_ccpath
 
         make_ccpath()

@@ -1,9 +1,13 @@
 """End-to-end pipeline tests: recall vs planted truth, sha invariant, resume."""
 
+import os
+
 import pytest
 
 from spaczz_spark.plans.config import DedupConfig
 from spaczz_spark.plans.pipeline import DedupPipeline
+
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.fixture(scope="module")
@@ -112,7 +116,7 @@ def test_empty_shingle_pairs_do_not_divide_by_zero(spark):
     from spaczz_spark.operators.dedup import minhash_neardup_pairs
     from spaczz_spark.operators.verify import verify_pairs
     from spaczz_spark.functions.signatures import (
-        normalize, with_shingles, with_signatures,
+        normalize, with_fused_signatures,
     )
 
     files = spark.createDataFrame(
@@ -126,7 +130,7 @@ def test_empty_shingle_pairs_do_not_divide_by_zero(spark):
             }
         )
     )
-    sigs = with_signatures(with_shingles(normalize(files), 3), 128, 42).select(
+    sigs = with_fused_signatures(normalize(files), 3, 128, 42).select(
         "file_id", "content_sha256", "content", "n_bytes",
         "shingles", "n_shingles", "minhash", "simhash",
     )
@@ -138,8 +142,10 @@ def test_empty_shingle_pairs_do_not_divide_by_zero(spark):
     # whitespace-only contents are similar enough for the InDel kernel
     assert all(r["verified_by"] in ("sha", "edit_ratio") for r in rows)
 
+    # docs 2 and 3 are byte-identical: the standalone operators have no
+    # sha short-circuit, so their empty shingle sets still score 0.0
     docs = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [1, 2], "text": ["   \n", " \t "]})
+        pd.DataFrame({"doc_id": [1, 2, 3], "text": ["   \n", " \t ", " \t "]})
     )
     out = minhash_neardup_pairs(docs, k=3, threshold=0.5)
     assert out.count() == 0  # no shared shingle -> not a Jaccard duplicate
@@ -172,7 +178,7 @@ def test_iceberg_validation_script_skips_cleanly(spark):
         [_sys.executable, "scripts/validate_iceberg.py"],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO_ROOT,
         timeout=240,
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
@@ -180,16 +186,14 @@ def test_iceberg_validation_script_skips_cleanly(spark):
 
 
 def test_fused_shingle_fingerprint_parity(spark):
-    """Round-3: the fused single-pass (shingles, fingerprints) UDF must
-    equal the two separate UDFs bit-for-bit, including the min_bytes
-    empty-fingerprint semantics for short docs."""
+    """The fused single-pass (shingles, fingerprints) UDF must equal the
+    shingle-only run and per-row winnowing done separately, bit-for-bit,
+    including the min_bytes empty-fingerprint semantics for short docs."""
     from spaczz_spark.functions.signatures import (
         normalize,
-        with_shingles,
-        with_shingles_and_fingerprints,
+        with_fused_signatures,
     )
-    from spaczz_spark.operators.substring import make_fingerprint_udf
-    from pyspark.sql import functions as F
+    from spaczz_spark.operators.substring import winnow_fingerprints
 
     rows = [
         ("r", f"f{i}.py", "c", ("def f%d():\n    return query_big_table(%d)\n" % (i, i)) * (i + 1), "py")
@@ -200,20 +204,23 @@ def test_fused_shingle_fingerprint_parity(spark):
     )
     fused = {
         r["file_id"]: r
-        for r in with_shingles_and_fingerprints(files, 3, 32, 32, 100).collect()
+        for r in with_fused_signatures(files, 3, 128, 42, 32, 32, 100).collect()
     }
-    sep_sh = {r["file_id"]: r for r in with_shingles(files, 3).collect()}
-    fp_udf = make_fingerprint_udf(32, 32)
-    sep_fp = {
-        r["file_id"]: list(r["fp"])
-        for r in files.where(F.col("n_bytes") >= 100)
-        .select("file_id", fp_udf("content").alias("fp"))
-        .collect()
+    sep_sh = {
+        r["file_id"]: r for r in with_fused_signatures(files, 3, 128, 42).collect()
     }
+    assert len(fused) == len(rows)
+    n_gated = 0
     for fid, r in fused.items():
         assert list(r["shingles"]) == list(sep_sh[fid]["shingles"]), fid
         assert r["n_shingles"] == sep_sh[fid]["n_shingles"]
-        assert list(r["fingerprints"]) == sep_fp.get(fid, []), fid
+        if r["n_bytes"] >= 100:
+            want = list(winnow_fingerprints(r["content"], 32, 32))
+        else:
+            want = []
+            n_gated += 1
+        assert list(r["fingerprints"]) == want, fid
+    assert 0 < n_gated < len(rows)  # both sides of the byte gate exercised
 
 
 def test_inplace_rewrite_invalidates_resume(spark, tmp_path_factory):
@@ -256,16 +263,17 @@ def test_inplace_rewrite_invalidates_resume(spark, tmp_path_factory):
 
 
 def test_substring_candidates_fingerprint_metadata_guard(spark):
-    """Round-4 advice: the precomputed-fingerprints fast path must verify
-    the winnowing parameters stamped in the column metadata (mismatch ->
-    ValueError) and warn when the column carries no provenance at all."""
+    """Round-4 advice: substring_candidates must verify the winnowing
+    parameters stamped in the precomputed column's metadata (mismatch ->
+    ValueError), warn when the column carries no provenance at all, and
+    refuse a corpus without the column."""
     import warnings
 
     import pyspark.sql.functions as F
 
     from spaczz_spark.functions.signatures import (
         normalize,
-        with_shingles_and_fingerprints,
+        with_fused_signatures,
     )
     from spaczz_spark.operators.substring import substring_candidates
 
@@ -273,15 +281,19 @@ def test_substring_candidates_fingerprint_metadata_guard(spark):
         [("r", "p", "c", "py", "token stream " * 20)],
         ["repo", "path", "commit", "lang", "content"],
     )
-    sig = with_shingles_and_fingerprints(normalize(files), 3, 32, 32, 100)
+    sig = with_fused_signatures(normalize(files), 3, 128, 42, 32, 32, 100)
     assert sig.schema["fingerprints"].metadata == {
         "fp_k": 32, "fp_w": 32, "fp_min_bytes": 100,
     }
-    # matching params: fast path accepted silently
+    # matching params: accepted silently
     substring_candidates(sig, k=32, w=32, min_bytes=100)
     # mismatched params: hard failure instead of silently-wrong candidates
     with pytest.raises(ValueError, match="winnowed with"):
         substring_candidates(sig, k=16, w=32, min_bytes=100)
+    # no fingerprints column at all: no fallback pass, the error names the
+    # call that builds it
+    with pytest.raises(ValueError, match=r"with_fused_signatures\(fp_k="):
+        substring_candidates(sig.drop("fingerprints"))
     # metadata survives a parquet checkpoint round-trip
     import tempfile
 
@@ -364,3 +376,4 @@ def test_star_tier_keeps_mega_bucket_linear(spark):
     labels, _ = connected_components(pairs)
     assert labels.select("component_id").distinct().count() == 1
     assert labels.count() == n
+

@@ -295,17 +295,15 @@ def test_positions_fast_path_matches_rehash_fallback(spark, verify_fixture):
     agree on the aligned window; both paths pick the true offset)."""
     from pyspark.sql import functions as F
 
-    from spaczz_spark.functions.signatures import (
-        with_shingles_and_fingerprints,
-    )
+    from spaczz_spark.functions.signatures import with_fused_signatures
     from spaczz_spark.operators.substring import verify_substring_pairs
 
     corpus, pairs = verify_fixture
-    enriched = with_shingles_and_fingerprints(
+    enriched = with_fused_signatures(
         corpus.withColumn(
             "n_bytes", F.octet_length("content")
         ),
-        3, 32, 32, 100,
+        3, 128, 42, 32, 32, 100,
     ).select("file_id", "content", "n_bytes", "fingerprints", "fp_positions")
     fast = {
         r["b_id"]: r
@@ -390,7 +388,7 @@ def test_screen_passes_verbatim_with_repeated_material(spark):
     screen vetoed the pair so phase B's exact `in` check never ran."""
     from pyspark.sql import functions as F
 
-    from spaczz_spark.functions.signatures import with_shingles_and_fingerprints
+    from spaczz_spark.functions.signatures import with_fused_signatures
     from spaczz_spark.operators.substring import (
         anchor_votes,
         verify_substring_pairs,
@@ -421,9 +419,10 @@ def test_screen_passes_verbatim_with_repeated_material(spark):
     assert ok, "screen vetoed a true verbatim containment (repeated material)"
 
     # end-to-end: the two-phase production path must verify it as containment
-    corpus = with_shingles_and_fingerprints(
+    corpus = with_fused_signatures(
         spark.createDataFrame([(1, short), (2, host)], ["file_id", "content"])
-        .withColumn("n_bytes", F.octet_length("content"))
+        .withColumn("n_bytes", F.octet_length("content")),
+        fp_k=32, fp_w=32, fp_min_bytes=100,
     )
     pairs = spark.createDataFrame([(1, 2, "substring")], ["a_id", "b_id", "stage"])
     out = verify_substring_pairs(
@@ -501,7 +500,7 @@ def test_partial_corpus_production_path_matches_formula(spark):
     precision, and scores in one shot)."""
     from pyspark.sql import functions as F
 
-    from spaczz_spark.functions.signatures import with_shingles_and_fingerprints
+    from spaczz_spark.functions.signatures import with_fused_signatures
     from spaczz_spark.operators.substring import (
         substring_candidates,
         verify_substring_pairs,
@@ -514,12 +513,13 @@ def test_partial_corpus_production_path_matches_formula(spark):
     f = spark.createDataFrame(files).withColumn(
         "file_key", F.concat_ws("\x1f", "repo", "path", "commit")
     )
-    corpus = with_shingles_and_fingerprints(
+    corpus = with_fused_signatures(
         f.select(
             F.col("file_key").alias("file_id"),
             "content",
             F.octet_length("content").alias("n_bytes"),
-        )
+        ),
+        fp_k=32, fp_w=32, fp_min_bytes=100,
     )
     out = verify_substring_pairs(
         substring_candidates(corpus), corpus, min_len=100, min_partial=75
