@@ -135,14 +135,10 @@ def cosine_neardup_pairs(
 # Corpora whose optimizer-estimated size is below this broadcast their
 # grouped inverted index (bucket_key -> member array) in the top-k
 # candidate stage instead of shuffle-joining exploded bucket rows — see
-# lsh_cosine_topk. Parameterized (bytes) so clusters can tune it; the
-# default mirrors the order of magnitude of Spark's own broadcast
-# threshold reasoning (the index is ~n_tables longs per corpus row).
-import os as _os
-
-ANN_BROADCAST_INDEX_BYTES = int(
-    _os.environ.get("SPARK_GRAFT_ANN_BROADCAST_BYTES", str(32 << 20))
-)
+# lsh_cosine_topk. The value (bytes) mirrors the order of magnitude of
+# Spark's own broadcast threshold reasoning (the index is ~n_tables longs
+# per corpus row).
+ANN_BROADCAST_INDEX_BYTES = 32 << 20
 
 
 def _plan_size_bytes(df: DataFrame) -> int:

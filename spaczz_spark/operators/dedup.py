@@ -227,7 +227,11 @@ def minhash_neardup_pairs(
 
     Contract: identical output to :func:`ngram_jaccard_pairs` at the same
     (k, threshold) — LSH only prunes the candidate space; with (64, 2)
-    banding the miss probability at Jaccard 0.6 is (1 - 0.36)^64 < 4e-13.
+    banding the miss probability at Jaccard 0.6 is (1 - 0.36)^64 < 4e-13 —
+    except for token-free documents: :func:`ngram_jaccard_pairs` (and its
+    DuckDB oracle) gives each one a single empty-string shingle, so two
+    token-free docs pair with Jaccard 1.0, while here their shingle sets
+    are empty and score 0.0, so they never pair (see ``_verify_jaccard``).
 
     Caveat: buckets larger than ``star_cap`` degrade to linear star
     expansion (pair-level output is then a subset; the transitive clusters

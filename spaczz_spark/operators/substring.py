@@ -18,7 +18,8 @@ cover it with **winnowed k-gram fingerprints** (Schleimer et al., MOSS):
   flight — then, for the surviving pairs only, a content join feeding an
   Arrow-batched UDF that does the exact containment check plus
   ``partial_ratio`` of the shorter side against the top-voted aligned
-  windows.
+  windows. Verbatim-only verify (``min_partial=None``) skips the screen
+  and runs the same UDF with no anchor windows.
 
 Output pairs carry stage='substring' and the partial ratio as edit_ratio.
 """
@@ -29,7 +30,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType
+from pyspark.sql.types import ArrayType, IntegerType, LongType
 
 from ..functions.layout import ensure_min_partitions
 from ..ratios import indel_ratio as _indel_ratio
@@ -39,7 +40,6 @@ from .verify import CHAR_KERNEL_MAX, attach_pair_sides
 __all__ = [
     "substring_candidates",
     "verify_substring_pairs",
-    "anchored_partial_ratio",
     "partial_ratio_from_positions",
     "winnow_fingerprints_pos",
 ]
@@ -109,7 +109,7 @@ def _kgram_hashes(data: bytes, k: int) -> np.ndarray:
     is the modulus). Replaces the previous ``sliding_window_view`` matrix
     product, which was O(len*k) — a 32x op-count reduction at k=32 that
     shows up directly in the signatures stage (every document is hashed
-    once per run) and in any per-pair rehash fallback.
+    once per run).
     """
     arr = np.frombuffer(data, dtype=np.uint8)
     if len(arr) < k:
@@ -372,84 +372,6 @@ def containment_pairs(
     )
 
 
-def anchored_partial_ratio(
-    short: str,
-    long_: str,
-    *,
-    k: int = 32,
-    max_anchors: int = 5,
-    score_cutoff: float = 0,
-) -> float:
-    """``partial_ratio`` of ``short`` vs ``long_`` restricted to
-    fingerprint-anchored windows — O(window), never the O(n·m) full sweep.
-
-    Reference semantics: ``fuzz.partial_ratio`` (best InDel ratio of the
-    shorter string against any same-length window of the longer; reference
-    ``registry/fuzzyfuncs.py:9``). The full sweep evaluates every window;
-    at corpus scale the candidates that reach this kernel already share a
-    winnowed k-gram fingerprint (``substring_candidates``), i.e. an *exact*
-    32-byte synchronization point between the two documents — so only the
-    window(s) implied by shared-gram positions can hold the best local
-    alignment of an embedded copy, and those are the only ones scored:
-
-    1. recompute the rolling k-gram hashes of both sides (vectorized
-       numpy, O(bytes) — required anyway to locate any carried anchor's
-       offset, which is why the candidate stage does NOT need to plumb the
-       matching fingerprint value through the pair table: recomputing here
-       finds *every* shared gram, strictly more alignment evidence than
-       one carried anchor);
-    2. every matched gram occurrence votes for window start
-       ``pos_long - pos_short``; the true embedding offset collects the
-       overwhelming majority of votes (all intact grams between edits),
-       with nearby starts from indel drift splitting the remainder;
-    3. score the ``max_anchors`` most-voted starts with the bit-parallel
-       InDel kernel over the byte window ``long[start : start+len(short)]``
-       (above ``CHAR_KERNEL_MAX`` bytes: token-level InDel on the same
-       window — the same documented bounded-cost fallback as
-       ``verify.make_edit_ratio_udf``).
-
-    A prefix with net indel drift ``d`` shifts the optimal window by ``d``,
-    which costs the anchored score at most ``200·d / (2·len(short))`` ratio
-    points vs the unrestricted sweep — negligible for the light-edit
-    embeddings this stage exists to catch (the planted-fixture recall gate
-    in tests/test_substring.py pins it empirically).
-
-    Scoring is over UTF-8 bytes (the hashes are byte k-grams, so byte
-    offsets are the only consistent window coordinates); for non-ASCII
-    content the normalization therefore counts bytes, not codepoints — a
-    documented, deterministic choice.
-    """
-    sb = short if isinstance(short, bytes) else short.encode("utf-8", "ignore")
-    lb = long_ if isinstance(long_, bytes) else long_.encode("utf-8", "ignore")
-    if len(sb) > len(lb):
-        sb, lb = lb, sb
-    n = len(sb)
-    if n == 0:
-        return 0.0
-    hs = _kgram_hashes(sb, k)
-    hl = _kgram_hashes(lb, k)
-    uh, ui = np.unique(hs, return_index=True)  # first occurrence per gram
-    pl = np.nonzero(np.isin(hl, uh))[0]
-    if pl.size == 0:
-        return 0.0
-    j = np.searchsorted(uh, hl[pl])
-    starts = np.clip(pl - ui[j], 0, max(len(lb) - n, 0))
-    vals, counts = np.unique(starts, return_counts=True)
-    top = vals[np.argsort(-counts, kind="stable")[:max_anchors]]
-    best = 0.0
-    for s in top:
-        win = lb[int(s) : int(s) + n]
-        if n > CHAR_KERNEL_MAX:
-            sc = _indel_ratio(sb.split(), win.split())
-        else:
-            sc = _indel_ratio(sb, win)
-        if sc > best:
-            best = sc
-            if best >= 100.0:
-                break
-    return best if best >= score_cutoff else 0.0
-
-
 def anchor_votes(
     n_short: int,
     n_long: int,
@@ -531,6 +453,29 @@ def anchor_votes(
     return True, starts
 
 
+def _window_ratio(sb: bytes, lb: bytes, starts) -> float:
+    """Best InDel ratio of ``sb`` against the windows ``lb[s : s+len(sb)]``
+    for ``s`` in ``starts`` (0.0 when ``starts`` is empty).
+
+    Above ``CHAR_KERNEL_MAX`` bytes a window is scored token-level — the
+    same documented bounded-cost fallback as ``verify.make_edit_ratio_udf``.
+    Stops at the first window scoring 100.
+    """
+    n = len(sb)
+    best = 0.0
+    for s in starts:
+        win = lb[int(s) : int(s) + n]
+        if n > CHAR_KERNEL_MAX:
+            sc = _indel_ratio(sb.split(), win.split())
+        else:
+            sc = _indel_ratio(sb, win)
+        if sc > best:
+            best = sc
+            if best >= 100.0:
+                break
+    return best
+
+
 def partial_ratio_from_positions(
     sb: bytes,
     lb: bytes,
@@ -543,20 +488,23 @@ def partial_ratio_from_positions(
     min_partial: int = 75,
     max_anchors: int = 3,
 ) -> float:
-    """Anchored ``partial_ratio`` from two documents' precomputed winnowed
-    fingerprint (value, byte-offset) arrays — NO content rehash.
+    """``partial_ratio`` of the shorter ``sb`` inside ``lb`` restricted to
+    fingerprint-anchored windows — O(window), never the O(n·m) full sweep.
 
-    Same semantics as :func:`anchored_partial_ratio` (score the
-    vote-implied alignment windows with the InDel kernel), but the anchor
-    votes come from the fingerprint arrays the signatures stage already
-    computed once per document, so the per-pair cost is an
-    O(|fps|) intersect + at most ``max_anchors`` O(window) kernels instead
-    of an O(bytes*k) rehash of both sides. Differences vs the rehash path:
+    Reference semantics: ``fuzz.partial_ratio`` (best InDel ratio of the
+    shorter string against any same-length window of the longer; reference
+    ``registry/fuzzyfuncs.py:9``). Candidates reaching this kernel share a
+    winnowed k-gram fingerprint, i.e. an exact 32-byte synchronization
+    point, so only the windows implied by shared-gram positions can hold
+    the best local alignment of an embedded copy, and only those are
+    scored. The anchor votes come from the two documents' precomputed
+    winnowed fingerprint (value, byte-offset) arrays — no content rehash:
 
-    - votes are cast by *winnowed* shared grams (~2/w of all positions)
-      instead of every shared gram — sparser but equally anchored: within
-      an intact shared run both documents select the same window-minimum
-      grams (the MOSS guarantee), and each match votes the exact offset;
+    - every shared winnowed gram votes for window start
+      ``pos_long - pos_short``; within an intact shared run both documents
+      select the same window-minimum grams (the MOSS guarantee), so the
+      true embedding offset collects most votes, with nearby starts from
+      indel drift splitting the rest;
     - a **coverage screen** skips the InDel kernel when the matched grams
       near the top-voted offset cannot plausibly support ``min_partial``:
       consecutive winnowed selections inside an intact run are <= w grams
@@ -572,7 +520,19 @@ def partial_ratio_from_positions(
       bypassed entirely for shorts <= 512 bytes, where the kernel is
       cheaper than any risk of a sparse-gram recall edge.  The planted
       embedded-with-edits fixtures gate its recall in
-      tests/test_substring.py.
+      tests/test_substring.py;
+    - the ``max_anchors`` top-voted starts are scored with
+      :func:`_window_ratio`.
+
+    A prefix with net indel drift ``d`` shifts the optimal window by ``d``,
+    which costs the anchored score at most ``200·d / (2·len(short))`` ratio
+    points vs the unrestricted sweep — negligible for the light-edit
+    embeddings this stage exists to catch.
+
+    Scoring is over UTF-8 bytes (the hashes are byte k-grams, so byte
+    offsets are the only consistent window coordinates); for non-ASCII
+    content the normalization therefore counts bytes, not codepoints — a
+    documented, deterministic choice.
     """
     passes, starts = anchor_votes(
         len(sb), len(lb), fp_s, pos_s, fp_l, pos_l,
@@ -580,92 +540,58 @@ def partial_ratio_from_positions(
     )
     if not passes:
         return 0.0
-    n = len(sb)
-    best = 0.0
-    for s in starts:
-        win = lb[s : s + n]
-        if n > CHAR_KERNEL_MAX:
-            sc = _indel_ratio(sb.split(), win.split())
-        else:
-            sc = _indel_ratio(sb, win)
-        if sc > best:
-            best = sc
-            if best >= 100.0:
-                break
-    return best
+    return _window_ratio(sb, lb, starts)
 
 
-def make_containment_udf(
-    min_len: int = 100, min_partial: int | None = None, k: int = 32
-):
-    """pandas UDF: partial containment score of the shorter side in the longer.
+def containment_score(
+    a: str | None,
+    b: str | None,
+    starts,
+    *,
+    min_len: int = 100,
+    min_partial: int | None = None,
+) -> tuple[int, bool]:
+    """Per-pair body of the containment UDF: ``(score, verbatim)``.
 
-    Returns ``struct<score int, verbatim boolean>``:
-
-    - ``(100, true)`` when the shorter content appears verbatim in the
-      longer (exact containment fast path, Boyer-Moore ``in``);
-    - with ``min_partial`` set, edited near-containment is scored with
-      :func:`anchored_partial_ratio` (the reference's ``partial_ratio``
-      semantics, fingerprint-anchored so the alignment is O(window)) —
-      ``(round(score), false)`` when it reaches ``min_partial``;
-    - ``(0, false)`` otherwise (candidates that merely share one
-      fingerprint but hold no real containment, or pairs below
-      ``min_len``).
+    - ``(100, True)`` when the byte-shorter side appears verbatim in the
+      other (exact containment fast path, Boyer-Moore ``in``);
+    - otherwise ``(round(best), False)``, ``best`` being the
+      :func:`_window_ratio` of the shorter side over the anchor windows
+      ``starts`` (byte offsets inside the longer side, from
+      :func:`anchor_votes`), or 0 when it is below ``min_partial - 1``.
+      With no anchors (verbatim-only verify) that is always 0;
+    - ``(0, False)`` for a missing side or a shorter side below
+      ``min_len`` bytes.
 
     ``min_len`` and the short/long orientation are measured in **UTF-8
-    bytes** — the same unit as the anchored two-phase path (whose window
-    coordinates are byte offsets) — so the fast path and this fallback
-    agree near the threshold and on mixed-script pairs (round-5 ADVICE:
-    the previous character-based orientation could pick the opposite
-    "shorter" side for non-ASCII content). Byte containment equals string
-    containment for valid UTF-8 (self-synchronizing encoding).
+    bytes**, the unit of the anchor offsets. Byte containment equals string
+    containment for valid UTF-8 (self-synchronizing: a byte-aligned match
+    of a sequence starting with a lead byte is a char-boundary match).
     """
-
-    @F.pandas_udf("score int, verbatim boolean")
-    def containment(a: pd.Series, b: pd.Series) -> pd.DataFrame:
-        scores: list[int] = []
-        verbatim: list[bool] = []
-        for s1, s2 in zip(a, b):
-            if s1 is None or s2 is None:
-                scores.append(0)
-                verbatim.append(False)
-                continue
-            b1 = s1.encode("utf-8", "ignore")
-            b2 = s2.encode("utf-8", "ignore")
-            short, long_ = (b1, b2) if len(b1) <= len(b2) else (b2, b1)
-            if len(short) < min_len:
-                scores.append(0)
-                verbatim.append(False)
-            elif short in long_:
-                scores.append(100)
-                verbatim.append(True)
-            elif min_partial is not None:
-                # rapidfuzz cutoff semantics at min_partial - 1: a raw
-                # (min_partial - 0.5) rounds UP to min_partial, so cutting
-                # at min_partial would wrongly zero it (same guard as the
-                # InDel kernel's min_r2 - 1 cutoff in verify_pairs)
-                sc = anchored_partial_ratio(
-                    short, long_, k=k, score_cutoff=max(min_partial - 1, 0)
-                )
-                scores.append(round(sc))
-                verbatim.append(False)
-            else:
-                scores.append(0)
-                verbatim.append(False)
-        return pd.DataFrame({"score": scores, "verbatim": verbatim}).astype(
-            {"score": "int32", "verbatim": "bool"}
-        )
-
-    # single ArrowEvalPython per pair: without the marker the filter + the
-    # two projections below would each clone the kernel expression
-    return containment.asNondeterministic()
+    if a is None or b is None:
+        return 0, False
+    sb = a.encode("utf-8", "ignore")
+    lb = b.encode("utf-8", "ignore")
+    if len(sb) > len(lb):
+        sb, lb = lb, sb
+    if len(sb) < min_len:
+        return 0, False
+    if sb in lb:
+        return 100, True
+    best = _window_ratio(sb, lb, starts if starts is not None else ())
+    # rapidfuzz cutoff semantics at min_partial - 1: a raw
+    # (min_partial - 0.5) rounds UP to min_partial, so cutting at
+    # min_partial would wrongly zero it (same guard as the InDel kernel's
+    # min_r2 - 1 cutoff in verify_pairs)
+    cutoff = 0 if min_partial is None else max(min_partial - 1, 0)
+    return (round(best) if best >= cutoff else 0), False
 
 
 def make_anchor_screen_udf(
     min_len: int = 100, min_partial: int = 75, k: int = 32,
     max_anchors: int = 3,
 ):
-    """Phase-A pandas UDF: (n_bytes, fingerprints, fp_positions) x 2 sides
+    """Screen pandas UDF: (n_bytes, fingerprints, fp_positions) x 2 sides
     -> ``struct<passes boolean, anchors array<int>>`` — NO content input.
 
     Runs :func:`anchor_votes` on the slim fingerprint arrays so the verify
@@ -685,7 +611,7 @@ def make_anchor_screen_udf(
     (first-occurrence positions then vote wrong offsets), the per-anchor
     coverage collapses but the position-free total-match coverage stays
     near-complete, and :func:`anchor_votes`' misanchor escape hatch passes
-    the pair through to phase B's exact containment check. Shorts
+    the pair through to the exact containment check. Shorts
     <= 512 bytes bypass the screen entirely. Both pathological cases
     (scattered repeated material; boilerplate prefix out-voting the true
     offset) are pinned by tests in tests/test_substring.py.
@@ -722,63 +648,28 @@ def make_anchor_screen_udf(
 
 
 def make_windowed_containment_udf(
-    min_len: int = 100, min_partial: int = 75
+    min_len: int = 100, min_partial: int | None = None
 ):
-    """Phase-B pandas UDF: (content_a, content_b, anchors) -> score struct.
-
-    Runs only on pairs phase A passed: exact containment fast path, then
-    the InDel kernel over the carried anchor windows (byte offsets of the
-    byte-shorter side inside the longer — the same orientation phase A
-    used). Same output contract and rounding guard as
-    :func:`make_containment_udf`.
+    """pandas UDF: (content_a, content_b, anchors) -> ``struct<score int,
+    verbatim boolean>``, a map of :func:`containment_score` over the rows.
     """
-    cutoff = max(min_partial - 1, 0)
 
     @F.pandas_udf("score int, verbatim boolean")
     def containment(
         a: pd.Series, b: pd.Series, anchors: pd.Series
     ) -> pd.DataFrame:
-        scores: list[int] = []
-        verbatim: list[bool] = []
-        for s1, s2, starts in zip(a, b, anchors):
-            if s1 is None or s2 is None:
-                scores.append(0)
-                verbatim.append(False)
-                continue
-            sb = s1.encode("utf-8", "ignore")
-            lb = s2.encode("utf-8", "ignore")
-            if len(sb) > len(lb):
-                sb, lb = lb, sb
-            n = len(sb)
-            if n < min_len:
-                scores.append(0)
-                verbatim.append(False)
-            elif sb in lb:
-                # bytes containment == string containment for valid UTF-8
-                # (self-synchronizing: a byte-aligned match of a sequence
-                # starting with a lead byte is a char-boundary match)
-                scores.append(100)
-                verbatim.append(True)
-            else:
-                best = 0.0
-                for s in starts if starts is not None else []:
-                    win = lb[int(s) : int(s) + n]
-                    if n > CHAR_KERNEL_MAX:
-                        sc = _indel_ratio(sb.split(), win.split())
-                    else:
-                        sc = _indel_ratio(sb, win)
-                    if sc > best:
-                        best = sc
-                        if best >= 100.0:
-                            break
-                # same rounding guard as the 2-column UDF: a raw
-                # (min_partial - 0.5) rounds UP to min_partial
-                scores.append(round(best) if best >= cutoff else 0)
-                verbatim.append(False)
-        return pd.DataFrame({"score": scores, "verbatim": verbatim}).astype(
+        rows = [
+            containment_score(
+                s1, s2, starts, min_len=min_len, min_partial=min_partial
+            )
+            for s1, s2, starts in zip(a, b, anchors)
+        ]
+        return pd.DataFrame(rows, columns=["score", "verbatim"]).astype(
             {"score": "int32", "verbatim": "bool"}
         )
 
+    # single ArrowEvalPython per pair: without the marker the filter + the
+    # two projections below would each clone the kernel expression
     return containment.asNondeterministic()
 
 
@@ -804,42 +695,59 @@ def verify_substring_pairs(
 
     Schema-aligned with verify.verify_pairs output.
 
-    When ``min_partial`` is set and the corpus carries the signatures
-    stage's ``fingerprints``/``fp_positions``/``n_bytes`` columns, the
-    verify runs **two-phase** (mirroring ``verify.verify_pairs``'s
-    slim/kernel split): phase A joins only the slim fingerprint arrays and
-    screens with :func:`anchor_votes` — ~85% of candidates on the scale2
-    corpus are shared-boilerplate pairs rejected here — and only the
-    survivors join ``content`` for the exact containment check + anchored
-    InDel windows (phase B). The multi-KB text of rejected pairs never
-    crosses the exchange or the Arrow channel. Without the precomputed
-    columns, the single-pass ``anchored_partial_ratio`` rehash fallback
-    preserves the same semantics for hand-built corpora.
+    One plan for both modes (mirroring ``verify.verify_pairs``'s
+    slim/kernel split):
+
+    - with ``min_partial`` set, the corpus must carry the signatures
+      stage's ``fingerprints``/``fp_positions``/``n_bytes`` columns. Only
+      those slim arrays are joined first and screened with
+      :func:`anchor_votes` — ~85% of candidates on the scale2 corpus are
+      shared-boilerplate pairs rejected here — so the multi-KB text of
+      rejected pairs never crosses the exchange or the Arrow channel;
+    - with ``min_partial=None`` there is no screen and every pair carries
+      an empty anchor list; fingerprints are not needed;
+    - the (surviving) pairs then join ``content`` once and run
+      :func:`make_windowed_containment_udf`: the exact containment check,
+      plus the InDel kernel over the anchor windows.
+
+    ``content_df``: optional separate (file_id, content) source for the
+    content join — the pipeline passes its ``normalized`` table so the
+    signatures checkpoint need not carry a second copy of the text.
     """
-    use_anchors = (
-        min_partial is not None
-        and "fingerprints" in corpus.columns
-        and "fp_positions" in corpus.columns
-        and "n_bytes" in corpus.columns
-    )
     threshold = 100 if min_partial is None else min(min_partial, 100)
-    # ``content_df``: optional separate (file_id, content) source for the
-    # phase-B join — the pipeline passes its ``normalized`` table so the
-    # signatures checkpoint need not carry a second copy of the text
-    texts = content_df if content_df is not None else corpus
-    if use_anchors:
-        passed = screen_substring_pairs(
-            pairs, corpus, min_len=min_len, min_partial=min_partial, k=k
+    if min_partial is None:
+        anchored = pairs.withColumn(
+            "anchors", F.array().cast(ArrayType(IntegerType()))
         )
-        joined = attach_pair_sides(passed, texts, ["content"])
-        udf = make_windowed_containment_udf(min_len, min_partial)
-        scored = udf("a_content", "b_content", "anchors")
     else:
-        joined = attach_pair_sides(pairs, texts, ["content"])
-        udf = make_containment_udf(min_len, min_partial, k)
-        scored = udf("a_content", "b_content")
+        slim_cols = ["n_bytes", "fingerprints", "fp_positions"]
+        missing = [c for c in slim_cols if c not in corpus.columns]
+        if missing:
+            raise ValueError(
+                f"verify_substring_pairs(min_partial={min_partial}) needs "
+                f"the precomputed {missing} column(s); build the corpus "
+                f"with with_fused_signatures(fp_k={k}, fp_w=..., "
+                "fp_min_bytes=...) and octet_length(content) as n_bytes"
+            )
+        screen = make_anchor_screen_udf(min_len, min_partial, k)
+        anchored = (
+            attach_pair_sides(pairs, corpus, slim_cols)
+            .withColumn(
+                "s",
+                screen(
+                    "a_n_bytes", "b_n_bytes",
+                    "a_fingerprints", "a_fp_positions",
+                    "b_fingerprints", "b_fp_positions",
+                ),
+            )
+            .where(F.col("s.passes"))
+            .select("a_id", "b_id", "stage", F.col("s.anchors").alias("anchors"))
+        )
+    texts = content_df if content_df is not None else corpus
+    joined = attach_pair_sides(anchored, texts, ["content"])
+    udf = make_windowed_containment_udf(min_len, min_partial)
     return (
-        joined.withColumn("r", scored)
+        joined.withColumn("r", udf("a_content", "b_content", "anchors"))
         .where(F.col("r.score") >= threshold)
         .select(
             "a_id",
@@ -851,37 +759,4 @@ def verify_substring_pairs(
             .otherwise(F.lit("partial"))
             .alias("verified_by"),
         )
-    )
-
-
-def screen_substring_pairs(
-    pairs: DataFrame,
-    corpus: DataFrame,
-    *,
-    min_len: int = 100,
-    min_partial: int = 75,
-    k: int = 32,
-    max_anchors: int = 3,
-) -> DataFrame:
-    """Phase A of the two-phase substring verify, factored so
-    ``scripts/profile_verify.py`` times the exact production sub-plan
-    (ADVICE r4 discipline): slim (n_bytes, fingerprints, fp_positions)
-    joins + the anchor-vote/coverage screen. Returns
-    (a_id, b_id, stage, anchors) for the surviving pairs only.
-    """
-    slim = attach_pair_sides(
-        pairs, corpus, ["n_bytes", "fingerprints", "fp_positions"]
-    )
-    screen = make_anchor_screen_udf(min_len, min_partial, k, max_anchors)
-    return (
-        slim.withColumn(
-            "s",
-            screen(
-                "a_n_bytes", "b_n_bytes",
-                "a_fingerprints", "a_fp_positions",
-                "b_fingerprints", "b_fp_positions",
-            ),
-        )
-        .where(F.col("s.passes"))
-        .select("a_id", "b_id", "stage", F.col("s.anchors").alias("anchors"))
     )

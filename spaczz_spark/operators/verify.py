@@ -229,9 +229,8 @@ def score_pairs_slim(
     """Slim phase: sha + Jaccard scoring with no ``content`` in flight.
 
     Returns the localCheckpointed (a_id, b_id, stage, jaccard, sha_eq,
-    kernel_band) table both downstream passes consume. Factored out of
-    :func:`verify_pairs` so ``scripts/profile_verify.py`` times the exact
-    production plan instead of an inline re-implementation (ADVICE r4).
+    kernel_band) table both downstream passes of :func:`verify_pairs`
+    consume.
     """
     slim = attach_pair_sides(
         pairs, corpus, ["content_sha256", "n_shingles", "shingles"]

@@ -513,7 +513,10 @@ def q_files_components(spark, sf_dir):
     that path is non-SQL-expressible and is checked by the pytest recall
     gate instead — this query pins the SQL-expressible subset end-to-end.)
     """
-    f = _files(spark, sf_dir).cache()
+    # lazy local checkpoint, not .cache(): a cached plan stays registered
+    # in the session's cache manager, so a later build of this query would
+    # read the previous build's blocks
+    f = _files(spark, sf_dir).localCheckpoint(eager=False)
     w = Window.partitionBy(F.sha2("content", 256))
     exact_e = (
         f.withColumn("m", F.min("file_key").over(w))

@@ -365,6 +365,18 @@ def test_containment_pairs_winnowed_recall(spark):
         )
 
 
+def test_files_components_query_leaves_no_cache(spark):
+    """Building q_files_components must not register a cached plan: a
+    second build of the same query reads its input fresh, not the first
+    build's cached blocks (no InMemoryTableScan in its physical plan)."""
+    from spaczz_spark.queries import q_files_components
+
+    q_files_components(spark, "sf0.001").count()
+    second = q_files_components(spark, "sf0.001")
+    plan = second._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryTableScan" not in plan, plan
+
+
 def test_ivf_cosine_topk_recall(spark):
     """IVF top-k: recall >= 0.9 of the exact top-k with generous probing,
     exact cosines on everything emitted, deterministic given the seed."""

@@ -6,20 +6,31 @@ pasted into a larger host and then lightly edited still gets credit. The
 engine's substring stage used to verify verbatim containment only; these
 tests pin the fingerprint-anchored partial scoring that closes that gap:
 
-- kernel: ``anchored_partial_ratio`` equals the unrestricted O(n*m)
-  ``partial_ratio`` sweep on light-edit embeddings (and is O(window));
+- kernel: ``partial_ratio_from_positions`` (anchor votes from the winnowed
+  fingerprint arrays, then the InDel kernel over the voted windows) equals
+  the unrestricted O(n*m) ``partial_ratio`` sweep on light-edit embeddings;
+  ``containment_score`` (the containment UDF's per-row body) applies the
+  ``min_partial - 1`` rounding guard;
 - operator: ``verify_substring_pairs(min_partial=...)`` labels verbatim
-  pairs ``containment`` and edited embeddings ``partial``;
+  pairs ``containment`` and edited embeddings ``partial``, and refuses a
+  corpus without the fingerprint columns; ``min_partial=None`` verifies
+  verbatim containment only and needs no fingerprints;
 - pipeline: planted embedded-with-edits duplicates (not recallable by
   verbatim containment NOR by Jaccard — the host dilutes the shingle set)
   are recovered with recall >= 0.99.
 """
 
+import math
 import random
 
 import pytest
 
-from spaczz_spark.operators.substring import anchored_partial_ratio
+from spaczz_spark.operators.substring import (
+    anchor_votes,
+    containment_score,
+    partial_ratio_from_positions,
+    winnow_fingerprints_pos,
+)
 from spaczz_spark.operators.verify import CHAR_KERNEL_MAX
 from spaczz_spark.ratios import partial_ratio
 
@@ -42,19 +53,36 @@ def _spaced_edit(text: str, every: int) -> str:
     return " ".join(toks)
 
 
+def _oriented_fps(a: str, b: str):
+    """(short bytes, long bytes, fp_s, pos_s, fp_l, pos_l): both sides
+    winnowed (k = w = 32) and oriented by UTF-8 byte length, as the verify
+    stage does."""
+    if len(a.encode()) > len(b.encode()):
+        a, b = b, a
+    fs, ps = winnow_fingerprints_pos(a, 32, 32)
+    fl, pl = winnow_fingerprints_pos(b, 32, 32)
+    return a.encode(), b.encode(), fs, ps, fl, pl
+
+
+def _positions_ratio(a: str, b: str) -> float:
+    return partial_ratio_from_positions(
+        *_oriented_fps(a, b), k=32, min_partial=75
+    )
+
+
 # ---------------------------------------------------------------------------
 # kernel (no Spark)
 # ---------------------------------------------------------------------------
 
 
-def test_anchored_verbatim_is_100():
+def test_positions_verbatim_is_100():
     rng = random.Random(1)
     short = _gen(rng, 120)
     host = _gen(rng, 300) + "\n\n" + short + "\n\n" + _gen(rng, 200)
-    assert anchored_partial_ratio(short, host) == 100.0
+    assert _positions_ratio(short, host) == 100.0
 
 
-def test_anchored_matches_full_sweep_on_light_edits():
+def test_positions_matches_full_sweep_on_light_edits():
     """On spaced-edit embeddings the anchored score must equal the
     unrestricted partial_ratio sweep (the shared-gram votes recover the
     true embedding offset)."""
@@ -63,44 +91,58 @@ def test_anchored_matches_full_sweep_on_light_edits():
         short = _gen(rng, 100 + 20 * seed)
         edited = _spaced_edit(short, every=40)
         host = _gen(rng, 250) + "\n\n" + edited + "\n\n" + _gen(rng, 250)
-        anchored = anchored_partial_ratio(short, host)
+        anchored = _positions_ratio(short, host)
         full = partial_ratio(short, host)
         assert anchored > 90.0, (seed, anchored)
         assert abs(anchored - full) < 0.5, (seed, anchored, full)
 
 
-def test_anchored_is_order_insensitive():
+def test_positions_is_order_insensitive():
     rng = random.Random(5)
     short = _gen(rng, 120)
     host = _gen(rng, 300) + " " + _spaced_edit(short, 50) + " " + _gen(rng, 100)
-    assert anchored_partial_ratio(short, host) == anchored_partial_ratio(
-        host, short
-    )
+    assert _positions_ratio(short, host) == _positions_ratio(host, short)
 
 
-def test_anchored_unrelated_is_low():
+def test_positions_unrelated_is_low():
     rng = random.Random(6)
     a, b = _gen(rng, 150), _gen(rng, 600)
     # no shared 32-byte gram at all -> no anchor -> 0 (not a full sweep)
-    assert anchored_partial_ratio(a, b) == 0.0
+    assert _positions_ratio(a, b) == 0.0
 
 
-def test_anchored_score_cutoff():
+def test_containment_score_cutoff():
+    """The per-row containment body keeps round(raw) only when raw clears
+    the ``min_partial - 1`` cutoff — and that guard keeps a raw score just
+    below ``min_partial`` that rounds up to it."""
     rng = random.Random(7)
     short = _gen(rng, 120)
     host = _gen(rng, 200) + " " + _spaced_edit(short, 30) + " " + _gen(rng, 200)
-    raw = anchored_partial_ratio(short, host)
+    sb, lb, fs, ps, fl, pl = _oriented_fps(short, host)
+    raw = _positions_ratio(short, host)
+    _, starts = anchor_votes(len(sb), len(lb), fs, ps, fl, pl, k=32)
     assert raw > 0
-    assert anchored_partial_ratio(short, host, score_cutoff=raw + 1) == 0.0
-    assert anchored_partial_ratio(short, host, score_cutoff=raw - 1) == raw
+
+    def score(min_partial):
+        return containment_score(
+            short, host, starts, min_len=100, min_partial=min_partial
+        )
+
+    # cutoff (min_partial - 1) >= raw + 1
+    assert score(math.ceil(raw) + 2) == (0, False)
+    # cutoff <= raw - 1
+    assert score(math.floor(raw)) == (round(raw), False)
+    # rounding guard: raw < min_partial == round(raw) is still kept
+    assert raw < round(raw)
+    assert score(round(raw)) == (round(raw), False)
 
 
-def test_anchored_empty_and_tiny_inputs():
-    assert anchored_partial_ratio("", "anything at all here") == 0.0
-    assert anchored_partial_ratio("xy", "abcdefgh") == 0.0  # < k, padded grams
+def test_positions_empty_and_tiny_inputs():
+    assert _positions_ratio("", "anything at all here") == 0.0
+    assert _positions_ratio("xy", "abcdefgh") == 0.0  # < k, padded grams
 
 
-def test_anchored_large_strings_token_fallback():
+def test_positions_large_strings_token_fallback():
     """Above CHAR_KERNEL_MAX bytes the window is scored token-level (the
     same documented bounded-cost fallback as the InDel verify kernel) —
     still ~100 for an embedded lightly-edited copy, and fast."""
@@ -109,7 +151,7 @@ def test_anchored_large_strings_token_fallback():
     assert len(short.encode()) > CHAR_KERNEL_MAX
     edited = _spaced_edit(short, every=80)
     host = _gen(rng, 500) + "\n\n" + edited + "\n\n" + _gen(rng, 500)
-    sc = anchored_partial_ratio(short, host)
+    sc = _positions_ratio(short, host)
     assert sc > 95.0, sc
 
 
@@ -145,10 +187,26 @@ def verify_fixture(spark):
     return corpus, pairs
 
 
-def test_verify_substring_partial_labels(spark, verify_fixture):
-    from spaczz_spark.operators.substring import verify_substring_pairs
+@pytest.fixture(scope="module")
+def fp_verify_fixture(spark, verify_fixture):
+    """verify_fixture's corpus with the fused signatures stage's
+    n_bytes/fingerprints/fp_positions columns."""
+    from pyspark.sql import functions as F
+
+    from spaczz_spark.functions.signatures import with_fused_signatures
 
     corpus, pairs = verify_fixture
+    enriched = with_fused_signatures(
+        corpus.withColumn("n_bytes", F.octet_length("content")),
+        3, 128, 42, 32, 32, 100,
+    ).select("file_id", "content", "n_bytes", "fingerprints", "fp_positions")
+    return enriched, pairs
+
+
+def test_verify_substring_partial_labels(spark, fp_verify_fixture):
+    from spaczz_spark.operators.substring import verify_substring_pairs
+
+    corpus, pairs = fp_verify_fixture
     out = {
         r["b_id"]: r
         for r in verify_substring_pairs(
@@ -289,50 +347,39 @@ def test_winnow_positions_point_at_selected_grams():
         assert (h[pos] == vals).all()
 
 
-def test_positions_fast_path_matches_rehash_fallback(spark, verify_fixture):
-    """With fp_positions present, verify_substring_pairs must keep the same
-    pair set as the anchored-rehash fallback on the planted fixture (scores
-    agree on the aligned window; both paths pick the true offset)."""
-    from pyspark.sql import functions as F
-
-    from spaczz_spark.functions.signatures import with_fused_signatures
+def test_verify_partial_requires_fingerprint_columns(spark, verify_fixture):
+    """min_partial set on a corpus without the precomputed fingerprint
+    columns raises (there is no per-pair rehash fallback)."""
     from spaczz_spark.operators.substring import verify_substring_pairs
 
     corpus, pairs = verify_fixture
-    enriched = with_fused_signatures(
-        corpus.withColumn(
-            "n_bytes", F.octet_length("content")
-        ),
-        3, 128, 42, 32, 32, 100,
-    ).select("file_id", "content", "n_bytes", "fingerprints", "fp_positions")
-    fast = {
-        r["b_id"]: r
-        for r in verify_substring_pairs(
-            pairs, enriched, min_len=100, min_partial=75
-        ).collect()
-    }
-    slow = {
+    with pytest.raises(ValueError, match="with_fused_signatures"):
+        verify_substring_pairs(pairs, corpus, min_len=100, min_partial=75)
+
+
+def test_verify_partial_score_matches_positions_kernel(
+    spark, verify_fixture, fp_verify_fixture
+):
+    """The operator's edit_ratio for the edited embedding equals the
+    rounded partial_ratio_from_positions of the same two texts."""
+    from spaczz_spark.operators.substring import verify_substring_pairs
+
+    corpus, pairs = fp_verify_fixture
+    text = {r["file_id"]: r["content"] for r in verify_fixture[0].collect()}
+    out = {
         r["b_id"]: r
         for r in verify_substring_pairs(
             pairs, corpus, min_len=100, min_partial=75
         ).collect()
     }
-    assert set(fast) == set(slow) == {2, 3}
-    assert fast[2]["verified_by"] == "containment" == slow[2]["verified_by"]
-    assert fast[3]["verified_by"] == "partial" == slow[3]["verified_by"]
-    # same aligned window -> same InDel score
-    assert fast[3]["edit_ratio"] == slow[3]["edit_ratio"]
+    assert out[3]["verified_by"] == "partial"
+    assert out[3]["edit_ratio"] == round(_positions_ratio(text[1], text[3]))
 
 
 def test_coverage_screen_skips_boilerplate_keeps_embeddings():
     """The coverage screen must zero a pair whose only shared material is a
     small boilerplate block (far below the score target) WITHOUT running
     the kernel, and must pass a genuine light-edit embedding."""
-    from spaczz_spark.operators.substring import (
-        partial_ratio_from_positions,
-        winnow_fingerprints_pos,
-    )
-
     rng = random.Random(21)
     boiler = _gen(rng, 60)  # ~500 bytes shared block
     doc_a = _gen(rng, 250) + "\n" + boiler + "\n" + _gen(rng, 250)
@@ -340,18 +387,8 @@ def test_coverage_screen_skips_boilerplate_keeps_embeddings():
     base = _gen(rng, 200)
     host = _gen(rng, 300) + "\n" + _spaced_edit(base, 50) + "\n" + _gen(rng, 80)
 
-    def score(s, l):
-        sb, lb = s.encode(), l.encode()
-        if len(sb) > len(lb):
-            sb, lb, s, l = lb, sb, l, s
-        fs, ps = winnow_fingerprints_pos(s, 32, 32)
-        fl, pl = winnow_fingerprints_pos(l, 32, 32)
-        return partial_ratio_from_positions(
-            sb, lb, fs, ps, fl, pl, k=32, min_partial=75
-        )
-
-    assert score(doc_a, doc_b) == 0.0  # screened: shared block << short
-    assert score(base, host) >= 75.0  # light-edit embedding passes
+    assert _positions_ratio(doc_a, doc_b) == 0.0  # screened: block << short
+    assert _positions_ratio(base, host) >= 75.0  # light-edit embedding passes
 
 
 def test_two_phase_screen_passes_large_verbatim_containment():
