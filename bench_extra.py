@@ -6,10 +6,10 @@ NOT the driver bench — bench.py stays frozen. This script isolates:
   stages   — per-stage walls of the flagship DedupPipeline on the bench
              corpus (fresh checkpoint dir, warm session, repeats, min)
   noop     — per-query noop-sink walls for the bench query set (repeats)
-  explain  — .explain("formatted") of every bench query (and each pipeline
-             stage's build DataFrame) into plans/r07/<name>_<tag>.txt
 
-Usage: python bench_extra.py stages|noop|explain [tag]
+Physical plans live in EXPLAIN.md (scripts/explain_audit.py).
+
+Usage: python bench_extra.py stages|noop
 """
 
 from __future__ import annotations
@@ -26,8 +26,7 @@ sys.path.insert(0, REPO)
 os.environ["PYTHONPATH"] = REPO + os.pathsep + os.environ.get("PYTHONPATH", "")
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-PLANS_DIR = os.path.join(REPO, "plans", "r07")
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 
 
 def session():
@@ -142,57 +141,11 @@ def cmd_noop():
     print(json.dumps(out, indent=1))
 
 
-def cmd_explain(tag: str):
-    os.makedirs(PLANS_DIR, exist_ok=True)
-    spark = session()
-    for name, fn in _bench_queries(spark):
-        df = fn(spark, SF_DIR)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-        with open(os.path.join(PLANS_DIR, f"{name}_{tag}.txt"), "w") as f:
-            f.write(plan)
-        print(f"wrote {name}_{tag}.txt", flush=True)
-    # pipeline stages: capture each stage's build-DataFrame plan by running
-    # the pipeline with a hooked catalog that dumps before writing
-    from spaczz_spark.plans.config import DedupConfig
-    from spaczz_spark.plans.pipeline import DedupPipeline
-    from spaczz_spark.sources.catalog import CheckpointCatalog
-
-    ckpt = tempfile.mkdtemp(prefix="spaczz_bx_")
-    try:
-        files = spark.read.parquet(bench_files_path())
-        pipe = DedupPipeline(spark, DedupConfig(), ckpt)
-        orig_write = CheckpointCatalog.write
-
-        def hooked(self, name, df, config_hash, **kw):
-            plan = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
-            with open(
-                os.path.join(PLANS_DIR, f"pipeline_{name}_{tag}.txt"), "w"
-            ) as f:
-                f.write(plan)
-            print(f"wrote pipeline_{name}_{tag}.txt", flush=True)
-            return orig_write(self, name, df, config_hash, **kw)
-
-        CheckpointCatalog.write = hooked
-        try:
-            pipe.run(files)
-        finally:
-            CheckpointCatalog.write = orig_write
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-
 if __name__ == "__main__":
     mode = sys.argv[1] if len(sys.argv) > 1 else "stages"
-    tag = sys.argv[2] if len(sys.argv) > 2 else "before"
     if mode == "stages":
         cmd_stages()
     elif mode == "noop":
         cmd_noop()
-    elif mode == "explain":
-        cmd_explain(tag)
     else:
         raise SystemExit(f"unknown mode {mode}")

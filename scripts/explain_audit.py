@@ -59,18 +59,21 @@ def main():
     ))
     # minhash_candidates materializes the sized (bucket_key, fid, bsize,
     # bmin) window table with an eager localCheckpoint; this plan is the
-    # tier joins over it
+    # pair join and star projection over it
     cand = minhash_candidates(sig, dedup=False)
     sections.append((
-        "MinHash LSH candidates — tier joins over the sized table",
+        "MinHash LSH candidates — one salted all-pairs join over the sized "
+        "table",
         "Check: the signature UDF + explode + exchange + window run ONCE "
         "in the materialization job (the window plan beat a grouped-array "
         "aggregation 2.4-3.7x at scale4, see "
-        "BENCH/profile_candidates_scale4.json); this plan's tier joins "
-        "read the checkpointed RDD (Scan ExistingRDD) instead of "
-        "recomputing the window subtree per tier reference, the small "
-        "tier self-joins it via BroadcastHashJoin, and oversized buckets "
-        "go through the salted mid / star tiers.",
+        "BENCH/profile_candidates_scale4.json); this plan reads the "
+        "checkpointed RDD (Scan ExistingRDD) instead of recomputing the "
+        "window subtree per reference, and has exactly ONE join: the "
+        "all-pairs self-join on (bucket_key, salt), whose b side is the "
+        "Generate of the salt sequence (1 salt up to bucket_cap, N_SALT "
+        "above). Buckets above star_cap bypass the join as a star "
+        "projection unioned after it.",
         grab(cand),
     ))
 

@@ -12,12 +12,16 @@ low-min_r1 philosophy.
 Scale design:
 - bands are packed JVM-side (``xxhash64`` over signature slices) and
   ``posexplode``d — one shuffle on the band key.
-- **skew**: buckets larger than ``bucket_cap`` would contribute O(n²) pairs
-  (a 10k-member boilerplate bucket is 5e7 pairs). Exact-duplicate collapse
-  upstream (group by sha256, keep one representative) removes identical-file
-  pileups; residual oversized buckets fall back to star expansion
-  (min-member -> others, linear) instead of all-pairs — connected components
-  downstream restores the transitive clustering.
+- one pair enumerator (``pairs_from_buckets``) under every bucket source
+  (MinHash bands, SimHash blocks, substring fingerprints, hyperplane ANN):
+  one salted all-pairs self-join plus a star projection.
+- **skew**: a bucket larger than ``bucket_cap`` is salted — its join key is
+  split ``N_SALT`` ways so one hot bucket is not one straggler task. Above
+  ``star_cap`` all-pairs would be O(n²) (a 10k-member boilerplate bucket
+  is 5e7 pairs); such buckets fall back to star expansion (min-member ->
+  others, linear) — connected components downstream restores the
+  transitive clustering. Exact-duplicate collapse upstream (group by
+  sha256, keep one representative) removes identical-file pileups first.
 - AQE (adaptive skew-join splitting) is expected ON in the session config.
 """
 
@@ -28,119 +32,92 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.signatures import pack_band_keys
+from .verify import attach_pair_sides
 
 __all__ = ["minhash_candidates", "simhash_candidates", "pairs_from_buckets"]
+
+
+# salt fan-out for buckets above ``bucket_cap``: a hot bucket's pairs are
+# spread over this many (bucket_key, salt) join keys
+N_SALT = 16
 
 
 def pairs_from_buckets(
     buckets: DataFrame,
     bucket_cap: int = 64,
-    id_col: str = "file_id",
-    n_salt: int = 16,
     star_cap: int = 4096,
     dedup: bool = True,
-    payload_col: str | None = None,
 ) -> DataFrame:
     """Enumerate candidate pairs from (bucket_key, file_id) rows.
 
-    Three tiers by bucket size (skew handling, north-rule salting):
-    - <= bucket_cap: all-pairs within the bucket.
-    - (bucket_cap, star_cap]: **salted** all-pairs — the left side is
-      tagged ``salt = pmod(xxhash64(id), n_salt)``, the right side is
-      replicated once per salt value, and the join key becomes
-      (bucket, salt): the same complete pair set, but the hot key is
-      spread over ``n_salt`` partitions instead of one straggler.
+    One window sizes every bucket, then two projections of the sized
+    table (skew handling, north-rule salting):
+    - 2 <= size <= max(bucket_cap, star_cap): **salted** all-pairs in one
+      self-join. Each bucket gets a salt count ``ns`` (1 up to
+      ``bucket_cap``, ``N_SALT`` above it); the left side is tagged
+      ``salt = pmod(xxhash64(id), ns)``, the right side is replicated once
+      per salt value, and the join key is (bucket, salt). Every pair meets
+      exactly once, and a hot key is spread over ``N_SALT`` partitions
+      instead of one straggler; with ``ns = 1`` this is a plain self-join.
     - > star_cap: quadratic enumeration is no longer acceptable
       (n·(n-1)/2 pairs); fall back to linear star expansion around the
       min member — connected components downstream restores the
       transitive clustering. (Exact-duplicate collapse upstream makes
       this tier rare: it fires only for near-identical-but-not-equal
-      mega-families.)
-
-    ``payload_col`` optionally carries a per-id column through the
-    enumeration so callers can filter pairs without re-joining the id
-    table twice (SimHash's exact hamming check); output then includes
-    ``a_pl``/``b_pl``. The payload must be functionally determined by
-    the id.
+      mega-families.) With ``bucket_cap > star_cap`` a bucket can hit
+      both; its star edges are a subset of its pairs.
 
     Returns distinct (a_id, b_id) with a_id < b_id.
     """
-    if payload_col:
-        ids = pairs_from_buckets(
-            buckets, bucket_cap, id_col, n_salt, star_cap, dedup
-        )
-        # materialized once: referenced by BOTH side-joins below, and the
-        # distinct is itself a shuffle of the whole exploded bucket table —
-        # without the checkpoint it ran twice (same nondeterministic-
-        # upstream reuse blocker as `sized` below)
-        pl = buckets.select(
-            F.col(id_col).alias("fid"), F.col(payload_col).alias("pl")
-        ).distinct().localCheckpoint()
-        return (
-            ids.join(
-                pl.select(F.col("fid").alias("a_id"), F.col("pl").alias("a_pl")),
-                "a_id",
-            ).join(
-                pl.select(F.col("fid").alias("b_id"), F.col("pl").alias("b_pl")),
-                "b_id",
-            )
-        )
     w = Window.partitionBy("bucket_key")
     sized = buckets.select(
         "bucket_key",
-        F.col(id_col).alias("fid"),
+        F.col("file_id").alias("fid"),
         F.count(F.lit(1)).over(w).alias("bsize"),
-        F.min(id_col).over(w).alias("bmin"),
+        F.min("file_id").over(w).alias("bmin"),
     )
-    # Materialize the sized table ONCE (r7 measurement): the three tier
-    # subtrees reference `sized` five times (small self-join x2, mid x2,
-    # large), and when the upstream contains a nondeterministic expression
+    # Materialize the sized table ONCE (r7 measurement): the all-pairs
+    # join (both sides) and the star projection reference `sized` three
+    # times, and when the upstream contains a nondeterministic expression
     # (every signature UDF is marked asNondeterministic to stop Catalyst
     # double-eval) the subtrees are never canonically equal, so exchange
     # reuse CANNOT fire and the whole explode->shuffle->window pipeline —
     # including the Arrow signature UDF in the standalone operators — ran
-    # once per tier reference (7 ArrowEvalPython nodes in the
-    # doc_minhash_neardup plan, 5 Window sorts per bucket source in the
-    # pipeline candidates stage). One localCheckpoint replaces five
-    # recomputations; the slim (bucket_key, fid, bsize, bmin) schema keeps
-    # the materialized footprint small at any scale (~32 B/row).
+    # once per reference. One localCheckpoint replaces the recomputations;
+    # the slim (bucket_key, fid, bsize, bmin) schema keeps the
+    # materialized footprint small at any scale (~32 B/row).
     sized = sized.localCheckpoint()
 
-    small = sized.where(F.col("bsize").between(2, bucket_cap))
-    small_pairs = (
-        small.alias("a")
-        .join(small.alias("b"), "bucket_key")
-        .where(F.col("a.fid") < F.col("b.fid"))
-        .select(F.col("a.fid").alias("a_id"), F.col("b.fid").alias("b_id"))
+    enum = sized.where(
+        F.col("bsize").between(2, max(bucket_cap, star_cap))
+    ).withColumn(
+        "ns",
+        F.when(F.col("bsize") <= bucket_cap, F.lit(1)).otherwise(F.lit(N_SALT)),
     )
-
-    mid = sized.where(
-        (F.col("bsize") > bucket_cap) & (F.col("bsize") <= star_cap)
-    )
-    mid_a = mid.select(
+    side_a = enum.select(
         "bucket_key",
-        F.col("fid").alias("a_fid"),
-        F.pmod(F.xxhash64("fid"), F.lit(n_salt)).alias("salt"),
+        F.col("fid").alias("a_id"),
+        F.pmod(F.xxhash64("fid"), F.col("ns")).alias("salt"),
     )
-    mid_b = mid.select(
+    side_b = enum.select(
         "bucket_key",
-        F.col("fid").alias("b_fid"),
-        F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1)).cast("array<bigint>"))
+        F.col("fid").alias("b_id"),
+        F.explode(F.sequence(F.lit(0), F.col("ns") - 1).cast("array<bigint>"))
         .alias("salt"),
     )
-    mid_pairs = (
-        mid_a.join(mid_b, ["bucket_key", "salt"])
-        .where(F.col("a_fid") < F.col("b_fid"))
-        .select(F.col("a_fid").alias("a_id"), F.col("b_fid").alias("b_id"))
+    all_pairs = (
+        side_a.join(side_b, ["bucket_key", "salt"])
+        .where(F.col("a_id") < F.col("b_id"))
+        .select("a_id", "b_id")
     )
 
-    large_pairs = (
+    star_pairs = (
         sized.where(F.col("bsize") > star_cap)
         .where(F.col("fid") != F.col("bmin"))
         .select(F.col("bmin").alias("a_id"), F.col("fid").alias("b_id"))
     )
 
-    out = small_pairs.unionByName(mid_pairs).unionByName(large_pairs)
+    out = all_pairs.unionByName(star_pairs)
     # callers that union several candidate sources and groupBy afterwards
     # pass dedup=False to avoid paying this shuffle once per source
     return out.distinct() if dedup else out
@@ -159,7 +136,7 @@ def minhash_candidates(
     ``sig_df`` needs (file_id, minhash). One explode + one shuffle on the
     band bucket key. Every banded row goes through the bucket-sizing
     window; singleton buckets are dropped after it (``bsize >= 2``), before
-    the tier joins.
+    the pair join.
     """
     banded = sig_df.select(
         "file_id",
@@ -181,8 +158,10 @@ def simhash_candidates(
     Pigeonhole blocking: the 64-bit signature is split into
     ``max_hamming + 1`` blocks; any pair within the hamming budget must agree
     exactly on at least one block, so grouping by (block index, block value)
-    has perfect recall. Pairs are then exactly filtered with
-    ``bit_count(a ^ b)`` JVM-side.
+    has perfect recall. Each pair side is then joined to its simhash in
+    ``sig_df`` and exactly filtered with ``bit_count(a ^ b)`` JVM-side; the
+    pipeline passes its committed signatures table, so each side is a
+    column-pruned scan.
     """
     n_blocks = max_hamming + 1
     block_bits = 64 // n_blocks
@@ -196,19 +175,14 @@ def simhash_candidates(
         for i in range(n_blocks)
     ]
     blocks = sig_df.select(
-        "file_id",
-        "simhash",
-        F.explode(F.array(*block_keys)).alias("bucket_key"),
+        "file_id", F.explode(F.array(*block_keys)).alias("bucket_key")
     )
-    # the simhash rides through the enumeration as a payload so the exact
-    # hamming check is a filter on the pair row itself — no re-join of the
-    # pair set against the signature table (was two joins pre-round-6)
-    pairs = pairs_from_buckets(
-        blocks, bucket_cap, dedup=dedup, payload_col="simhash"
-    )
+    pairs = pairs_from_buckets(blocks, bucket_cap, dedup=dedup)
     return (
-        pairs.where(
-            F.bit_count(F.col("a_pl").bitwiseXOR(F.col("b_pl"))) <= max_hamming
+        attach_pair_sides(pairs, sig_df, ["simhash"])
+        .where(
+            F.bit_count(F.col("a_simhash").bitwiseXOR(F.col("b_simhash")))
+            <= max_hamming
         )
         .select("a_id", "b_id")
         .withColumn("stage", F.lit("simhash"))

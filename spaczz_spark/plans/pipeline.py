@@ -48,7 +48,7 @@ __all__ = ["DedupPipeline", "recommended_session"]
 
 def recommended_session(
     app: str = "spaczz-dedup",
-    master: str = "local[32]",
+    master: str = "local[*]",
     shuffle_partitions: int = 32,
 ) -> SparkSession:
     """SparkSession with the engine's recommended scale configuration."""

@@ -19,7 +19,7 @@ from .ratios import normalize_fuzzy_regex_counts
 from .repatterns import parse_regex
 from .tokenizer import TokenDoc, tokenize
 
-__all__ = ["regex_match", "char_matches"]
+__all__ = ["regex_match"]
 
 
 def _raw_matches(
@@ -35,34 +35,6 @@ def _raw_matches(
             continue
         out.append((start, end, tuple(getattr(m, "fuzzy_counts", (0, 0, 0)))))
     return out
-
-
-def char_matches(
-    text: str,
-    query: str,
-    *,
-    ignore_case: bool = True,
-    predef: bool = False,
-    fuzzy_weights: str = "indel",
-) -> list[tuple[int, int, int, str]]:
-    """Char-level regex matches: (start_char, end_char, ratio, matched_text).
-
-    The building block shared by the token-aligned searcher below and the
-    DataFrame extraction operator.
-    """
-    return [
-        (
-            start,
-            end,
-            normalize_fuzzy_regex_counts(
-                text[start:end], counts, fuzzy_weights
-            ),
-            text[start:end],
-        )
-        for start, end, counts in _raw_matches(
-            text, query, ignore_case=ignore_case, predef=predef
-        )
-    ]
 
 
 def regex_match(

@@ -19,7 +19,6 @@ engine, so the generator exposes the same key function here for truth tables.
 
 from __future__ import annotations
 
-import hashlib
 import random
 
 import pandas as pd
@@ -400,15 +399,3 @@ def generate_partial_corpus(
     files = pd.DataFrame(rows)
     plant = pd.DataFrame(plant_rows, columns=["a_key", "b_key", "off", "n", "k"])
     return files, plant
-
-
-def corpus_digest(files: pd.DataFrame) -> str:
-    """Order-insensitive sha256 digest of the corpus (determinism checks)."""
-    h = hashlib.sha256()
-    for row in sorted(
-        files.apply(lambda r: "|".join(r[c] for c in
-                                       ["repo", "path", "commit", "lang", "content"]),
-                    axis=1)
-    ):
-        h.update(row.encode())
-    return h.hexdigest()

@@ -1,29 +1,36 @@
-"""Salted bucket pair enumeration: completeness across all three size tiers.
+"""Bucket pair enumeration: completeness of the salted join and the star tier.
 
-``pairs_from_buckets`` sizes each bucket with a window and enumerates
-pairs by tier: all-pairs up to ``bucket_cap``, salted all-pairs up to
-``star_cap``, star edges around the bucket minimum above it.
+``pairs_from_buckets`` sizes each bucket with a window, enumerates
+all pairs of buckets up to ``max(bucket_cap, star_cap)`` members in one
+self-join on (bucket, salt) — salted ``N_SALT`` ways above ``bucket_cap``
+— and emits star edges around the bucket minimum above ``star_cap``.
+``simhash_candidates`` runs on top of it and must equal a brute-force
+hamming check.
 """
 
 import random
 from collections import defaultdict
 from itertools import combinations
 
-from spaczz_spark.operators.lsh import pairs_from_buckets
+import pytest
+
+from spaczz_spark.operators.lsh import pairs_from_buckets, simhash_candidates
 
 
-def bruteforce_pairs(rows, star_cap):
-    """The three tier rules in plain Python over (bucket_key, id) rows.
-    The small and salted mid tiers both yield every pair, so only
-    ``star_cap`` shapes the set; bucket size counts duplicate rows, as the
-    sizing window does."""
+def bruteforce_pairs(rows, bucket_cap, star_cap):
+    """The enumeration rules in plain Python over (bucket_key, id) rows.
+    Salting never changes the pair set, so only the size bound shapes it:
+    all pairs up to ``max(bucket_cap, star_cap)`` members, star edges above
+    ``star_cap`` (both for a bucket in between when ``bucket_cap >
+    star_cap``, whose union is all pairs); bucket size counts duplicate
+    rows, as the sizing window does."""
     buckets = defaultdict(list)
     for key, fid in rows:
         buckets[key].append(fid)
     pairs = set()
     for members in buckets.values():
         ids = sorted(set(members))
-        if len(members) <= star_cap:
+        if len(members) <= max(bucket_cap, star_cap):
             pairs |= set(combinations(ids, 2))
         else:
             pairs |= {(ids[0], m) for m in ids[1:]}
@@ -44,9 +51,7 @@ def test_salted_tiers_enumerate_exactly_the_small_and_mid_pairs(spark):
 
     got = {
         (r["a_id"], r["b_id"])
-        for r in pairs_from_buckets(
-            df, bucket_cap=8, n_salt=4, star_cap=40
-        ).collect()
+        for r in pairs_from_buckets(df, bucket_cap=8, star_cap=40).collect()
     }
 
     expect = set()
@@ -67,37 +72,12 @@ def test_duplicate_bucket_rows_do_not_duplicate_pairs(spark):
     assert [(r["a_id"], r["b_id"]) for r in out] == [(1, 2)]
 
 
-def test_payload_rides_through_every_tier(spark):
-    """payload_col must attach each id's payload to both pair sides across
-    all three tiers (SimHash's hamming filter depends on it)."""
-    rows = []
-    for i in range(4):
-        rows.append(("b_small", 100 + i, 1000 + i))
-    for i in range(30):
-        rows.append(("b_hot", 200 + i, 2000 + i))
-    for i in range(60):
-        rows.append(("b_huge", 300 + i, 3000 + i))
-    df = spark.createDataFrame(rows, ["bucket_key", "file_id", "sig"])
-
-    out = pairs_from_buckets(
-        df, bucket_cap=8, n_salt=4, star_cap=40, payload_col="sig"
-    ).collect()
-
-    ids = {(r["a_id"], r["b_id"]) for r in out}
-    expect = {tuple(sorted(p)) for p in combinations(range(100, 104), 2)}
-    expect |= {tuple(sorted(p)) for p in combinations(range(200, 230), 2)}
-    expect |= {(300, 300 + i) for i in range(1, 60)}
-    assert ids == expect
-    # payload is id + 900/1800/2700 by construction in every bucket
-    for r in out:
-        assert r["a_pl"] - r["a_id"] in (900, 1800, 2700)
-        assert r["b_pl"] - r["b_id"] in (900, 1800, 2700)
-        assert r["a_pl"] - r["a_id"] == r["b_pl"] - r["b_id"]
-
-
-def test_random_layout_pair_set_matches_bruteforce(spark):
+@pytest.mark.parametrize("bucket_cap,star_cap", [(8, 30), (1, 30), (40, 30)])
+def test_random_layout_pair_set_matches_bruteforce(spark, bucket_cap, star_cap):
     """Property-style cross-check on a pseudo-random bucket layout that
-    hits every tier, with duplicate (bucket, id) rows sprinkled in."""
+    hits every tier, with duplicate (bucket, id) rows sprinkled in.
+    ``bucket_cap=1`` salts every bucket; ``bucket_cap > star_cap`` is the
+    cap-above-star case."""
     rng = random.Random(7)
     rows = []
     for b in range(40):
@@ -105,15 +85,60 @@ def test_random_layout_pair_set_matches_bruteforce(spark):
         members = rng.sample(range(10_000), size)
         rows.extend((f"bk{b}", m) for m in members)
     rows.extend(rows[:17])
+    # 30 < 35 <= 40: star edges at star_cap=30, all pairs at bucket_cap=40
+    rows.extend(("bk_35", 20_000 + i) for i in range(35))
     df = spark.createDataFrame(rows, ["bucket_key", "file_id"])
 
     got = [
         (r["a_id"], r["b_id"])
         for r in pairs_from_buckets(
-            df, bucket_cap=8, n_salt=4, star_cap=30
+            df, bucket_cap=bucket_cap, star_cap=star_cap
         ).collect()
     ]
     assert len(got) == len(set(got))
-    expect = bruteforce_pairs(rows, star_cap=30)
+    expect = bruteforce_pairs(rows, bucket_cap, star_cap)
     assert set(got) == expect
     assert expect  # non-vacuous
+
+
+def _signed64(v):
+    return v - (1 << 64) if v >= 1 << 63 else v
+
+
+def test_simhash_candidates_match_bruteforce_hamming(spark):
+    """Seeded random 64-bit signatures plus planted pairs at exactly
+    ``max_hamming`` and ``max_hamming + 1`` bits, and one block value
+    shared by more than ``bucket_cap`` ids so the salted path runs."""
+    max_hamming, bucket_cap = 3, 8
+    rng = random.Random(11)
+    sigs = {i: rng.getrandbits(64) for i in range(60)}
+    fid = 1000
+    for flips in (max_hamming, max_hamming + 1) * 4:
+        base = rng.getrandbits(64)
+        bits = rng.sample(range(64), flips)
+        sigs[fid] = base
+        sigs[fid + 1] = base ^ sum(1 << b for b in bits)
+        fid += 2
+    # 20 ids flip 1-2 of the high 48 bits of one base: they share block 0
+    # (the low 16 bits) -> a 20-member bucket, with pairwise distances
+    # 0-4 straddling max_hamming
+    hot = rng.getrandbits(64)
+    for i in range(20):
+        bits = rng.sample(range(16, 64), rng.choice((1, 2)))
+        sigs[2000 + i] = hot ^ sum(1 << b for b in bits)
+    df = spark.createDataFrame(
+        [(k, _signed64(v)) for k, v in sigs.items()], "file_id long, simhash long"
+    )
+
+    expect = {
+        (a, b)
+        for a, b in combinations(sorted(sigs), 2)
+        if bin(sigs[a] ^ sigs[b]).count("1") <= max_hamming
+    }
+    assert any(bin(sigs[a] ^ sigs[b]).count("1") == max_hamming for a, b in expect)
+    assert (1002, 1003) not in expect  # planted at max_hamming + 1
+
+    for dedup in (True, False):
+        out = simhash_candidates(df, max_hamming, bucket_cap, dedup=dedup)
+        got = {(r["a_id"], r["b_id"]) for r in out.distinct().collect()}
+        assert got == expect, dedup

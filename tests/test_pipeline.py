@@ -319,7 +319,7 @@ def test_mega_bucket_skew_bounded_candidates_and_recall(
     reference's countries.json-style robustness case, scaled) plus a
     150-member near-identical-but-DISTINCT family. The exact collapse must
     erase the boilerplate from candidate enumeration entirely, the salted
-    mid tier must enumerate the family's ~11k pairs without a quadratic
+    all-pairs join must enumerate the family's ~11k pairs without a quadratic
     boilerplate blowup (~2M pairs), and planted recall must stay >= 0.99."""
     from spaczz_spark.sources.corpus import generate_corpus
 
