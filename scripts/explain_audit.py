@@ -124,15 +124,18 @@ def main():
     sections.append((
         "Embedding top-k (codegen dot products + per-query window)",
         "Check: BroadcastNestedLoopJoin with the small query side "
-        "broadcast; dot product via transform/aggregate stays JVM-side "
-        "(no Python in the scoring path); rank via one window Exchange.",
+        "broadcast; each side is L2-normalized once per row BELOW the "
+        "join, so a pair costs one dot product via transform/aggregate, "
+        "JVM-side (no Python in the scoring path); rank via one window "
+        "Exchange.",
         grab(Q.q_emb_topk(spark, sf)),
     ))
 
     sections.append((
         "Exact dedup groups (hash aggregate on sha256)",
         "Check: sha2 computed in the scan projection; partial+final "
-        "aggregate; no Python.",
+        "aggregate; the group members explode straight out of the final "
+        "aggregate (no global sort, so no range Exchange); no Python.",
         grab(Q.q_doc_exact_dups(spark, sf)),
     ))
 

@@ -1,1 +1,1 @@
-"""Vectorized column functions: shingles, signatures, ratio UDFs, text stats."""
+"""Vectorized column functions: shingles, signatures, text stats, layout."""

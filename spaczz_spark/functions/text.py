@@ -4,7 +4,8 @@ All of these are pure JVM column expressions (whole-stage codegen; no Python
 in the hot path) so they run at scan speed over 100 TB of documents:
 
 - ``token_count`` / ``word_stats``  whitespace + code-regex token counting
-- ``quality_features`` / ``quality_score``  length/punct/stopword heuristics
+  and per-document length/punct/digit/stopword stats
+- ``quality_score``  0-1 heuristic over the ``word_stats`` columns
 - ``doc_fingerprint``  normalization fingerprint (md5 of whitespace-collapsed
   lower-cased text) — catches formatting-only duplicates exactly
 - ``lang_id_udf``  n-gram-heuristic language ID (small profile table,
@@ -21,7 +22,6 @@ from pyspark.sql import functions as F
 __all__ = [
     "token_count",
     "word_stats",
-    "quality_features",
     "quality_score",
     "doc_fingerprint",
     "make_lang_id_udf",
@@ -80,22 +80,24 @@ def word_stats(text: Column) -> dict[str, Column]:
     }
 
 
-def quality_features(text: Column) -> Column:
-    """Struct of quality features (for ML-ready feature tables)."""
-    stats = word_stats(text)
-    return F.struct(*[c.alias(k) for k, c in stats.items()])
-
-
-def quality_score(text: Column) -> Column:
+def quality_score(stats: dict[str, Column]) -> Column:
     """Heuristic 0-1 document quality: penalizes too-short/too-long docs,
-    punctuation soup, digit dumps, and stopword-free keyword stuffing."""
-    s = word_stats(text)
-    length_ok = F.when(s["n_words"].between(10, 100_000), F.lit(1.0)).otherwise(
-        F.lit(0.3)
-    )
-    punct_ok = F.when(s["punct_ratio"] < 0.3, F.lit(1.0)).otherwise(F.lit(0.5))
-    digit_ok = F.when(s["digit_ratio"] < 0.3, F.lit(1.0)).otherwise(F.lit(0.5))
-    stop_ok = F.when(s["stopword_ratio"] > 0.05, F.lit(1.0)).otherwise(F.lit(0.7))
+    punctuation soup, digit dumps, and stopword-free keyword stuffing.
+
+    ``stats`` maps the :func:`word_stats` names ``n_words``,
+    ``punct_ratio``, ``digit_ratio`` and ``stopword_ratio`` to columns.
+    Pass references to already-projected stat columns: the stats are
+    regex extractions and lambda filters, and the expressions
+    :func:`word_stats` returns would be evaluated once more per use.
+    """
+
+    def ok(cond: Column, penalty: float) -> Column:
+        return F.when(cond, F.lit(1.0)).otherwise(F.lit(penalty))
+
+    length_ok = ok(stats["n_words"].between(10, 100_000), 0.3)
+    punct_ok = ok(stats["punct_ratio"] < 0.3, 0.5)
+    digit_ok = ok(stats["digit_ratio"] < 0.3, 0.5)
+    stop_ok = ok(stats["stopword_ratio"] > 0.05, 0.7)
     return F.round(
         length_ok * 0.4 + punct_ok * 0.2 + digit_ok * 0.2 + stop_ok * 0.2, 6
     )

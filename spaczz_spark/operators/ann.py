@@ -9,7 +9,8 @@ S6 — ``SimilaritySearcher.compare`` = cosine of pooled vectors,
   product computed JVM-side (``aggregate(zip_with(...))`` — whole-stage
   codegen, no Python), then a per-query window top-k.
 - ``cosine_neardup_pairs`` exact all-pairs cosine >= threshold (self-join
-  form of the same plan).
+  form of the same plan). Both exact operators are DuckDB-oracle-gated
+  (``queries.q_emb_topk`` / ``q_emb_neardup``).
 - ``lsh_cosine_pairs``   the scale path: random-hyperplane LSH — sign-bit
   sketches computed in a vectorized numpy pandas UDF, multi-table bucket
   join, exact cosine re-verification. Verified output ⊆ exact output with

@@ -5,7 +5,8 @@ training-data pipeline would use directly on a ``documents(doc_id, text)``
 table (driver testdata shape). Each has an ANSI-SQL-expressible contract so
 the DuckDB oracle can verify it exactly:
 
-- exact_duplicates:   hash-groupBy on sha256(text)
+- exact_duplicates / fingerprint_duplicates: hash-groupBy on sha256(text) /
+  on the normalization fingerprint (one shared group plan)
 - ngram_jaccard_pairs: brute-force token-shingle Jaccard via an exploded
   equi-join (the verification measure itself; selective because k-token
   shingles are rare across non-duplicates)
@@ -13,7 +14,6 @@ the DuckDB oracle can verify it exactly:
   verify; at the default band config the candidate recall at the verify
   threshold is > 1 - 1e-7, so the verified output equals the brute-force
   oracle deterministically.
-- simhash_neardup_pairs: SimHash blocking -> exact verify (same contract).
 """
 
 from __future__ import annotations
@@ -27,58 +27,28 @@ from ..functions.signatures import (
     TOKEN_PATTERN,
     with_fused_signatures,
 )
-from .lsh import minhash_candidates, simhash_candidates
+from ..functions.text import doc_fingerprint
+from .lsh import minhash_candidates
 from .verify import attach_pair_sides, shingle_jaccard
 
 __all__ = [
     "exact_duplicates",
+    "fingerprint_duplicates",
     "shingle_strings",
     "ngram_jaccard_pairs",
     "minhash_neardup_pairs",
-    "simhash_neardup_pairs",
 ]
 
 
-def exact_duplicates(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Groups of byte-identical documents: (group_id, doc_id, group_size).
+def _duplicate_groups(docs: DataFrame, key: Column, id_col: str) -> DataFrame:
+    """Groups of documents sharing ``key``: (group_id, doc_id, group_size).
 
     group_id = min doc_id of the group; only groups with >1 member returned.
-    One hash shuffle on sha256; map-side partial aggregation applies.
+    One hash shuffle on the key; map-side partial aggregation applies.
     """
-    hashed = docs.select(
-        F.col(id_col).alias("doc_id"), F.sha2(text_col, 256).alias("sha")
-    )
+    keyed = docs.select(F.col(id_col).alias("doc_id"), key.alias("key"))
     groups = (
-        hashed.groupBy("sha")
-        .agg(
-            F.min("doc_id").alias("group_id"),
-            F.count(F.lit(1)).alias("group_size"),
-            F.collect_list("doc_id").alias("members"),
-        )
-        .where(F.col("group_size") > 1)
-    )
-    return (
-        groups.select(
-            "group_id", F.explode("members").alias("doc_id"), "group_size"
-        )
-        .orderBy("group_id", "doc_id")
-    )
-
-
-def fingerprint_duplicates(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Formatting-insensitive duplicate groups via the normalization
-    fingerprint (md5 of lower-cased, whitespace-collapsed, trimmed text)."""
-    from ..functions.text import doc_fingerprint
-
-    hashed = docs.select(
-        F.col(id_col).alias("doc_id"), doc_fingerprint(F.col(text_col)).alias("fp")
-    )
-    groups = (
-        hashed.groupBy("fp")
+        keyed.groupBy("key")
         .agg(
             F.min("doc_id").alias("group_id"),
             F.count(F.lit(1)).alias("group_size"),
@@ -89,6 +59,23 @@ def fingerprint_duplicates(
     return groups.select(
         "group_id", F.explode("members").alias("doc_id"), "group_size"
     )
+
+
+def exact_duplicates(
+    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
+) -> DataFrame:
+    """Groups of byte-identical documents (same sha256):
+    (group_id, doc_id, group_size), group_id = min doc_id of the group."""
+    return _duplicate_groups(docs, F.sha2(F.col(text_col), 256), id_col)
+
+
+def fingerprint_duplicates(
+    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
+) -> DataFrame:
+    """Formatting-insensitive duplicate groups via the normalization
+    fingerprint (md5 of lower-cased, whitespace-collapsed, trimmed text);
+    same output shape as :func:`exact_duplicates`."""
+    return _duplicate_groups(docs, doc_fingerprint(F.col(text_col)), id_col)
 
 
 def shingle_strings(toks: Column, k: int = 5) -> Column:
@@ -242,24 +229,4 @@ def minhash_neardup_pairs(
     """
     sigs = _doc_signatures(docs, k, num_perm, seed, id_col, text_col)
     cand = minhash_candidates(sigs, bands, rows, bucket_cap, star_cap=star_cap)
-    return _verify_jaccard(cand.select("a_id", "b_id"), sigs, threshold)
-
-
-def simhash_neardup_pairs(
-    docs: DataFrame,
-    *,
-    k: int = 5,
-    threshold: float = 0.6,
-    max_hamming: int = 8,
-    seed: int = 42,
-    bucket_cap: int = 2048,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Near-duplicate pairs via SimHash blocking, exactly verified by
-    Jaccard. Note: SimHash recall at a Jaccard threshold is heuristic (the
-    two measures differ); pairs it finds are exactly verified, so precision
-    is exact even where recall is approximate."""
-    sigs = _doc_signatures(docs, k, 128, seed, id_col, text_col)
-    cand = simhash_candidates(sigs, max_hamming, bucket_cap)
     return _verify_jaccard(cand.select("a_id", "b_id"), sigs, threshold)

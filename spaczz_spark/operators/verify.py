@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from ..ratios import indel_ratio, levenshtein_ratio
 
 __all__ = [
+    "edit_ratio_score",
     "make_edit_ratio_udf",
     "attach_pair_sides",
     "shingle_jaccard",
@@ -57,71 +58,67 @@ CHAR_KERNEL_MAX = 8192
 LEV_CHAR_KERNEL_MAX = 32768
 
 
-def make_edit_ratio_udf(min_r: int = 0, func: str = "indel"):
-    """pandas UDF (string, string) -> int edit ratio, reference rounding.
+def edit_ratio_score(
+    s1: str | None, s2: str | None, min_r: int = 0, func: str = "indel"
+) -> int:
+    """Per-pair body of the edit-ratio UDF: integer edit ratio with the
+    reference's rounding, 0 for a missing side or a score below ``min_r``.
 
     ``func`` picks the kernel:
 
     - ``"indel"`` (default) — the reference's InDel similarity (S1,
       reference ``registry/fuzzyfuncs.py:9``); above ``CHAR_KERNEL_MAX``
-      chars it falls back to token-level InDel (bounded cost, same family).
+      chars it scores whitespace tokens instead (bounded cost, same
+      family).
     - ``"levenshtein"`` — plain unit-cost Levenshtein as an integer
       percentage (``ratios.levenshtein_ratio``): the one kernel every
       ANSI-SQL engine mirrors bit-for-bit, which is what makes the full
-      pipeline DuckDB-oracle-checkable. No token fallback (the numpy row
-      DP keeps multi-KB pairs fast); instead, pairs whose *length gap
-      alone* already caps the ratio below ``min_r`` short-circuit to 0
-      without running the DP (d >= |len1 - len2| is an exact lower bound,
-      so the cap (200*(m-|Δ|)+m)//(2m) is provable — mirrored as a plain
-      integer predicate in the SQL oracle).
+      pipeline DuckDB-oracle-checkable. Above ``LEV_CHAR_KERNEL_MAX``
+      chars it scores whitespace tokens instead (same integer formula
+      over token edits).
+
+    Both kernels skip pairs whose *length gap alone* already caps the
+    ratio below ``min_r``, measured in the unit the kernel scores (chars
+    or tokens). InDel: LCS <= min(l1, l2), so ratio <= 200*min/(l1+l2).
+    Levenshtein: d >= |l1 - l2|, so ratio <= (200*(m-|Δ|)+m)//(2m); the
+    char-level form is mirrored as a plain integer predicate in the SQL
+    oracle.
     """
+    if func not in ("indel", "levenshtein"):
+        raise ValueError(f"unknown edit-ratio kernel {func!r}")
+    if s1 is None or s2 is None:
+        return 0
+    t1, t2 = s1, s2
+    if func == "levenshtein":
+        if max(len(s1), len(s2)) > LEV_CHAR_KERNEL_MAX:
+            t1, t2 = s1.split(), s2.split()
+        m = max(len(t1), len(t2))
+        gap = abs(len(t1) - len(t2))
+        if m and min_r and (200 * (m - gap) + m) // (2 * m) < min_r:
+            return 0
+        return round(levenshtein_ratio(t1, t2, score_cutoff=min_r))
+    if max(len(s1), len(s2)) > CHAR_KERNEL_MAX:
+        t1, t2 = s1.split(), s2.split()
+    # substring-family candidates in the jaccard band often have a big
+    # length disparity; don't run the O(len^2/64) kernel on them
+    l1, l2 = len(t1), len(t2)
+    if min_r and 200 * min(l1, l2) < min_r * (l1 + l2):
+        return 0
+    return round(indel_ratio(t1, t2, score_cutoff=min_r))
+
+
+def make_edit_ratio_udf(min_r: int = 0, func: str = "indel"):
+    """pandas UDF (string, string) -> int, a map of
+    :func:`edit_ratio_score` over the rows."""
     if func not in ("indel", "levenshtein"):
         raise ValueError(f"unknown edit-ratio kernel {func!r}")
 
     @F.pandas_udf("int")
     def edit_ratio(a: pd.Series, b: pd.Series) -> pd.Series:
-        out = []
-        for s1, s2 in zip(a, b):
-            if s1 is None or s2 is None:
-                out.append(0)
-                continue
-            if func == "levenshtein":
-                if max(len(s1), len(s2)) > LEV_CHAR_KERNEL_MAX:
-                    # ADVICE r4: two similar-length multi-100KB files defeat
-                    # the length-gap prefilter and the quadratic DP stalls a
-                    # task — switch to whitespace tokens (same integer
-                    # formula over token edits, numpy-coded rows)
-                    t1, t2 = s1.split(), s2.split()
-                    m = max(len(t1), len(t2))
-                    gap = abs(len(t1) - len(t2))
-                    if m and min_r and (200 * (m - gap) + m) // (2 * m) < min_r:
-                        out.append(0)
-                        continue
-                    r = levenshtein_ratio(t1, t2, score_cutoff=min_r)
-                else:
-                    m = max(len(s1), len(s2))
-                    gap = abs(len(s1) - len(s2))
-                    if m and min_r and (200 * (m - gap) + m) // (2 * m) < min_r:
-                        out.append(0)
-                        continue
-                    r = levenshtein_ratio(s1, s2, score_cutoff=min_r)
-            else:
-                if max(len(s1), len(s2)) > CHAR_KERNEL_MAX:
-                    t1, t2 = s1.split(), s2.split()
-                else:
-                    t1, t2 = s1, s2
-                # provable O(1) skip: LCS <= min(l1, l2), so
-                # ratio = 200*LCS/(l1+l2) <= 200*min/(l1+l2); pairs with a
-                # big length disparity (substring-family candidates in the
-                # jaccard band) can never reach the cutoff — don't run the
-                # O(len^2/64) kernel on them
-                l1, l2 = len(t1), len(t2)
-                if min_r and 200 * min(l1, l2) < min_r * (l1 + l2):
-                    out.append(0)
-                    continue
-                r = indel_ratio(t1, t2, score_cutoff=min_r)
-            out.append(round(r))
-        return pd.Series(out, dtype="int32")
+        return pd.Series(
+            [edit_ratio_score(s1, s2, min_r, func) for s1, s2 in zip(a, b)],
+            dtype="int32",
+        )
 
     # The kernel IS deterministic; the marker only removes the optimizer's
     # freedom to duplicate the expression — without it, a filter + a

@@ -27,8 +27,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .functions.signatures import TOKEN_PATTERN
-from .functions.text import WORD_PATTERN, _STOPWORDS, doc_fingerprint, token_count
-from .operators.ann import dot, lsh_cosine_pairs
+from .functions.text import (
+    WORD_PATTERN,
+    _STOPWORDS,
+    quality_score,
+    token_count,
+    word_stats,
+)
+from .operators.ann import cosine_neardup_pairs, cosine_topk, lsh_cosine_pairs
 from .operators.components import attach_components, connected_components
 from .operators.dedup import (
     exact_duplicates,
@@ -42,6 +48,7 @@ from .operators.substring import (
     substring_candidates,
     verify_substring_pairs,
 )
+from .streaming.windows import windowed_event_counts
 
 # committed fixtures live next to the package, at the repository root
 FIXTURE_ROOT = os.path.join(
@@ -266,27 +273,16 @@ def q_doc_quality(spark, sf_dir):
     # extraction is the whole query, so spread it (row-wise outputs,
     # partitioning-independent)
     d = ensure_min_partitions(_docs(spark, sf_dir))
-    text = F.col("text")
-    words = F.regexp_extract_all(F.lower(text), F.lit(r"[a-z]+"), 0)
-    n_chars = F.length(text)
-    n_words = F.size(words)
-    stop_arr = F.array(*[F.lit(s) for s in _STOPWORDS])
-    punct = F.size(F.regexp_extract_all(text, F.lit(r"[^\w\s]"), 0)) / n_chars
-    digit = F.size(F.regexp_extract_all(text, F.lit(r"[0-9]"), 0)) / n_chars
-    stop = F.size(F.filter(words, lambda w: F.array_contains(stop_arr, w))) / n_words
-    score = (
-        F.when(n_words.between(10, 100000), F.lit(1.0)).otherwise(0.3) * 0.4
-        + F.when(punct < 0.3, F.lit(1.0)).otherwise(0.5) * 0.2
-        + F.when(digit < 0.3, F.lit(1.0)).otherwise(0.5) * 0.2
-        + F.when(stop > 0.05, F.lit(1.0)).otherwise(0.7) * 0.2
-    )
-    return d.select(
+    ratios = ("punct_ratio", "digit_ratio", "stopword_ratio")
+    names = ("n_tokens", "n_words", *ratios)
+    stats = word_stats(F.col("text"))
+    # project the stats once; quality_score reads the projected columns
+    projected = d.select("doc_id", *[stats[k].alias(k) for k in names])
+    return projected.select(
         "doc_id",
-        token_count(text).alias("n_tokens"),
-        F.round(punct, 6).alias("punct_ratio"),
-        F.round(digit, 6).alias("digit_ratio"),
-        F.round(stop, 6).alias("stopword_ratio"),
-        F.round(score, 6).alias("quality"),
+        "n_tokens",
+        *[F.round(k, 6).alias(k) for k in ratios],
+        quality_score({k: F.col(k) for k in names}).alias("quality"),
     )
 
 
@@ -362,19 +358,12 @@ def q_doc_fregex(spark, sf_dir):
 
 
 def q_events_windowed(spark, sf_dir):
-    e = _events(spark, sf_dir)
-    return (
-        e.groupBy(
-            F.date_format(F.date_trunc("hour", "ts"), "yyyy-MM-dd HH:mm:ss").alias(
-                "hour"
-            ),
-            "event_type",
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum(F.col("value").cast("decimal(18,2)")).cast("double"), 2)
-            .alias("sum_value"),
-        )
+    counts = windowed_event_counts(_events(spark, sf_dir), window="1 hour")
+    return counts.select(
+        F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("hour"),
+        "event_type",
+        "n",
+        "sum_value",
     )
 
 
@@ -517,11 +506,10 @@ def q_files_components(spark, sf_dir):
     # in the session's cache manager, so a later build of this query would
     # read the previous build's blocks
     f = _files(spark, sf_dir).localCheckpoint(eager=False)
-    w = Window.partitionBy(F.sha2("content", 256))
     exact_e = (
-        f.withColumn("m", F.min("file_key").over(w))
-        .where(F.col("file_key") != F.col("m"))
-        .select(F.col("m").alias("a_id"), F.col("file_key").alias("b_id"))
+        exact_duplicates(f, id_col="file_key", text_col="content")
+        .where(F.col("doc_id") != F.col("group_id"))
+        .select(F.col("group_id").alias("a_id"), F.col("doc_id").alias("b_id"))
     )
     near_e = minhash_neardup_pairs(
         f, k=3, threshold=0.7, id_col="file_key", text_col="content",
@@ -541,52 +529,21 @@ def q_files_components(spark, sf_dir):
 
 
 def q_emb_neardup(spark, sf_dir):
-    """ORACLE FIXTURE (deliberately O(n²)): exact all-pairs cosine, the
-    DuckDB-mirrorable ground truth. The production path at scale is
+    """Exact all-pairs cosine (``operators.ann.cosine_neardup_pairs``): the
+    O(n²) baseline the DuckDB oracle mirrors. The scale path is
     :func:`q_emb_lsh_ann` / ``operators.ann.lsh_cosine_pairs`` (bucketed,
     never crosses the corpus with itself)."""
     # small single-file input: spread the big (join-left) side across cores
     e = _emb(spark, sf_dir).repartition(spark.sparkContext.defaultParallelism)
-    a = e.select(
-        F.col("vec_id").alias("a_id"),
-        F.transform("embedding", lambda x: x.cast("double")).alias("a_v"),
-    )
-    b = e.select(
-        F.col("vec_id").alias("b_id"),
-        F.transform("embedding", lambda x: x.cast("double")).alias("b_v"),
-    )
-    cos = dot(F.col("a_v"), F.col("b_v")) / (
-        F.sqrt(dot(F.col("a_v"), F.col("a_v")))
-        * F.sqrt(dot(F.col("b_v"), F.col("b_v")))
-    )
-    return (
-        a.join(b, F.col("a_id") < F.col("b_id"))
-        .withColumn("cosine", F.round(cos, 6))
-        .where(F.col("cosine") >= 0.3)
-        .select("a_id", "b_id", "cosine")
-    )
+    return cosine_neardup_pairs(e, threshold=0.3)
 
 
 def q_emb_topk(spark, sf_dir):
-    """ORACLE FIXTURE (deliberately brute-force): exact top-k with the
-    full table broadcast as the query side. The production path at scale
-    is :func:`q_emb_topk_ann` / ``operators.ann.lsh_cosine_topk``."""
+    """Exact top-k (``operators.ann.cosine_topk``) with the full table
+    broadcast as the query side. The scale path is :func:`q_emb_topk_ann`
+    / ``operators.ann.lsh_cosine_topk``."""
     e = _emb(spark, sf_dir).repartition(spark.sparkContext.defaultParallelism)
-    n = e.select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
-    q = n.withColumnsRenamed({"vec_id": "query_id", "v": "qv"})
-    cos = dot(F.col("v"), F.col("qv")) / (
-        F.sqrt(dot(F.col("v"), F.col("v"))) * F.sqrt(dot(F.col("qv"), F.col("qv")))
-    )
-    scored = n.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")).select(
-        "query_id", F.col("vec_id").alias("neighbor_id"), F.round(cos, 6).alias("cosine")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= 5)
-    )
+    return cosine_topk(e, e, k=5)
 
 
 def q_emb_lsh_ann(spark, sf_dir):

@@ -4,7 +4,8 @@ Production path: an Iceberg catalog — each stage is
 ``df.writeTo(f"{ns}.{name}").createOrReplace()`` and resume reads the last
 committed snapshot (config-hash match checked against snapshot summary
 properties). This sandbox has no Iceberg runtime jar, so the same contract
-is implemented over partitioned Parquet plus an atomic JSON manifest:
+is implemented over Parquet (N files per stage) plus an atomic JSON
+manifest:
 
     write temp dir -> write manifest.tmp -> os.replace (atomic rename)
 
@@ -53,7 +54,6 @@ class CheckpointCatalog:
         config_hash: str,
         *,
         input_fingerprint: str = "",
-        partition_by: list[str] | None = None,
         metrics: dict | None = None,
         prepartitioned: bool = False,
     ) -> DataFrame:
@@ -111,10 +111,7 @@ class CheckpointCatalog:
         obs = Observation()
         df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
 
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(tmp)
+        df.write.mode("overwrite").parquet(tmp)
         shutil.rmtree(path, ignore_errors=True)
         os.replace(tmp, path)
 
@@ -175,10 +172,3 @@ class CheckpointCatalog:
                 return json.load(f)
         except (FileNotFoundError, json.JSONDecodeError):
             return None
-
-    def invalidate(self, name: str) -> None:
-        try:
-            os.remove(self._manifest(name))
-        except FileNotFoundError:
-            pass
-        shutil.rmtree(self._dir(name), ignore_errors=True)

@@ -36,7 +36,8 @@ def windowed_event_counts(
 
     Returns (window_start, window_end, event_type, n, sum_value). On a
     batch DataFrame the watermark is a no-op and the result equals the
-    plain group-by — the correctness bridge the tests use.
+    plain group-by — the correctness bridge the tests and the
+    ``events_windowed`` DuckDB oracle use.
     """
     src = events.withColumn("ts", F.col("ts").cast("timestamp"))
     if src.isStreaming:

@@ -11,6 +11,7 @@ from spaczz_spark.functions.text import (
     make_lang_id_udf,
     quality_score,
     token_count,
+    word_stats,
 )
 from spaczz_spark.operators.ann import cosine_neardup_pairs, cosine_topk, lsh_cosine_pairs
 from spaczz_spark.operators.components import attach_components, connected_components
@@ -158,7 +159,7 @@ def test_text_functions(spark, docs):
     out = docs.select(
         "doc_id",
         token_count(F.col("text")).alias("n_tok"),
-        quality_score(F.col("text")).alias("q"),
+        quality_score(word_stats(F.col("text"))).alias("q"),
         doc_fingerprint(F.col("text")).alias("fp"),
     ).collect()
     rows = {r["doc_id"]: r for r in out}

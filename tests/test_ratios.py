@@ -226,3 +226,38 @@ def test_lev_kernel_token_fallback_above_bound(spark):
         make_edit_ratio_udf(0, func="levenshtein")("a", "b").alias("r")
     ).collect()[0]["r"]
     assert got == expected == 100  # 1 token edit in 9000 rounds to 100
+
+
+def test_edit_ratio_score_lev_token_path_with_cutoff(monkeypatch):
+    """Above LEV_CHAR_KERNEL_MAX chars the Levenshtein kernel scores
+    whitespace tokens, and its length-gap skip counts tokens, not chars."""
+    from spaczz_spark.operators import verify
+
+    rng = random.Random(7)
+    vocab = [f"w{i}" for i in range(500)]
+    toks = [rng.choice(vocab) for _ in range(8000)]
+    edited = list(toks)
+    for i in rng.sample(range(len(toks)), 400):
+        edited[i] = rng.choice(vocab)
+    a, b = " ".join(toks), " ".join(edited)
+    assert min(len(a), len(b)) > verify.LEV_CHAR_KERNEL_MAX
+    min_r = 74
+    expected = round(
+        ratios.levenshtein_ratio(a.split(), b.split(), score_cutoff=min_r)
+    )
+    assert expected >= min_r  # scored, not cut off
+    assert verify.edit_ratio_score(a, b, min_r, "levenshtein") == expected
+
+    # merge the first 6000 tokens pairwise: 8000 vs 5000 tokens caps the
+    # token ratio at (200*5000 + 8000) // 16000 = 63 < min_r, while the
+    # char gap (3000 spaces of ~38k) alone would allow 92; the skip must
+    # decide the pair without running the DP
+    merged = [toks[i] + toks[i + 1] for i in range(0, 6000, 2)] + toks[6000:]
+    c = " ".join(merged)
+    assert len(c) > verify.LEV_CHAR_KERNEL_MAX
+
+    def no_dp(*args, **kwargs):
+        raise AssertionError("the token length-gap skip should decide this")
+
+    monkeypatch.setattr(verify, "levenshtein_ratio", no_dp)
+    assert verify.edit_ratio_score(a, c, min_r, "levenshtein") == 0
