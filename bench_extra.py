@@ -5,7 +5,9 @@ NOT the driver bench — bench.py stays frozen. This script isolates:
 
   stages   — per-stage walls of the flagship DedupPipeline on the bench
              corpus (fresh checkpoint dir, warm session, repeats, min)
-  noop     — per-query noop-sink walls for the bench query set (repeats)
+  noop     — per-query noop-sink walls for the bench query set (repeats);
+             BX_ONLY=a,b runs those entries of queries.QUERIES instead
+             (with bench.py's tuning where bench.py substitutes one)
 
 Physical plans live in EXPLAIN.md (scripts/explain_audit.py).
 
@@ -89,8 +91,9 @@ def cmd_stages():
     print(json.dumps({"best": best, "all_total": [m["total_sec"] for m in runs]}))
 
 
-def _bench_queries(spark):
-    """Same query set + impl substitutions as bench.py."""
+def _bench_queries(spark, only=None):
+    """Same query set + impl substitutions as bench.py; ``only`` names any
+    ``queries.QUERIES`` entries to run instead of that set."""
     from spaczz_spark import queries as Q
 
     def _bench_emb_topk_ann(spark, sf_dir):
@@ -119,7 +122,7 @@ def _bench_queries(spark):
         "emb_topk_ann", "emb_ivf_ann", "doc_ruler", "media_decode",
         "files_neardup_pairs", "files_substring_pairs", "files_components",
     ]
-    return [(n, impls.get(n, Q.QUERIES[n])) for n in names]
+    return [(n, impls.get(n, Q.QUERIES[n])) for n in only or names]
 
 
 def cmd_noop():
@@ -127,10 +130,7 @@ def cmd_noop():
     reps = int(os.environ.get("BX_REPEATS", "3"))
     only = os.environ.get("BX_ONLY")
     walls: dict[str, list[float]] = {}
-    qs = _bench_queries(spark)
-    if only:
-        wanted = only.split(",")
-        qs = [(n, f) for n, f in qs if n in wanted]
+    qs = _bench_queries(spark, only.split(",") if only else None)
     for _ in range(reps):
         for name, fn in qs:
             spark.sparkContext.setJobDescription(f"bx noop {name}")

@@ -3,7 +3,9 @@
 
 The audit answers the scale questions per operator: are filters/projections
 pushed into the parquet scan, which joins broadcast, where the exchanges
-are, and how wide the whole-stage-codegen spans run.
+are, and how wide the whole-stage-codegen spans run (higher-order
+functions such as transform/aggregate/zip_with never join a span: Spark
+runs them interpreted).
 """
 
 import io
@@ -122,12 +124,14 @@ def main():
     ))
 
     sections.append((
-        "Embedding top-k (codegen dot products + per-query window)",
+        "Embedding top-k (JVM dot products + per-query window)",
         "Check: BroadcastNestedLoopJoin with the small query side "
-        "broadcast; each side is L2-normalized once per row BELOW the "
-        "join, so a pair costs one dot product via transform/aggregate, "
-        "JVM-side (no Python in the scoring path); rank via one window "
-        "Exchange.",
+        "broadcast; each side is L2-normalized BELOW the join in three "
+        "Projects - cast, then `norm` once per row, then the divide, whose "
+        "lambda references `norm#` and holds no zip_with - so a pair costs "
+        "one dot product via zip_with/aggregate, JVM-side but interpreted "
+        "(higher-order functions are CodegenFallback; no Python in the "
+        "scoring path); rank via one window Exchange.",
         grab(Q.q_emb_topk(spark, sf)),
     ))
 
@@ -142,7 +146,8 @@ def main():
     sections.append((
         "Multiprobe LSH top-k ANN (emb_topk_ann)",
         "Check: corpus and query sides each pass through ONE "
-        "ArrowEvalPython (sketch/probe UDFs). Broadcast-sized corpora "
+        "ArrowEvalPython (the one hyperplane-key UDF: no probes on the "
+        "corpus side, n_probes on the query side). Broadcast-sized corpora "
         "(r7): the grouped inverted index (bucket -> members) broadcasts, "
         "only the slim probe rows shuffle (repartition by query_id), "
         "per-query array_distinct dedupes with no pair-level exchange, "
@@ -151,7 +156,9 @@ def main():
         "table, with WindowGroupLimit pruning to k rows per partition "
         "before the rank Exchange. Above the broadcast budget the former "
         "shuffle join on the bucket key is kept (no broadcast of the "
-        "corpus, no nested-loop cross). Exact cosine stays in codegen.",
+        "corpus, no nested-loop cross); the gate is a row count of the "
+        "corpus ids. Exact cosine is scored JVM-side (interpreted "
+        "zip_with/aggregate) on vectors normalized once per row.",
         grab(Q.q_emb_topk_ann(spark, sf)),
     ))
 

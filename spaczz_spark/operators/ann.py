@@ -6,18 +6,22 @@ S6 — ``SimilaritySearcher.compare`` = cosine of pooled vectors,
 
 - ``cosine_topk``        exact brute-force top-k neighbors (the baseline):
   a broadcast cross-join of the query set against the corpus with the dot
-  product computed JVM-side (``aggregate(zip_with(...))`` — whole-stage
-  codegen, no Python), then a per-query window top-k.
+  product computed JVM-side (``aggregate(zip_with(...))`` — interpreted
+  higher-order functions, no Python), then a per-query window top-k.
 - ``cosine_neardup_pairs`` exact all-pairs cosine >= threshold (self-join
   form of the same plan). Both exact operators are DuckDB-oracle-gated
   (``queries.q_emb_topk`` / ``q_emb_neardup``).
-- ``lsh_cosine_pairs``   the scale path: random-hyperplane LSH — sign-bit
-  sketches computed in a vectorized numpy pandas UDF, multi-table bucket
-  join, exact cosine re-verification. Verified output ⊆ exact output with
-  tunable recall (more tables/narrower bands -> higher recall).
+- ``lsh_cosine_pairs`` / ``lsh_cosine_topk`` the scale paths:
+  random-hyperplane LSH — sign-bit keys computed in one vectorized numpy
+  pandas UDF, multi-table bucket join, exact cosine re-verification.
+  Verified output ⊆ exact output with tunable recall (more tables/narrower
+  bands -> higher recall).
+- ``ivf_cosine_topk``    inverted-file top-k over trained centroids.
 
 All cosine arithmetic is done on L2-normalized vectors so the dot product
-IS the cosine; normalization happens once per row, JVM-side.
+IS the cosine. ``_normalized`` projects each row's norm once, in its own
+Project below the division, so the per-element divide does not recompute
+it.
 """
 
 from __future__ import annotations
@@ -32,7 +36,6 @@ from ..functions.layout import ensure_min_partitions
 from .lsh import pairs_from_buckets
 
 __all__ = [
-    "l2_normalize",
     "dot",
     "cosine_topk",
     "cosine_neardup_pairs",
@@ -52,19 +55,84 @@ def dot(a: Column, b: Column) -> Column:
     )
 
 
-def l2_normalize(v: Column) -> Column:
-    """JVM-side L2 normalization (zero vectors pass through unchanged)."""
-    norm = F.sqrt(dot(v, v))
-    return F.when(norm > 0, F.transform(v, lambda x: x / norm)).otherwise(v)
-
-
 def _normalized(docs: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    return docs.select(
+    """(vec_id, nvec): the double-cast vector divided by its L2 norm (zero
+    vectors pass through unchanged). ``norm`` is projected on its own and
+    referenced twice below, so CollapseProject keeps it out of the
+    ``transform`` lambda: one O(dim) norm per row, not one per element.
+    The array cast is a codegen'd ``Cast`` and the norm a single
+    ``aggregate`` (``acc + x * x``, the same left-to-right double sum as
+    ``dot(v, v)``), so only two interpreted higher-order passes touch each
+    element."""
+    v = docs.select(
         F.col(id_col).alias("vec_id"),
-        l2_normalize(F.transform(F.col(vec_col), lambda x: x.cast("double"))).alias(
-            "nvec"
-        ),
+        F.col(vec_col).cast("array<double>").alias("v"),
     )
+    sq = F.aggregate("v", F.lit(0.0), lambda acc, x: acc + x * x)
+    norm = F.col("norm")
+    return v.withColumn("norm", F.sqrt(sq)).select(
+        "vec_id",
+        F.when(norm > 0, F.transform("v", lambda x: x / norm))
+        .otherwise(F.col("v"))
+        .alias("nvec"),
+    )
+
+
+def _query_side(queries: DataFrame, query_id_col: str, vec_col: str) -> DataFrame:
+    """(query_id, qvec): the normalized query vectors."""
+    return _normalized(queries, query_id_col, vec_col).withColumnsRenamed(
+        {"vec_id": "query_id", "nvec": "qvec"}
+    )
+
+
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """Per-query top-k of (query_id, neighbor_id, cosine) rows; ties broken
+    by neighbor id for determinism."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("cosine"), F.asc("neighbor_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "cosine", "rank")
+    )
+
+
+def _score_topk(cand: DataFrame, q: DataFrame, c: DataFrame, k: int) -> DataFrame:
+    """Exact cosine of every (query_id, neighbor_id) candidate, then the
+    per-query top-k — the tail of both approximate top-k operators."""
+    scored = (
+        cand.join(q, "query_id")
+        .join(c.withColumnsRenamed({"vec_id": "neighbor_id"}), "neighbor_id")
+        .select(
+            "query_id",
+            "neighbor_id",
+            F.round(dot("nvec", "qvec"), 6).alias("cosine"),
+        )
+    )
+    return _rank_topk(scored, k)
+
+
+def _pair_sides(n: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The a and b sides of a pair join over normalized vectors."""
+    return (
+        n.withColumnsRenamed({"vec_id": "a_id", "nvec": "a_vec"}),
+        n.withColumnsRenamed({"vec_id": "b_id", "nvec": "b_vec"}),
+    )
+
+
+def _threshold_pairs(joined: DataFrame, threshold: float) -> DataFrame:
+    """(a_id, b_id, cosine) of joined pair rows with cosine >= threshold."""
+    return (
+        joined.withColumn("cosine", F.round(dot("a_vec", "b_vec"), 6))
+        .where(F.col("cosine") >= threshold)
+        .select("a_id", "b_id", "cosine")
+    )
+
+
+def _dim(df: DataFrame, vec_col: str) -> int:
+    """Vector width, read from the first row."""
+    return int(df.select(F.size(vec_col).alias("d")).first()["d"])
 
 
 def cosine_topk(
@@ -80,7 +148,7 @@ def cosine_topk(
     """Exact top-k cosine neighbors for each query vector.
 
     Plan: broadcast the (small) query side against the corpus — a map-side
-    nested-loop with codegen'd dot products, no shuffle of the corpus — then
+    nested-loop with JVM-side dot products, no shuffle of the corpus — then
     one shuffle for the per-query top-k window. Ties broken by neighbor id
     for determinism. Output: (query_id, neighbor_id, cosine, rank).
     Pass ``exclude_self=False`` when the query table's ids live in a
@@ -88,9 +156,7 @@ def cosine_topk(
     unrelated vector, not a self-match).
     """
     c = _normalized(corpus, id_col, vec_col)
-    q = _normalized(queries, query_id_col, vec_col).withColumnsRenamed(
-        {"vec_id": "query_id", "nvec": "qvec"}
-    )
+    q = _query_side(queries, query_id_col, vec_col)
     join_cond = (
         F.col("vec_id") != F.col("query_id") if exclude_self else F.lit(True)
     )
@@ -99,14 +165,7 @@ def cosine_topk(
         F.col("vec_id").alias("neighbor_id"),
         F.round(dot("nvec", "qvec"), 6).alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _rank_topk(scored, k)
 
 
 def cosine_neardup_pairs(
@@ -122,57 +181,37 @@ def cosine_neardup_pairs(
     :func:`lsh_cosine_pairs` for large corpora. The self-join broadcasts one
     side when small enough (AQE decides). Output: (a_id, b_id, cosine).
     """
-    n = _normalized(docs, id_col, vec_col)
-    a = n.withColumnsRenamed({"vec_id": "a_id", "nvec": "a_vec"})
-    b = n.withColumnsRenamed({"vec_id": "b_id", "nvec": "b_vec"})
-    return (
-        a.join(b, F.col("a_id") < F.col("b_id"))
-        .withColumn("cosine", F.round(dot("a_vec", "b_vec"), 6))
-        .where(F.col("cosine") >= threshold)
-        .select("a_id", "b_id", "cosine")
-    )
+    a, b = _pair_sides(_normalized(docs, id_col, vec_col))
+    return _threshold_pairs(a.join(b, F.col("a_id") < F.col("b_id")), threshold)
 
 
-# Corpora whose optimizer-estimated size is below this broadcast their
-# grouped inverted index (bucket_key -> member array) in the top-k
-# candidate stage instead of shuffle-joining exploded bucket rows — see
-# lsh_cosine_topk. The value (bytes) mirrors the order of magnitude of
-# Spark's own broadcast threshold reasoning (the index is ~n_tables longs
-# per corpus row).
+# Corpora whose inverted index (~16 B per (key, id) entry, entries_per_row
+# entries per corpus row) is below this many bytes broadcast their grouped
+# index in the top-k candidate stage instead of shuffle-joining exploded
+# bucket rows — see lsh_cosine_topk. The value mirrors the order of
+# magnitude of Spark's own broadcast threshold reasoning.
 ANN_BROADCAST_INDEX_BYTES = 32 << 20
 
 
-def _plan_size_bytes(df: DataFrame) -> int:
-    """Optimizer-estimated size of ``df`` (same statistic Spark's planner
-    uses for broadcast decisions); 'unknown' maps to huge so callers fall
-    back to the shuffle plan."""
-    try:
-        return int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:  # pragma: no cover - stats always exist in practice
-        return 1 << 62
-
-
 def _index_fits_broadcast(
-    corpus: DataFrame, dim: int, entries_per_row: int
+    corpus: DataFrame, id_col: str, entries_per_row: int
 ) -> bool:
-    """Gate the broadcast-index plan on the estimated size of the INDEX
-    (rows x entries_per_row x ~16 B per (key, id) entry), not the raw
-    corpus bytes — a low-dim corpus can be small on disk while its
-    multi-table inverted index is large, and vice versa. Row count is
-    derived from the plan-stat size over the known per-row vector width;
-    unknown stats map to huge (shuffle plan)."""
-    est_rows = _plan_size_bytes(corpus) / max(dim * 4 + 8, 1)
-    return est_rows * entries_per_row * 16 <= ANN_BROADCAST_INDEX_BYTES
+    """Gate the broadcast-index plan on the size of the INDEX (rows x
+    entries_per_row x ~16 B per (key, id) entry), not the raw corpus bytes
+    — a low-dim corpus can be small on disk while its multi-table inverted
+    index is large, and vice versa. The row count is one job over the id
+    column (a metadata scan on parquet)."""
+    rows = corpus.select(id_col).count()
+    return rows * entries_per_row * 16 <= ANN_BROADCAST_INDEX_BYTES
 
 
-def _plane_matrix(dim: int, n_bits: int, n_tables: int, seed: int) -> np.ndarray:
-    """Deterministic (dim, n_tables*n_bits) Gaussian hyperplane matrix —
-    shared by the corpus sketch and the query multiprobe UDFs so both sides
-    hash into the same buckets."""
-    rng = np.random.RandomState(seed)
-    return rng.standard_normal((dim, n_tables * n_bits))
+def _vector_matrix(vecs: pd.Series, dim: int) -> np.ndarray:
+    """(batch, dim) float64 matrix of an Arrow batch of vectors; a null
+    vector becomes a zero row."""
+    return np.stack(
+        [np.asarray(v, dtype=np.float64) if v is not None else
+         np.zeros(dim) for v in vecs]
+    )
 
 
 def _mix_table_keys(keys: np.ndarray, n_tables: int) -> np.ndarray:
@@ -181,35 +220,15 @@ def _mix_table_keys(keys: np.ndarray, n_tables: int) -> np.ndarray:
     return keys * np.int64(n_tables + 1) + np.arange(n_tables, dtype=np.int64)
 
 
-def make_hyperplane_sketch_udf(dim: int, n_bits: int = 16, n_tables: int = 8,
-                               seed: int = 42):
-    """pandas UDF: embedding -> array of n_tables bucket keys (sign sketches).
-
-    One numpy matmul per Arrow batch against a fixed (dim, n_tables*n_bits)
-    Gaussian matrix; bits packed per table into an int64 bucket key.
-    """
-    planes = _plane_matrix(dim, n_bits, n_tables, seed)
-    weights = (1 << np.arange(n_bits, dtype=np.int64))
-
-    from pyspark.sql.types import ArrayType, LongType
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def sketch(vecs: pd.Series) -> pd.Series:
-        mat = np.stack(
-            [np.asarray(v, dtype=np.float64) if v is not None else
-             np.zeros(dim) for v in vecs]
-        )
-        signs = (mat @ planes) > 0  # (batch, tables*bits)
-        signs = signs.reshape(len(mat), n_tables, n_bits)
-        keys = (signs * weights[None, None, :]).sum(axis=2).astype(np.int64)
-        return pd.Series(list(_mix_table_keys(keys, n_tables)))
-
-    return sketch
-
-
 def make_hyperplane_probe_udf(dim: int, n_bits: int = 8, n_tables: int = 16,
                               seed: int = 42, n_probes: int = 2):
-    """pandas UDF: embedding -> array of n_tables*(1+n_probes) probe keys.
+    """pandas UDF: embedding -> array of n_tables*(1+n_probes) bucket keys.
+
+    One numpy matmul per Arrow batch against a deterministic (dim,
+    n_tables*n_bits) Gaussian hyperplane matrix (same ``seed`` -> same
+    buckets on both join sides); sign bits packed per table into an int64
+    key. With ``n_probes=0`` this is the plain one-key-per-table sketch the
+    indexed side uses.
 
     Multiprobe LSH (Lv et al., VLDB'07): besides each table's base bucket,
     probe the buckets reached by flipping the ``n_probes`` sign bits whose
@@ -219,7 +238,9 @@ def make_hyperplane_probe_udf(dim: int, n_bits: int = 8, n_tables: int = 16,
     indexed side, which is what matters when the corpus is 10^12 rows and
     the query set is small.
     """
-    planes = _plane_matrix(dim, n_bits, n_tables, seed)
+    planes = np.random.RandomState(seed).standard_normal(
+        (dim, n_tables * n_bits)
+    )
     weights = (1 << np.arange(n_bits, dtype=np.int64))
     n_probes = min(n_probes, n_bits)
 
@@ -227,10 +248,7 @@ def make_hyperplane_probe_udf(dim: int, n_bits: int = 8, n_tables: int = 16,
 
     @F.pandas_udf(ArrayType(LongType()))
     def probe(vecs: pd.Series) -> pd.Series:
-        mat = np.stack(
-            [np.asarray(v, dtype=np.float64) if v is not None else
-             np.zeros(dim) for v in vecs]
-        )
+        mat = _vector_matrix(vecs, dim)
         proj = (mat @ planes).reshape(len(mat), n_tables, n_bits)
         keys = ((proj > 0) * weights[None, None, :]).sum(axis=2).astype(np.int64)
         all_keys = [keys]
@@ -252,7 +270,6 @@ def lsh_cosine_topk(
     queries: DataFrame | None = None,
     *,
     k: int = 10,
-    dim: int | None = None,
     n_bits: int = 8,
     n_tables: int = 16,
     n_probes: int = 2,
@@ -288,20 +305,12 @@ def lsh_cosine_topk(
     """
     if exclude_self is None:
         exclude_self = queries is None
-    if queries is None:
-        queries = corpus
-        query_id_col = query_id_col or id_col
-    else:
-        query_id_col = query_id_col or id_col
-    if dim is None:
-        first = corpus.select(F.size(vec_col).alias("d")).first()
-        dim = int(first["d"])
+    q_src = corpus if queries is None else queries
+    dim = _dim(corpus, vec_col)
 
     c = _normalized(corpus, id_col, vec_col)
-    q = _normalized(queries, query_id_col, vec_col).withColumnsRenamed(
-        {"vec_id": "query_id", "nvec": "qvec"}
-    )
-    sketch = make_hyperplane_sketch_udf(dim, n_bits, n_tables, seed)
+    q = _query_side(q_src, query_id_col or id_col, vec_col)
+    sketch = make_hyperplane_probe_udf(dim, n_bits, n_tables, seed, 0)
     probe = make_hyperplane_probe_udf(dim, n_bits, n_tables, seed, n_probes)
     c_buckets = c.select(
         F.col("vec_id").alias("neighbor_id"),
@@ -310,7 +319,7 @@ def lsh_cosine_topk(
     q_buckets = q.select(
         "query_id", F.explode(probe("qvec")).alias("bucket_key")
     )
-    if _index_fits_broadcast(corpus, dim, n_tables):
+    if _index_fits_broadcast(corpus, id_col, n_tables):
         # Broadcast-index plan (r7, guide §3.1/§2.4): with a dense bucket
         # config the exploded bucket join emits tables*(1+probes)*|bucket|
         # rows per query (24.5M rows for 2,000 vectors at the production
@@ -345,31 +354,13 @@ def lsh_cosine_topk(
         if exclude_self:
             cand = cand.where(F.col("query_id") != F.col("neighbor_id"))
         cand = cand.select("query_id", "neighbor_id").distinct()
-    scored = (
-        cand.join(q.select("query_id", "qvec"), "query_id")
-        .join(c.withColumnsRenamed({"vec_id": "neighbor_id", "nvec": "nvec"}),
-              "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(dot("nvec", "qvec"), 6).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _score_topk(cand, q, c, k)
 
 
 def lsh_cosine_pairs(
     docs: DataFrame,
     *,
     threshold: float = 0.95,
-    dim: int | None = None,
     n_bits: int = 16,
     n_tables: int = 8,
     seed: int = 42,
@@ -391,26 +382,18 @@ def lsh_cosine_pairs(
     corpus size, otherwise the probabilistic recall bound silently stops
     holding for mega-buckets.
     """
-    if dim is None:
-        first = docs.select(F.size(vec_col).alias("d")).first()
-        dim = int(first["d"])
+    sketch = make_hyperplane_probe_udf(
+        _dim(docs, vec_col), n_bits, n_tables, seed, 0
+    )
     # single-file inputs scan as one partition, serializing the sketch UDF
     n = _normalized(ensure_min_partitions(docs), id_col, vec_col)
-    sketch = make_hyperplane_sketch_udf(dim, n_bits, n_tables, seed)
     buckets = n.select(
         F.col("vec_id").alias("file_id"),
         F.explode(sketch("nvec")).alias("bucket_key"),
     )
     cand = pairs_from_buckets(buckets, bucket_cap, star_cap=star_cap)
-    a = n.withColumnsRenamed({"vec_id": "a_id", "nvec": "a_vec"})
-    b = n.withColumnsRenamed({"vec_id": "b_id", "nvec": "b_vec"})
-    return (
-        cand.join(a, "a_id")
-        .join(b, "b_id")
-        .withColumn("cosine", F.round(dot("a_vec", "b_vec"), 6))
-        .where(F.col("cosine") >= threshold)
-        .select("a_id", "b_id", "cosine")
-    )
+    a, b = _pair_sides(n)
+    return _threshold_pairs(cand.join(a, "a_id").join(b, "b_id"), threshold)
 
 
 def train_ivf_centroids(
@@ -471,11 +454,7 @@ def _make_cell_udf(centroids: np.ndarray, n_probe: int = 1):
 
     @F.pandas_udf(ArrayType(IntegerType()))
     def cells(vecs: pd.Series) -> pd.Series:
-        mat = np.stack(
-            [np.asarray(v, dtype=np.float64) if v is not None else
-             np.zeros(centroids.shape[1]) for v in vecs]
-        )
-        sims = mat @ centroids.T
+        sims = _vector_matrix(vecs, centroids.shape[1]) @ centroids.T
         if n_probe == 1:
             best = sims.argmax(axis=1).astype(np.int32)
             return pd.Series([[int(b)] for b in best])
@@ -511,14 +490,13 @@ def ivf_cosine_topk(
 
     Plan shape: one broadcast-sized centroid matrix inside two pandas UDFs,
     one equi-join on the cell id (the inverted-list lookup — shuffles only
-    probed cells), exact cosine in codegen, one window for the top-k.
+    probed cells), exact cosine JVM-side, one window for the top-k.
 
     ``exclude_self`` follows :func:`lsh_cosine_topk`: self-matches are
     dropped only in corpus-queries-itself mode (or when explicitly asked).
     """
     if exclude_self is None:
         exclude_self = queries is None
-    query_id_col = query_id_col or id_col
     q_src = corpus if queries is None else queries
     if centroids is None:
         centroids = train_ivf_centroids(
@@ -526,9 +504,7 @@ def ivf_cosine_topk(
             id_col=id_col, vec_col=vec_col,
         )
     c = _normalized(corpus, id_col, vec_col)
-    q = _normalized(q_src, query_id_col, vec_col).withColumnsRenamed(
-        {"vec_id": "query_id", "nvec": "qvec"}
-    )
+    q = _query_side(q_src, query_id_col or id_col, vec_col)
     assign_udf = _make_cell_udf(centroids, 1)
     probe_udf = _make_cell_udf(centroids, n_probe)
     c_cells = c.select(
@@ -536,7 +512,7 @@ def ivf_cosine_topk(
         F.get(assign_udf("nvec"), 0).alias("cell"),
     )
     q_cells = q.select("query_id", F.explode(probe_udf("qvec")).alias("cell"))
-    if _index_fits_broadcast(corpus, centroids.shape[1], 1):
+    if _index_fits_broadcast(corpus, id_col, 1):
         # Broadcast-inverted-lists plan (r7): the cell join has at most
         # n_cells distinct keys, so the shuffle plan caps parallelism at
         # n_cells and is skew-prone (hot cells). When the corpus fits the
@@ -559,21 +535,4 @@ def ivf_cosine_topk(
         cand = q_cells.join(c_cells, "cell")
     if exclude_self:
         cand = cand.where(F.col("query_id") != F.col("neighbor_id"))
-    cand = cand.select("query_id", "neighbor_id")
-    scored = (
-        cand.join(q.select("query_id", "qvec"), "query_id")
-        .join(c.withColumnsRenamed({"vec_id": "neighbor_id"}), "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(dot("nvec", "qvec"), 6).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _score_topk(cand.select("query_id", "neighbor_id"), q, c, k)

@@ -1,11 +1,11 @@
-"""Run configuration with the reference's threshold-resolution semantics.
+"""Run configuration of the dedup pipeline.
 
-The reference resolves ``min_r -> (min_r1, min_r2)`` and coherence-checks
-them against ``thresh`` (reference: ``phrasesearcher.py:228-321``, defaults
-``min_r=75 -> min_r1=round(75/1.5)=50, min_r2=75, thresh=100``). The dedup
-pipeline keeps those exact semantics: min_r1 is the recall-oriented scan
-gate (it parameterizes how aggressive the LSH config must be), min_r2 the
-verification gate, thresh the skip-verify fast path (sha256 equality).
+``min_r2`` is the verification gate (reference: ``phrasesearcher.py:290-297``,
+``min_r2 = min_r`` with the default ``min_r=75``): a candidate pair whose
+edit ratio (or partial ratio, in the containment stage) is below it is not
+an edge. The reference's scan gate and skip-verify cut-off are not
+fields: the LSH stage is tuned by ``bands`` / ``rows``, and sha256-equal
+pairs always short-circuit to 100. The per-pattern matcher keeps both.
 
 ``config_hash`` is the resume key: any change to a semantic knob invalidates
 downstream checkpoints.
@@ -15,9 +15,7 @@ from __future__ import annotations
 
 import hashlib
 import json
-from dataclasses import asdict, dataclass, field
-
-from ..phrasesearch import check_ratios, set_ratios
+from dataclasses import asdict, dataclass
 
 __all__ = ["DedupConfig"]
 
@@ -33,11 +31,8 @@ class DedupConfig:
     seed: int = 42
     # simhash (64-bit)
     max_hamming: int = 3
-    # verification thresholds (reference semantics)
-    min_r: int = 75
-    min_r1: int | None = None
-    min_r2: int | None = None
-    thresh: int = 100
+    # verification gates
+    min_r2: int = 75
     jaccard_min: float = 0.7
     jaccard_floor: float = 0.2
     # verify kernel: "indel" (reference S1 semantics) or "levenshtein"
@@ -57,9 +52,10 @@ class DedupConfig:
     # checkpoint-layout version: folded into config_hash so schema changes
     # to stage outputs (e.g. 5: `content` dropped from the `signatures`
     # checkpoint — verify joins text from `normalized` instead) and config
-    # field changes (6: unread `simhash_bits`/`shuffle_partitions` removed)
+    # field changes (6: unread `simhash_bits`/`shuffle_partitions` removed;
+    # 7: the unread reference ratio fields removed, `min_r2` read directly)
     # invalidate incompatible checkpoints from older engine builds
-    layout_version: int = 6
+    layout_version: int = 7
 
     def __post_init__(self):
         if self.bands * self.rows != self.num_perm:
@@ -67,17 +63,13 @@ class DedupConfig:
                 f"bands*rows must equal num_perm "
                 f"({self.bands}*{self.rows} != {self.num_perm})"
             )
+        if not 0 <= self.min_r2 <= 100:
+            raise ValueError(f"min_r2 must be in 0..100, got {self.min_r2}")
         if self.ratio_func not in ("indel", "levenshtein"):
             raise ValueError(
                 f"ratio_func must be 'indel' or 'levenshtein', "
                 f"got {self.ratio_func!r}"
             )
-
-    def resolved_ratios(self) -> tuple[int, int, int]:
-        """(min_r1, min_r2, thresh) via the reference's resolution rules."""
-        r1, r2 = set_ratios(self.min_r, self.min_r1, self.min_r2)
-        # flex>0 equivalent: the pipeline always has a verify phase
-        return check_ratios(r1, r2, self.thresh, flex=1)
 
     def config_hash(self) -> str:
         payload = json.dumps(asdict(self), sort_keys=True)

@@ -72,7 +72,7 @@ def recommended_session(
         # components stage's provenance collect_set("stage") per file_id,
         # pair_prf's per-component collect_list, exact_duplicates' and
         # fingerprint_duplicates' member lists, and the ANN / ruler-
-        # provenance groupings. Spark's default fallback threshold (128
+        # provenance groupings. Spark's default fallback limit (128
         # keys per partition) demotes them to sort-based aggregation
         # almost at once on file_id-keyed inputs and re-pays a sort per
         # aggregate. 4M keys/partition is ~100MB worst case.
@@ -180,7 +180,6 @@ class DedupPipeline:
         (repo, path, commit, lang, file_id, content_sha256, component_id,
         stage provenance) assignment table."""
         cfg = self.config
-        _, min_r2, _ = cfg.resolved_ratios()
         self._input_fp = self.input_fingerprint(files)
 
         norm = self._stage("normalized", lambda: normalize(files))
@@ -340,7 +339,7 @@ class DedupPipeline:
             v1 = verify_pairs(
                 sim_cand,
                 signatures,
-                min_r2=min_r2,
+                min_r2=cfg.min_r2,
                 jaccard_min=cfg.jaccard_min,
                 jaccard_floor=cfg.jaccard_floor,
                 ratio_func=cfg.ratio_func,
@@ -353,7 +352,7 @@ class DedupPipeline:
                 # S2 semantics: edited near-containment scores like the
                 # reference's partial_ratio, gated at min_r2; the
                 # oracle-exact config disables it (not SQL-expressible)
-                min_partial=min_r2 if cfg.substring_partial else None,
+                min_partial=cfg.min_r2 if cfg.substring_partial else None,
                 k=cfg.substring_k,
                 content_df=content_df,
             )

@@ -66,7 +66,6 @@ class IncrementalDedup:
     def process_batch(self, batch: DataFrame, batch_id: int = 0) -> DataFrame:
         """Process one micro-batch of new files; returns new verified pairs."""
         cfg = self.config
-        _, min_r2, _ = cfg.resolved_ratios()
         # materialized once (r7): referenced by the candidate join, the
         # verify joins, the new-id semi-join and the final append — each
         # reference re-ran the Arrow signature UDF over the batch (the
@@ -92,7 +91,7 @@ class IncrementalDedup:
         ).distinct()
         verified = verify_pairs(
             touching, corpus,
-            min_r2=min_r2, jaccard_min=cfg.jaccard_min,
+            min_r2=cfg.min_r2, jaccard_min=cfg.jaccard_min,
             jaccard_floor=cfg.jaccard_floor, ratio_func=cfg.ratio_func,
         )
         # Materialize `verified` BEFORE appending the batch signatures:

@@ -6,7 +6,9 @@ refactor cannot silently undo them:
 - ensure_min_partitions spreads single-partition inputs and is a strict
   no-op (same object) on well-partitioned ones;
 - the ANN top-k broadcast-index plan returns exactly the shuffle plan's
-  rows (candidate-set equality is the whole correctness argument);
+  rows (candidate-set equality is the whole correctness argument); each
+  test forces both plans by setting ``ANN_BROADCAST_INDEX_BYTES`` above
+  and below the corpus row-count gate;
 - the pipeline's signatures checkpoint carries no `content` column (text
   is checkpointed once, in `normalized`), yet verify still resolves
   content for its kernel/phase-B joins.

@@ -105,6 +105,51 @@ def test_cosine_topk(spark):
     assert best[3] == 2  # only one with positive y component
 
 
+def test_normalized_matches_per_row_reference_and_projects_norm_once(spark):
+    """Every cosine operator scores ``_normalized`` vectors. At dim 768 they
+    must equal, bit for bit, a per-row reference with the same arithmetic
+    order (cast to double, multiply, left-to-right sum from 0.0, sqrt,
+    divide; zero vectors pass through). The norm must be its own projected
+    column: the expression that divides by it carries no ``zip_with``,
+    i.e. the O(dim) norm is not recomputed once per element."""
+    import io
+    import math
+    from contextlib import redirect_stdout
+
+    import numpy as np
+
+    from spaczz_spark.operators.ann import _normalized
+
+    dim = 768
+    rng = np.random.RandomState(31)
+    mat = rng.standard_normal((24, dim)).astype(np.float32)
+    rows = [(i, [float(x) for x in v]) for i, v in enumerate(mat)]
+    rows.append((len(rows), [0.0] * dim))
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+    def reference(vec):
+        acc = 0.0
+        for x in vec:
+            acc += x * x
+        norm = math.sqrt(acc)
+        return [x / norm for x in vec] if norm > 0 else list(vec)
+
+    n = _normalized(df, "vec_id", "embedding")
+    got = {r["vec_id"]: r["nvec"] for r in n.collect()}
+    assert len(got) == len(rows)
+    for i, vec in rows:
+        assert got[i] == reference(vec), i
+    assert got[len(rows) - 1] == [0.0] * dim
+
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        n.explain("formatted")
+    nvec_lines = [ln for ln in buf.getvalue().splitlines() if " AS nvec#" in ln]
+    assert len(nvec_lines) == 1, nvec_lines
+    assert "/ norm#" in nvec_lines[0], nvec_lines[0]
+    assert "zip_with" not in nvec_lines[0], nvec_lines[0]
+
+
 def test_cosine_neardup_and_lsh_agree(spark):
     import numpy as np
 
@@ -465,11 +510,7 @@ def test_ivf_training_sample_is_random_not_prefix(spark):
     both regions and keep recall >= 0.9 overall."""
     import numpy as np
 
-    from spaczz_spark.operators.ann import (
-        ivf_cosine_topk,
-        l2_normalize,
-        train_ivf_centroids,
-    )
+    from spaczz_spark.operators.ann import ivf_cosine_topk, train_ivf_centroids
 
     rng = np.random.RandomState(23)
     center_a = rng.standard_normal(16)

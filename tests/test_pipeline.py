@@ -107,6 +107,22 @@ def test_config_change_invalidates_checkpoints(spark, tiny_files, tmp_path_facto
     assert not any(k.endswith("_resumed") for k in pipe2.metrics), pipe2.metrics
 
 
+def test_config_verify_gate_is_min_r2_only(tmp_path):
+    """``min_r2`` is the pipeline's one ratio field: it is range-checked, and
+    a config JSON carrying a removed reference ratio key fails to load."""
+    import json
+
+    assert DedupConfig().min_r2 == 75
+    for bad in (-1, 101):
+        with pytest.raises(ValueError, match="min_r2"):
+            DedupConfig(min_r2=bad)
+    for old_key in ("min_r", "min_r1", "thresh"):
+        path = tmp_path / f"{old_key}.json"
+        path.write_text(json.dumps({old_key: 75}))
+        with pytest.raises(TypeError):
+            DedupConfig.from_json(str(path))
+
+
 def test_empty_shingle_pairs_do_not_divide_by_zero(spark):
     """Token-free (whitespace-only) files share the sentinel MinHash and
     always become LSH candidates; the Jaccard expression must not 0/0 under
