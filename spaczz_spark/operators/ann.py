@@ -347,13 +347,14 @@ def lsh_cosine_topk(
             )
             .select("query_id", F.explode("ns").alias("neighbor_id"))
         )
-        if exclude_self:
-            cand = cand.where(F.col("query_id") != F.col("neighbor_id"))
     else:
-        cand = q_buckets.join(c_buckets, "bucket_key")
-        if exclude_self:
-            cand = cand.where(F.col("query_id") != F.col("neighbor_id"))
-        cand = cand.select("query_id", "neighbor_id").distinct()
+        cand = (
+            q_buckets.join(c_buckets, "bucket_key")
+            .select("query_id", "neighbor_id")
+            .distinct()
+        )
+    if exclude_self:
+        cand = cand.where(F.col("query_id") != F.col("neighbor_id"))
     return _score_topk(cand, q, c, k)
 
 
