@@ -59,19 +59,21 @@ def main():
         "band keys are packed JVM-side; scan reads only the needed columns.",
         grab(banded),
     ))
-    # minhash_candidates materializes the sized (bucket_key, fid, bsize,
-    # bmin) window table with an eager localCheckpoint; this plan is the
-    # pair join and star projection over it
+    # minhash_candidates checkpoints the sized (bucket_key, fid, bsize,
+    # bmin) window table lazily; this plan is the pair join and star
+    # projection over it
     cand = minhash_candidates(sig, dedup=False)
     sections.append((
         "MinHash LSH candidates — one salted all-pairs join over the sized "
         "table",
-        "Check: the signature UDF + explode + exchange + window run ONCE "
-        "in the materialization job (the window plan beat a grouped-array "
-        "aggregation 2.4-3.7x at scale4, see "
-        "BENCH/profile_candidates_scale4.json); this plan reads the "
-        "checkpointed RDD (Scan ExistingRDD) instead of recomputing the "
-        "window subtree per reference, and has exactly ONE join: the "
+        "Check: the signature UDF + explode + exchange + window run ONCE: "
+        "the sized table is checkpointed lazily, so no job materializes it "
+        "before its first consumer (AQE still runs the window's "
+        "shuffle-map stage when it plans the checkpoint). The window plan "
+        "beat a grouped-array aggregation 2.4-3.7x at scale4, see "
+        "BENCH/profile_candidates_scale4.json. This plan reads the "
+        "checkpointed RDD (Scan ExistingRDD) at every reference instead of "
+        "recomputing the window subtree, and has exactly ONE join: the "
         "all-pairs self-join on (bucket_key, salt), whose b side is the "
         "Generate of the salt sequence (1 salt up to bucket_cap, N_SALT "
         "above). Buckets above star_cap bypass the join as a star "

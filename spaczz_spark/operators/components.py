@@ -83,6 +83,7 @@ def _checkpoint_with_checksum(edges: DataFrame) -> tuple[DataFrame, tuple[int, i
         F.count(F.lit(1)).alias("n"),
         F.expr("bit_xor(xxhash64(u, v))").alias("x"),
     )
+    # eager: the driver needs the checksum now to decide convergence
     checkpointed = observed.localCheckpoint()
     got = obs.get
     return checkpointed, (int(got["n"]), int(got["x"] or 0))

@@ -160,18 +160,18 @@ def _doc_signatures(
     )
     # fused single-pass UDF: one ArrowEvalPython node (no chained-runner
     # deadlock shape, shingles cross the Arrow boundary once — see
-    # functions.signatures.make_fused_signature_udf). Materialized ONCE
-    # (r7): the candidate + verify consumers reference this table up to 7
-    # times, and the nondeterministic UDF marker blocks exchange/subtree
-    # reuse, so each reference re-ran the full Arrow signature pass over
-    # the corpus (7 ArrowEvalPython nodes in the doc_minhash_neardup
-    # plan). This is the standalone-operator analog of the pipeline's
-    # committed `signatures` checkpoint. Content is dropped first — no
-    # consumer of the signature table needs it, so the raw text never
-    # enters the materialized footprint.
+    # functions.signatures.make_fused_signature_udf). Materialized once:
+    # the candidate + verify consumers reference this table up to 7 times,
+    # and the nondeterministic UDF marker blocks exchange/subtree reuse, so
+    # each reference would re-run the full Arrow signature pass over the
+    # corpus. Lazy, like every intermediate the driver does not need at
+    # once: computed inside the first job that consumes it. This is the
+    # standalone-operator analog of the pipeline's committed `signatures`
+    # checkpoint. Content is dropped first — no consumer of the signature
+    # table needs it, so the raw text never enters the footprint.
     return with_fused_signatures(base, k, num_perm, seed).drop(
         "content"
-    ).localCheckpoint()
+    ).localCheckpoint(eager=False)
 
 
 def _verify_jaccard(

@@ -76,17 +76,18 @@ def pairs_from_buckets(
         F.count(F.lit(1)).over(w).alias("bsize"),
         F.min("file_id").over(w).alias("bmin"),
     )
-    # Materialize the sized table ONCE (r7 measurement): the all-pairs
-    # join (both sides) and the star projection reference `sized` three
-    # times, and when the upstream contains a nondeterministic expression
-    # (every signature UDF is marked asNondeterministic to stop Catalyst
-    # double-eval) the subtrees are never canonically equal, so exchange
-    # reuse CANNOT fire and the whole explode->shuffle->window pipeline —
-    # including the Arrow signature UDF in the standalone operators — ran
-    # once per reference. One localCheckpoint replaces the recomputations;
-    # the slim (bucket_key, fid, bsize, bmin) schema keeps the
-    # materialized footprint small at any scale (~32 B/row).
-    sized = sized.localCheckpoint()
+    # Materialize the sized table once: the all-pairs join (both sides)
+    # and the star projection reference `sized` three times, and with a
+    # nondeterministic expression upstream (every signature UDF is marked
+    # asNondeterministic) the subtrees never compare equal, so exchange
+    # reuse cannot fire and the explode->shuffle->window pipeline would run
+    # once per reference. The checkpoint is lazy, like every intermediate
+    # whose result the driver does not need at once: it is computed inside
+    # the job that first consumes it (AQE still runs the window's
+    # shuffle-map stage when it plans the checkpoint), and its other
+    # references read the stored blocks. The slim (bucket_key, fid, bsize,
+    # bmin) schema keeps the footprint small (~32 B/row).
+    sized = sized.localCheckpoint(eager=False)
 
     enum = sized.where(
         F.col("bsize").between(2, max(bucket_cap, star_cap))

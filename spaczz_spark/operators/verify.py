@@ -35,9 +35,6 @@ __all__ = [
     "make_edit_ratio_udf",
     "attach_pair_sides",
     "shingle_jaccard",
-    "score_pairs_slim",
-    "decided_pairs",
-    "kernel_pairs",
     "verify_pairs",
 ]
 
@@ -205,18 +202,18 @@ def verify_pairs(
     the signatures checkpoint does not have to carry (write + re-read) a
     second copy of the corpus text.
     """
-    scored = score_pairs_slim(
+    scored = _score_pairs_slim(
         pairs, corpus, jaccard_min=jaccard_min, jaccard_floor=jaccard_floor
     )
-    return decided_pairs(scored, jaccard_min=jaccard_min).unionByName(
-        kernel_pairs(
+    return _decided_pairs(scored, jaccard_min=jaccard_min).unionByName(
+        _kernel_pairs(
             scored, content_df if content_df is not None else corpus,
             min_r2=min_r2, ratio_func=ratio_func,
         )
     )
 
 
-def score_pairs_slim(
+def _score_pairs_slim(
     pairs: DataFrame,
     corpus: DataFrame,
     *,
@@ -254,8 +251,8 @@ def score_pairs_slim(
             & ((F.col("jaccard") >= jaccard_floor) | (union_sz == 0)),
         )
         .select("a_id", "b_id", "stage", "jaccard", "sha_eq", "kernel_band")
-        # LAZY checkpoint (r7): both consumers (decided_pairs,
-        # kernel_pairs) still evaluate the slim join exactly once — the
+        # LAZY checkpoint (r7): both consumers (_decided_pairs,
+        # _kernel_pairs) still evaluate the slim join exactly once — the
         # checkpointed RDD is persisted on first computation and the
         # second consumer reads the stored blocks — but the
         # materialization now happens INSIDE the verify stage's single
@@ -265,7 +262,7 @@ def score_pairs_slim(
     )
 
 
-def decided_pairs(scored: DataFrame, *, jaccard_min: float = 0.7) -> DataFrame:
+def _decided_pairs(scored: DataFrame, *, jaccard_min: float = 0.7) -> DataFrame:
     """Pairs the slim phase already decided (sha equality or high Jaccard)."""
     return scored.where(
         F.col("sha_eq") | (F.col("jaccard") >= jaccard_min)
@@ -280,7 +277,7 @@ def decided_pairs(scored: DataFrame, *, jaccard_min: float = 0.7) -> DataFrame:
     )
 
 
-def kernel_pairs(
+def _kernel_pairs(
     scored: DataFrame,
     corpus: DataFrame,
     *,

@@ -158,10 +158,9 @@ class DedupPipeline:
             self.metrics[f"{name}_resumed"] = 1
             return cached
         t0 = time.time()
-        # label every job of this stage (guide §1.5) — eager jobs inside
-        # build() (localCheckpoints) and the write job all carry the stage
-        # name in the UI / REST API, which is what the profiling harness
-        # groups wall time by
+        # label every job of this stage (guide §1.5) — any job build()
+        # runs and the write job all carry the stage name in the UI / REST
+        # API, which is what the profiling harness groups wall time by
         self.spark.sparkContext.setJobDescription(f"stage:{name}")
         try:
             df = build()
@@ -214,10 +213,10 @@ class DedupPipeline:
                 F.lit(100).alias("edit_ratio"),
                 F.lit("sha").alias("verified_by"),
             )
-            # lazily persisted (r7): referenced by BOTH the CC edge union
-            # and the provenance union in the components stage — computed
-            # once on first use (the CC input checkpoint job), read back
-            # by the stage write job
+            # referenced by BOTH the CC edge union and the provenance union
+            # in the components stage; lazy, as no driver decision waits on
+            # it: computed once in its first consuming job (the CC input
+            # checkpoint), read back by the stage write job
             .localCheckpoint(eager=False)
         )
 
@@ -261,49 +260,27 @@ class DedupPipeline:
 
         # ---- candidates (three sources, ONE resumable checkpoint) ----------
         def build_candidates():
-            # The three bucket sources each materialize their sized table
-            # eagerly (operators/lsh.py); building them from a small thread
-            # pool overlaps those independent jobs so one source's shuffle
-            # tail back-fills cores for the next (guide §2.6) instead of
-            # running three materializations end-to-end.
-            from concurrent.futures import ThreadPoolExecutor
-
-            def labeled(fn, *args, **kwargs):
-                # job-group properties are per-Python-thread under pinned
-                # thread mode, so the label must be (re)set INSIDE the
-                # pool thread or the eager materialization jobs — exactly
-                # where this stage's wall time goes — show unlabeled
-                def run():
-                    self.spark.sparkContext.setJobDescription(
-                        "stage:candidate_pairs"
-                    )
-                    return fn(*args, **kwargs)
-
-                return run
-
-            with ThreadPoolExecutor(max_workers=3) as pool:
-                f_mh = pool.submit(labeled(
-                    minhash_candidates, signatures, cfg.bands, cfg.rows,
-                    cfg.bucket_cap, dedup=False,
-                ))
-                f_sh = pool.submit(labeled(
-                    simhash_candidates, signatures, cfg.max_hamming,
-                    cfg.bucket_cap, dedup=False,
-                ))
-                # NOTE: substring candidates are NOT anti-joined against the
-                # set-similarity candidates — a pair can band-collide in
-                # MinHash (likely even at Jaccard ~0.25), fail Jaccard/edit
-                # verification there, and still be a true verbatim-
-                # containment duplicate that only the containment verifier
-                # can accept. Both rows survive; the verified union keeps
-                # the best record per pair.
-                f_sub = pool.submit(labeled(
-                    substring_candidates, signatures,
-                    k=cfg.substring_k, w=cfg.substring_w,
-                    bucket_cap=cfg.bucket_cap,
-                    min_bytes=cfg.substring_min_len,
-                ))
-                mh, sh, sub = f_mh.result(), f_sh.result(), f_sub.result()
+            # Each source's sized bucket table is checkpointed lazily
+            # (operators/lsh.py): all three are materialized inside the
+            # stage's write job. Building them runs only what AQE needs to
+            # plan each checkpoint, its window's shuffle-map stage.
+            mh = minhash_candidates(
+                signatures, cfg.bands, cfg.rows, cfg.bucket_cap, dedup=False
+            )
+            sh = simhash_candidates(
+                signatures, cfg.max_hamming, cfg.bucket_cap, dedup=False
+            )
+            # NOTE: substring candidates are NOT anti-joined against the
+            # set-similarity candidates — a pair can band-collide in
+            # MinHash (likely even at Jaccard ~0.25), fail Jaccard/edit
+            # verification there, and still be a true verbatim-containment
+            # duplicate that only the containment verifier can accept. Both
+            # rows survive; the verified union keeps the best record per
+            # pair.
+            sub = substring_candidates(
+                signatures, k=cfg.substring_k, w=cfg.substring_w,
+                bucket_cap=cfg.bucket_cap, min_bytes=cfg.substring_min_len,
+            )
             # one row per (pair, source-stage); set-similarity pairs deduped
             # with minhash taking precedence (M4: union of match sources)
             sim = (

@@ -32,6 +32,12 @@ from ..plans.config import DedupConfig
 
 __all__ = ["IncrementalDedup"]
 
+# The signature store holds only what the MinHash candidates and
+# verify_pairs read: every later batch scans it.
+STORE_COLUMNS = (
+    "file_id", "content_sha256", "content", "shingles", "n_shingles", "minhash",
+)
+
 
 class IncrementalDedup:
     """foreachBatch incremental dedup against an append-only signature store."""
@@ -46,10 +52,13 @@ class IncrementalDedup:
 
     # -- state ---------------------------------------------------------------
     def _existing_signatures(self) -> DataFrame | None:
-        try:
-            return self.spark.read.parquet(self.sig_path)
-        except Exception:
+        # every committed append leaves the committer's _SUCCESS marker, so
+        # its absence means "no store yet"; a store that exists but cannot
+        # be read raises instead of deduplicating against nothing
+        if not os.path.exists(os.path.join(self.sig_path, "_SUCCESS")):
             return None
+        # stores written before the column set shrank carry extra columns
+        return self.spark.read.parquet(self.sig_path).select(*STORE_COLUMNS)
 
     def _signature_cols(self, files: DataFrame) -> DataFrame:
         cfg = self.config
@@ -57,20 +66,19 @@ class IncrementalDedup:
         # signatures) as the batch pipeline, one ArrowEvalPython node
         return with_fused_signatures(
             normalize(files), cfg.shingle_k, cfg.num_perm, cfg.seed
-        ).select(
-            "file_id", "content_sha256", "content", "n_bytes",
-            "shingles", "n_shingles", "minhash", "simhash",
-        )
+        ).select(*STORE_COLUMNS)
 
     # -- core ----------------------------------------------------------------
     def process_batch(self, batch: DataFrame, batch_id: int = 0) -> DataFrame:
         """Process one micro-batch of new files; returns new verified pairs."""
         cfg = self.config
-        # materialized once (r7): referenced by the candidate join, the
-        # verify joins, the new-id semi-join and the final append — each
-        # reference re-ran the Arrow signature UDF over the batch (the
-        # nondeterministic marker blocks subtree reuse)
-        new_sigs = self._signature_cols(batch).localCheckpoint()
+        # materialized once: referenced by the candidate join, the verify
+        # joins, the new-id semi-join and the final append, and the
+        # nondeterministic UDF marker blocks subtree reuse, so each
+        # reference would re-run the Arrow signature UDF. Lazy, like every
+        # intermediate the driver does not need at once: computed inside
+        # the `verified` job below, read back by the append.
+        new_sigs = self._signature_cols(batch).localCheckpoint(eager=False)
         existing = self._existing_signatures()
         corpus = (
             new_sigs if existing is None else existing.unionByName(new_sigs)
@@ -94,10 +102,11 @@ class IncrementalDedup:
             min_r2=cfg.min_r2, jaccard_min=cfg.jaccard_min,
             jaccard_floor=cfg.jaccard_floor, ratio_func=cfg.ratio_func,
         )
-        # Materialize `verified` BEFORE appending the batch signatures:
-        # `corpus` lazily reads sig_path, so appending first double-counts
-        # the batch if the parquet read re-lists files (task retry, metadata
-        # refresh) — the join would then see each new file on both sides.
+        # Eager, because the append below must not start before `verified`
+        # is final: `corpus` lazily reads sig_path, so appending first
+        # double-counts the batch if the parquet read re-lists files (task
+        # retry, metadata refresh) — the join would then see each new file
+        # on both sides.
         verified = verified.localCheckpoint()
         # append state + results
         verified.write.mode("append").parquet(self.pairs_path)

@@ -5,7 +5,8 @@ all pairs of buckets up to ``max(bucket_cap, star_cap)`` members in one
 self-join on (bucket, salt) — salted ``N_SALT`` ways above ``bucket_cap``
 — and emits star edges around the bucket minimum above ``star_cap``.
 ``simhash_candidates`` runs on top of it and must equal a brute-force
-hamming check.
+hamming check. Building a candidate plan materializes nothing: the sized
+bucket table is checkpointed lazily, inside the job that consumes it.
 """
 
 import random
@@ -14,7 +15,14 @@ from itertools import combinations
 
 import pytest
 
-from spaczz_spark.operators.lsh import pairs_from_buckets, simhash_candidates
+from pyspark.sql import functions as F
+
+from spaczz_spark.operators.lsh import (
+    minhash_candidates,
+    pairs_from_buckets,
+    simhash_candidates,
+)
+from spaczz_spark.operators.substring import substring_candidates
 
 
 def bruteforce_pairs(rows, bucket_cap, star_cap):
@@ -142,3 +150,37 @@ def test_simhash_candidates_match_bruteforce_hamming(spark):
         out = simhash_candidates(df, max_hamming, bucket_cap, dedup=dedup)
         got = {(r["a_id"], r["b_id"]) for r in out.distinct().collect()}
         assert got == expect, dedup
+
+
+def test_building_candidates_submits_no_job(spark):
+    """Only consuming the candidates runs jobs; the lazy path still finds
+    the one pair whose signatures collide.
+
+    Adaptive execution plans a query by running its shuffle-map stages, so
+    with it on, building a lazy checkpoint still runs the sizing window's
+    exchange. The build is checked with it off, where a job at build time
+    can only be a materialization of the sized table."""
+    sigs = spark.createDataFrame(
+        [(1, [7, 8, 9, 10], [11, 12]), (2, [7, 8, 9, 10], [12, 13]),
+         (3, [1, 2, 3, 4], [14])],
+        "file_id long, minhash array<int>, fingerprints array<long>",
+    ).withColumn(
+        "fingerprints",
+        F.col("fingerprints").alias(
+            "fingerprints", metadata={"fp_k": 32, "fp_w": 32, "fp_min_bytes": 100}
+        ),
+    )
+    tracker = spark.sparkContext.statusTracker()
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        before = set(tracker.getJobIdsForGroup())
+        mh = minhash_candidates(sigs, bands=2, rows=2)
+        sub = substring_candidates(sigs)
+        assert set(tracker.getJobIdsForGroup()) - before == set()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+
+    got = {(r["a_id"], r["b_id"], r["stage"])
+           for r in mh.unionByName(sub).collect()}
+    assert got == {(1, 2, "minhash"), (1, 2, "substring")}

@@ -38,6 +38,21 @@ def test_process_batch_finds_cross_batch_dups(spark, split_corpus, tmp_path):
     assert pairs.count() == n_first + n_second
 
 
+def test_unreadable_store_raises(spark, split_corpus, tmp_path):
+    """A committed store (``_SUCCESS`` present) that cannot be read fails
+    the batch instead of deduplicating it against an empty store."""
+    store = tmp_path / "store_corrupt"
+    sig_dir = store / "signatures"
+    sig_dir.mkdir(parents=True)
+    (sig_dir / "_SUCCESS").write_bytes(b"")
+    (sig_dir / "part-00000.snappy.parquet").write_bytes(b"not parquet")
+    inc = IncrementalDedup(spark, DedupConfig(), str(store))
+    seed, _ = split_corpus
+    with pytest.raises(Exception, match="is not a Parquet file"):
+        inc.process_batch(spark.createDataFrame(seed.iloc[:4]))
+    assert not (store / "verified_pairs").exists()
+
+
 def test_streaming_available_now(spark, split_corpus, tmp_path):
     seed, incoming = split_corpus
     inp = str(tmp_path / "in")
