@@ -8,10 +8,13 @@ NOT the driver bench — bench.py stays frozen. This script isolates:
   noop     — per-query noop-sink walls for the bench query set (repeats);
              BX_ONLY=a,b runs those entries of queries.QUERIES instead
              (with bench.py's tuning where bench.py substitutes one)
+  pytask   — fixed cost of one Python task: one-row-per-task stages through
+             a pandas UDF vs the same stage JVM-only, at 1, 4 and 16 tasks;
+             re-derives operators.verify.ROWS_PER_PYTHON_TASK on a new host
 
 Physical plans live in EXPLAIN.md (scripts/explain_audit.py).
 
-Usage: python bench_extra.py stages|noop
+Usage: python bench_extra.py stages|noop|pytask
 """
 
 from __future__ import annotations
@@ -22,6 +25,10 @@ import shutil
 import sys
 import tempfile
 import time
+
+# module level: pandas_udf resolves the pytask UDF's (string) type hints
+# in this module's globals
+import pandas as pd
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
@@ -141,11 +148,45 @@ def cmd_noop():
     print(json.dumps(out, indent=1))
 
 
+def cmd_pytask():
+    """Wall of an n-task stage with one row per task, with and without a
+    pandas UDF; the difference per wave of ``CPUS`` tasks is what one
+    Python task costs beyond its JVM work (workers are reused)."""
+    from pyspark.sql import functions as F
+
+    spark = session()
+    reps = int(os.environ.get("BX_REPEATS", "5"))
+
+    @F.pandas_udf("long")
+    def plus_one(s: pd.Series) -> pd.Series:
+        return s + 1
+
+    def wall(n: int, python: bool) -> float:
+        df = spark.range(0, n, 1, numPartitions=n)
+        col = plus_one("id") if python else F.col("id") + 1
+        t0 = time.time()
+        df.select(col.alias("x")).write.format("noop").mode("overwrite").save()
+        return time.time() - t0
+
+    wall(16, True)  # start the Python workers
+    for n in (1, 4, 16):
+        jvm = min(wall(n, False) for _ in range(reps))
+        py = min(wall(n, True) for _ in range(reps))
+        per_task = round((py - jvm) / -(-n // CPUS), 3)
+        print(json.dumps({
+            "tasks": n, "jvm_s": round(jvm, 3), "python_s": round(py, 3),
+            "per_python_task_s": per_task,
+        }), flush=True)
+    print(json.dumps({"cpus": CPUS, "per_python_task_s": per_task}))
+
+
 if __name__ == "__main__":
     mode = sys.argv[1] if len(sys.argv) > 1 else "stages"
     if mode == "stages":
         cmd_stages()
     elif mode == "noop":
         cmd_noop()
+    elif mode == "pytask":
+        cmd_pytask()
     else:
         raise SystemExit(f"unknown mode {mode}")

@@ -86,7 +86,13 @@ def main():
         "Pair verification (sha fast path + exact Jaccard + gated InDel UDF)",
         "Check: the pair side broadcasts against both corpus joins "
         "(BroadcastHashJoin); jaccard/array ops stay in codegen; one "
-        "ArrowEvalPython for the masked InDel kernel.",
+        "ArrowEvalPython for the masked InDel kernel. The kernel band's "
+        "round-robin Exchange is sized by its rows: one task per "
+        "ROWS_PER_PYTHON_TASK rows, at most 4 per core, and "
+        "SinglePartition when one task holds the band. Building this plan "
+        "runs one job, the band's row count. This sf0.01 band holds about "
+        "1,600 rows, so it spreads over the cap: RoundRobinPartitioning(16) "
+        "at local[4].",
         grab(verified),
     ))
 

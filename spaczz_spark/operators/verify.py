@@ -54,6 +54,16 @@ CHAR_KERNEL_MAX = 8192
 # worst-case numpy DP is ~1e9 cell ops (~1-2 s), the documented ceiling.
 LEV_CHAR_KERNEL_MAX = 32768
 
+# Kernel-band rows per Python task. Every Python task pays a fixed cost
+# whatever its input: `bench_extra.py pytask` on a 4-core host, local[4],
+# timed 16 one-row pandas-UDF tasks at 0.79-1.19 s against 0.07-0.08 s for
+# the same stage JVM-only, i.e. 0.18-0.28 s per Python task with workers
+# reused; a plain UDF and mapInPandas cost the same within noise. 32 rows
+# amortize it (an A/B against 128 kept 32: the batch pipeline's ~126-row
+# band then still spreads over 4 tasks); large bands still spread over 4
+# tasks per core (see _kernel_pairs).
+ROWS_PER_PYTHON_TASK = 32
+
 
 def edit_ratio_score(
     s1: str | None, s2: str | None, min_r: int = 0, func: str = "indel"
@@ -195,7 +205,10 @@ def verify_pairs(
        MinHash, and their 0/0 Jaccard is defined as 0.0 rather than an ANSI
        abort) join ``content`` and enter the Arrow InDel kernel — typically
        a small fraction of candidates, so the wide payload and the Python
-       boundary both shrink by that factor.
+       boundary both shrink by that factor. The band is spread round-robin
+       over one task per ``ROWS_PER_PYTHON_TASK`` rows (at most 4 per
+       core), so building the result runs one job: the band's row count,
+       which also materializes the slim table.
 
     ``content_df`` optionally names a separate (file_id, content) source
     for the kernel phase — the pipeline passes its ``normalized`` table so
@@ -251,13 +264,11 @@ def _score_pairs_slim(
             & ((F.col("jaccard") >= jaccard_floor) | (union_sz == 0)),
         )
         .select("a_id", "b_id", "stage", "jaccard", "sha_eq", "kernel_band")
-        # LAZY checkpoint (r7): both consumers (_decided_pairs,
-        # _kernel_pairs) still evaluate the slim join exactly once — the
-        # checkpointed RDD is persisted on first computation and the
-        # second consumer reads the stored blocks — but the
-        # materialization now happens INSIDE the verify stage's single
-        # write job, where the decided/kernel/substring branches overlap
-        # (guide §2.6), instead of as a separate serial job up front.
+        # Lazy checkpoint: both consumers (_decided_pairs, _kernel_pairs)
+        # evaluate the slim join exactly once — the checkpointed RDD is
+        # persisted on first computation and later jobs read the stored
+        # blocks. The first computation is _kernel_pairs' band count,
+        # which the driver needs to size the kernel stage.
         .localCheckpoint(eager=False)
     )
 
@@ -277,6 +288,12 @@ def _decided_pairs(scored: DataFrame, *, jaccard_min: float = 0.7) -> DataFrame:
     )
 
 
+def _kernel_tasks(rows: int, parallelism: int) -> int:
+    """Tasks for a kernel band of ``rows`` pairs: one per
+    ``ROWS_PER_PYTHON_TASK`` rows, at least 1, at most 4 per core."""
+    return min(max(-(-rows // ROWS_PER_PYTHON_TASK), 1), 4 * parallelism)
+
+
 def _kernel_pairs(
     scored: DataFrame,
     corpus: DataFrame,
@@ -292,21 +309,23 @@ def _kernel_pairs(
     # while sub-cutoff rows short-circuit (indel: rapidfuzz cutoff
     # semantics; levenshtein: the length-gap bound skips the DP entirely)
     edit_udf = make_edit_ratio_udf(max(min_r2 - 1, 0), func=ratio_func)
+    kept = scored.where(F.col("kernel_band"))
     band = attach_pair_sides(
-        scored.where(F.col("kernel_band")).select(
-            "a_id", "b_id", "stage", "jaccard"
-        ),
-        corpus,
-        ["content"],
+        kept.select("a_id", "b_id", "stage", "jaccard"), corpus, ["content"]
     )
     # The content join leaves the band partitioned by its join key, so
     # pairs sharing one big host file pile into the same partition — and
     # per-pair kernel cost varies ~quadratically with length, so that one
     # partition becomes the straggler that caps the stage's core scaling.
     # A round-robin repartition spreads the heavy pairs evenly; the shuffle
-    # moves only the band subset (a small fraction of candidates).
+    # moves only the band subset (a small fraction of candidates). The
+    # spread is sized by the band's rows, because every Python task pays a
+    # fixed start-up cost whatever its input: a 17-row band in 16 tasks
+    # spent more on task start-up than on the kernel. The driver needs the
+    # count now to size the stage; the count job also materializes the
+    # lazily checkpointed slim table, which both consumers read anyway.
     sc = band.sparkSession.sparkContext
-    band = band.repartition(sc.defaultParallelism * 4)
+    band = band.repartition(_kernel_tasks(kept.count(), sc.defaultParallelism))
     return (
         band.withColumn("edit_ratio", edit_udf("a_content", "b_content"))
         .where(F.col("edit_ratio") >= min_r2)

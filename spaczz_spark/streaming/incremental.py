@@ -6,10 +6,12 @@ existing corpus (or of each other)?" without recomputing the corpus:
 
 - the **signature store** (checkpointed signatures table) is the streaming
   state; it only ever appends.
-- each micro-batch runs inside ``foreachBatch``: normalize -> exact-dup
-  probe (sha join against the store) -> signatures -> LSH bucket join
-  against store + within-batch -> exact verify -> append verified pairs and
-  the batch's signatures.
+- each micro-batch runs inside ``foreachBatch``: normalize -> signatures
+  -> MinHash LSH bucket join over store + batch, kept where a pair touches
+  the batch -> exact verify -> append verified pairs and the batch's
+  signatures. There is no separate exact-dup probe: byte-identical files
+  share every band, so they become candidates, and verify's sha fast path
+  decides them.
 
 This is the Iceberg incremental-read pattern (new snapshot -> process delta)
 expressed with Structured Streaming's file source in the sandbox. State is

@@ -1,5 +1,6 @@
 """Incremental/streaming dedup tests: state-store joins + availableNow stream."""
 
+import glob
 import os
 
 import pytest
@@ -241,3 +242,18 @@ def test_sessionizer_event_time_timeout_closes_tails(spark, tmp_path):
         if r["user_id"] == "u1"
     )
     assert got == [("u1", 2, 10.0)], got
+
+
+def test_process_batch_appends_few_pair_files(spark, tmp_path):
+    """The kernel stage is sized by its band rows, so one batch appends a
+    few verified-pair files, not one per ``4 * defaultParallelism`` kernel
+    tasks plus the decided pairs' file."""
+    files = generate_corpus(n_files=500, seed=7).files
+    store = tmp_path / "store_files"
+    inc = IncrementalDedup(spark, DedupConfig(), str(store))
+    verified = inc.process_batch(spark.createDataFrame(files))
+    dp = spark.sparkContext.defaultParallelism
+    # enough kernel-verified rows to fill every task of a fixed 4*dp spread
+    assert verified.where(F.col("verified_by") == "edit_ratio").count() > 4 * dp
+    written = glob.glob(str(store / "verified_pairs" / "*.parquet"))
+    assert len(written) < 4 * dp + 1, len(written)
