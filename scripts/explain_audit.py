@@ -181,7 +181,11 @@ def main():
 
     sections.append((
         "Winnowed containment join (files_substring_pairs)",
-        "Check: needle side emits ONE anchor per doc, host side explodes "
+        "Check: one Python evaluation per document - a single "
+        "nondeterministic winnowing UDF runs inside the lazy checkpoint, "
+        "so no ArrowEvalPython appears here and both join sides read the "
+        "checkpoint (Scan ExistingRDD): the needle side keeps ONE anchor "
+        "per doc and is the broadcast build side, the host side explodes "
         "winnowed fingerprints (~2/w of positions); equi-join on the "
         "anchor hash; instr verification after the id joins.",
         grab(Q.q_files_substring_pairs(spark, sf)),

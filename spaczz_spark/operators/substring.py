@@ -30,7 +30,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, IntegerType, LongType
+from pyspark.sql.types import ArrayType, IntegerType
 
 from ..functions.layout import ensure_min_partitions
 from ..ratios import indel_ratio as _indel_ratio
@@ -131,21 +131,16 @@ def _kgram_hashes(data: bytes, k: int) -> np.ndarray:
     return h
 
 
-def winnow_fingerprints(text: str, k: int = 32, w: int = 32) -> np.ndarray:
-    """Winnowed fingerprint set (distinct int64) of a document."""
-    return winnow_fingerprints_pos(text, k, w)[0]
-
-
 def winnow_fingerprints_pos(
     text: str, k: int = 32, w: int = 32
 ) -> tuple[np.ndarray, np.ndarray]:
     """Winnowed fingerprints WITH their byte offsets.
 
-    Returns ``(values, positions)``: ``values`` is the same sorted-distinct
-    int64 array :func:`winnow_fingerprints` returns (bit-identical — the
-    window minima are unchanged, only their argmin offsets are surfaced);
-    ``positions`` is the int32 byte offset (into the UTF-8 encoding) of the
-    first selected k-gram carrying each value. Positions let the substring
+    Returns ``(values, positions)``: ``values`` is the sorted-distinct
+    int64 set of window minima; ``positions`` is the int32 byte offset
+    (into the UTF-8 encoding) of the first selected k-gram carrying each
+    value — selections never move backwards, so the smallest position
+    holds the first window's minimum. Positions let the substring
     verifier compute embedding-offset votes from two documents' fingerprint
     arrays alone — no per-pair rehash of the content (see
     ``verify_substring_pairs``).
@@ -156,8 +151,8 @@ def winnow_fingerprints_pos(
         idx = np.array([int(h.argmin())])
     elif len(h) <= _ARGMIN_BLOCKED_MIN_N:
         wins = np.lib.stride_tricks.sliding_window_view(h, w)
-        # argmin picks the first minimum per window — the selected value
-        # equals wins.min(axis=1), so `vals` matches the historical output
+        # argmin picks the first minimum per window (the selected value
+        # equals wins.min(axis=1))
         idx = wins.argmin(axis=1) + np.arange(len(wins))
     else:
         idx = _sliding_first_argmin(h, w)
@@ -295,11 +290,13 @@ def containment_pairs(
     """Exact containment join: pairs (a, b) where a's full text appears
     verbatim inside b's (and a is strictly shorter).
 
-    Candidate plan (winnowed, scale-safe): hosts emit only their
-    **winnowed** k-gram fingerprints (the minimum hash of every
-    ``w``-length k-gram window — ~2/w of all positions) and each needle
-    emits the minimum hash of its FIRST ``w`` k-grams. Recall proof: if a
-    is contained in b, a's k-gram sequence appears contiguously in b, so
+    Candidate plan (winnowed, scale-safe): one Arrow pass winnows each
+    document of at least ``min_len`` chars (the minimum hash of every
+    ``w``-length k-gram window — ~2/w of all positions). Hosts explode
+    those fingerprints; each needle emits the one at its smallest byte
+    offset, which is the minimum hash of its FIRST ``w`` k-grams (the
+    first-minimum argmins never decrease along the text). Recall proof: if
+    a is contained in b, a's k-gram sequence appears contiguously in b, so
     the host window exactly aligned with a's first ``w`` k-grams has the
     same minimum — the needle's anchor is always among the host's winnowed
     fingerprints. ``instr`` then verifies exactly, so the *output* equals
@@ -308,8 +305,8 @@ def containment_pairs(
     recall, same verified output) while shuffling ~w× fewer host rows:
     a 10 KB host emits ~600 fingerprints instead of ~10k anchors.
     """
-    # single-file inputs scan as one partition, serializing the two Arrow
-    # fingerprint UDFs below on one task; no-op on well-partitioned inputs
+    # single-file inputs scan as one partition, serializing the Arrow
+    # winnowing UDF below on one task; no-op on well-partitioned inputs
     base = ensure_min_partitions(
         docs.select(
             F.col(id_col).alias("doc_id"),
@@ -318,38 +315,36 @@ def containment_pairs(
         )
     )
 
-    @F.pandas_udf(LongType())
-    def needle_anchor(texts: pd.Series) -> pd.Series:
-        # min hash of the first w k-grams — matches the host-side winnow
-        # selection rule for the window aligned at the containment offset
-        return pd.Series(
-            [
-                int(
-                    _kgram_hashes(t.encode("utf-8", "ignore"), anchor_len)[:w]
-                    .min()
-                    .astype(np.int64)
-                )
-                for t in texts
-            ],
-            dtype="int64",
-        )
+    @F.pandas_udf("fingerprints array<bigint>, anchor bigint")
+    def winnow(texts: pd.Series) -> pd.DataFrame:
+        # numpy rolling hash + window minima; the JVM per-position
+        # substring alternative is interpreted and ~10x slower at scale
+        fps, anchors = [], []
+        for t in texts:
+            vals, pos = winnow_fingerprints_pos(t, anchor_len, w)
+            fps.append(vals)
+            anchors.append(int(vals[pos.argmin()]))
+        return pd.DataFrame({"fingerprints": fps, "anchor": anchors})
 
-    @F.pandas_udf(ArrayType(LongType()))
-    def host_fingerprints(texts: pd.Series) -> pd.Series:
-        # winnowed fingerprint set (numpy rolling hash + window minima);
-        # the JVM per-position substring alternative is interpreted and
-        # ~10x slower at corpus scale
-        return texts.map(lambda t: winnow_fingerprints(t, anchor_len, w))
-
-    needles = base.where(F.col("len") >= min_len).select(
-        F.col("doc_id").alias("a_id"), needle_anchor("text").alias("anchor")
+    # Nondeterministic so Catalyst cannot clone the UDF into pushed-down
+    # filters; materialized once (lazily, like `_doc_signatures`) so both
+    # join sides read one winnowing pass per document.
+    sigs = (
+        base.where(F.col("len") >= min_len)
+        .select("doc_id", "len", winnow.asNondeterministic()("text").alias("s"))
+        .select("doc_id", "len", "s.fingerprints", "s.anchor")
+        .localCheckpoint(eager=False)
     )
-    hosts = base.where(F.col("len") > min_len).select(
+    needles = sigs.select(F.col("doc_id").alias("a_id"), "anchor")
+    hosts = sigs.where(F.col("len") > min_len).select(
         F.col("doc_id").alias("b_id"),
-        F.explode(host_fingerprints("text")).alias("anchor"),
+        F.explode("fingerprints").alias("anchor"),
     )
+    # Hosts on the left: both sides carry the checkpoint's size estimate
+    # (the planner cannot see the explode's fan-out) and a tie builds the
+    # right side, so a broadcast ships the needles, never the fingerprints.
     cand = (
-        needles.join(hosts, "anchor")
+        hosts.join(needles, "anchor")
         .where(F.col("a_id") != F.col("b_id"))
         .select("a_id", "b_id")
         .distinct()

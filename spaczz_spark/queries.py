@@ -476,6 +476,8 @@ def q_files_substring_partial(spark, sf_dir):
     ).withColumn("file_key", F.concat_ws(US, "repo", "path", "commit"))
     from .functions.signatures import with_fused_signatures
 
+    # materialized once: the candidate stage and both verify joins read
+    # the corpus, and the nondeterministic fused UDF blocks subtree reuse
     corpus = with_fused_signatures(
         f.select(
             F.col("file_key").alias("file_id"),
@@ -483,7 +485,9 @@ def q_files_substring_partial(spark, sf_dir):
             F.octet_length("content").alias("n_bytes"),
         ),
         fp_k=32, fp_w=32, fp_min_bytes=100,
-    ).repartition(spark.sparkContext.defaultParallelism, "file_id")
+    ).repartition(
+        spark.sparkContext.defaultParallelism, "file_id"
+    ).localCheckpoint(eager=False)
     cand = substring_candidates(corpus)
     return verify_substring_pairs(
         cand, corpus, min_len=100, min_partial=75

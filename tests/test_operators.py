@@ -378,15 +378,29 @@ def test_containment_pairs_winnowed_recall(spark):
     words = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta"]
     def text(n): return " ".join(rng.choice(words) for _ in range(n))
     needles = [text(60) for _ in range(4)]           # ~350+ chars each
+    needles.append(                                   # multi-byte: chars < bytes
+        " ".join(rng.choice(["αλφα", "βήτα", "日本語", "naïve"]) for _ in range(60))
+    )
+    needles.append(text(60)[:200])                    # exactly min_len chars
+    twin = text(70)
     hosts = [
         text(40) + " " + needles[0] + " " + text(40),
         needles[1] + " " + text(80),                  # prefix containment
         text(80) + " " + needles[2],                  # suffix containment
         text(200),                                    # no containment
+        # the needle's first 96 bytes appear before the true embedding
+        text(20) + " " + needles[3][:96] + " " + text(30) + " "
+        + needles[3] + " " + text(10),
+        text(30) + " " + needles[4] + " " + text(30),
+        text(30) + " " + needles[5] + " " + text(30),
+        twin,                                         # identical equal-length
+        twin,                                         # twins: never a pair
     ]
     rows = [(i, t) for i, t in enumerate(needles)] + [
         (100 + i, t) for i, t in enumerate(hosts)
     ]
+    assert len(needles[4].encode()) > len(needles[4]) >= 200
+    assert len(needles[5]) == 200
     df = spark.createDataFrame(rows, ["doc_id", "text"])
     got = {
         (r["a_id"], r["b_id"])
@@ -398,13 +412,15 @@ def test_containment_pairs_winnowed_recall(spark):
         for b, tb in rows
         if a != b and len(ta) >= 200 and len(ta) < len(tb) and ta in tb
     }
-    assert got == want and len(want) >= 3
+    assert got == want
+    assert {(0, 100), (1, 101), (2, 102), (3, 104), (4, 105), (5, 106)} <= want
+    assert (107, 108) not in got and (108, 107) not in got
 
     # host anchor volume: winnowed rows << one-per-position
-    from spaczz_spark.operators.substring import winnow_fingerprints
+    from spaczz_spark.operators.substring import winnow_fingerprints_pos
     for _, t in rows:
         n_positions = max(len(t.encode()) - 63, 1)
-        n_winnowed = len(winnow_fingerprints(t, 64, 32))
+        n_winnowed = len(winnow_fingerprints_pos(t, 64, 32)[0])
         # expected density ~2/(w+1); allow headroom for repeated-text minima
         assert n_winnowed <= max(3.5 * n_positions / 32 + 4, 6), (
             n_winnowed, n_positions

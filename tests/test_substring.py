@@ -326,25 +326,38 @@ def test_kgram_rolling_hash_matches_windowed_reference():
 
 
 def test_winnow_positions_point_at_selected_grams():
-    """winnow_fingerprints_pos values must equal winnow_fingerprints
-    (bit-identical) and every position must be a genuine occurrence of its
-    fingerprint's k-gram hash."""
+    """Every position of winnow_fingerprints_pos is a genuine occurrence of
+    its fingerprint's k-gram hash, and the fingerprint at the smallest
+    position is bit-identical to the minimum hash of the first w k-grams
+    (the anchor containment_pairs reads for each needle). Inputs cover
+    ties (periodic text), multi-byte UTF-8, exactly 200 chars, and the
+    blocked argmin path (more than 65,536 k-grams)."""
     import numpy as np
 
-    from spaczz_spark.operators.substring import (
-        _kgram_hashes,
-        winnow_fingerprints,
-        winnow_fingerprints_pos,
-    )
+    from spaczz_spark.operators.substring import _kgram_hashes
+
+    def first_window_min(data: bytes, k: int, w: int) -> int:
+        # the needle anchor formula containment_pairs used before it read
+        # the anchor from fingerprint positions
+        return int(_kgram_hashes(data, k)[:w].min().astype(np.int64))
 
     rng = random.Random(5)
-    for n_tokens in (5, 40, 400):
-        text = _gen(rng, n_tokens)
-        vals, pos = winnow_fingerprints_pos(text, 32, 32)
-        assert (vals == winnow_fingerprints(text, 32, 32)).all()
-        assert len(vals) == len(pos)
-        h = _kgram_hashes(text.encode("utf-8"), 32).astype(np.int64)
-        assert (h[pos] == vals).all()
+    texts = [_gen(rng, n) for n in (5, 40, 400)] + [
+        "naïve café — 日本語のテキスト ünïcödé " * 12,
+        "abc " * 300,
+        (_gen(rng, 40) * 2)[:200],
+        _gen(rng, 8000),
+    ]
+    assert len(texts[5]) == 200
+    assert len(texts[6].encode("utf-8")) - 63 > 65536
+    for text in texts:
+        data = text.encode("utf-8")
+        for k in (32, 64):
+            vals, pos = winnow_fingerprints_pos(text, k, 32)
+            assert len(vals) == len(pos)
+            h = _kgram_hashes(data, k).astype(np.int64)
+            assert (h[pos] == vals).all()
+            assert vals[pos.argmin()] == first_window_min(data, k, 32)
 
 
 def test_verify_partial_requires_fingerprint_columns(spark, verify_fixture):
