@@ -34,6 +34,7 @@ def main():
         pack_band_keys,
         with_fused_signatures,
     )
+    from spaczz_spark.operators.components import _large_star, _small_star
     from spaczz_spark.operators.lsh import minhash_candidates
     from spaczz_spark.operators.verify import verify_pairs
     from spaczz_spark.plans.pipeline import recommended_session
@@ -144,11 +145,23 @@ def main():
     ))
 
     sections.append((
-        "Exact dedup groups (hash aggregate on sha256)",
-        "Check: sha2 computed in the scan projection; partial+final "
-        "aggregate; the group members explode straight out of the final "
-        "aggregate (no global sort, so no range Exchange); no Python.",
+        "Exact dedup groups (one window on sha256)",
+        "Check: sha2 computed in the scan projection; ONE hash Exchange on "
+        "the key and a partition-local Sort feed a Window computing "
+        "min(doc_id) and count per group; no aggregate, no member array, "
+        "no explode, no global sort (so no range Exchange); no Python.",
         grab(Q.q_doc_exact_dups(spark, sf)),
+    ))
+
+    edges = spark.createDataFrame([(1, 2), (2, 3), (4, 3)], "u long, v long")
+    sections.append((
+        "Connected components round (_small_star(_large_star(edges)))",
+        "Check: each star takes its per-node minimum with ONE window "
+        "Exchange (large star on u over both orientations, from one "
+        "Generate; small star on greatest(u, v)), and the round closes "
+        "with the distinct's hash aggregate: three Exchanges, no join, no "
+        "union.",
+        grab(_small_star(_large_star(edges))),
     ))
 
     sections.append((

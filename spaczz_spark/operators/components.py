@@ -5,8 +5,10 @@ The reference propagates shared identity through ``ent_id`` plumbing
 is graph connectivity over the verified-pair edge set. Spark has no native
 CC, so this implements the alternating **large-star / small-star** algorithm
 (Kiveris et al., "Connected Components in MapReduce and Beyond"), which
-converges in O(log n) rounds of hash joins and — unlike naive min-label
-propagation — does not depend on graph diameter.
+converges in O(log n) rounds and — unlike naive min-label propagation —
+does not depend on graph diameter. Each star takes its per-node minimum
+with one window partitioned by the node: no aggregate joined back, so a
+round is two window exchanges plus the closing ``distinct``.
 
 Every iteration:
 - ``localCheckpoint()`` truncates lineage (plans otherwise grow
@@ -17,7 +19,8 @@ Every iteration:
   growing plan and the observe() wrapper defeats cache reuse — so
   localCheckpoint stays at every size.)
 - convergence is detected by an order-insensitive edge-set checksum
-  (count + sum of pair hashes) — cheap aggregations, no exceptAll shuffle.
+  (count + bit_xor of pair hashes) — cheap aggregations, no exceptAll
+  shuffle.
 
 Result: (file_id, component_id) where component_id is the component's
 minimum file_id — deterministic, resume-stable.
@@ -27,26 +30,32 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 __all__ = ["connected_components", "attach_components"]
+
+
+def _edges_from(df: DataFrame, *ends: tuple[str, str]) -> DataFrame:
+    """One (u, v) edge row per (from, to) column pair of every row of ``df``
+    (one explode, so ``df`` is read once)."""
+    return df.select(
+        F.explode(
+            F.array(*[F.struct(F.col(a).alias("u"), F.col(b).alias("v"))
+                      for a, b in ends])
+        ).alias("e")
+    ).select("e.u", "e.v")
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
     """Connect every larger neighbor of u to u's minimum neighborhood label.
 
-    Tolerates (and may emit) duplicate edge rows: the groupBy/min is
+    Tolerates (and may emit) duplicate edge rows: the windowed min is
     multiplicity-insensitive and :func:`_small_star`'s trailing
-    ``distinct`` dedupes each full iteration — dropping the intermediate
-    distinct here removes one shuffle per iteration, which matters because
-    small-corpus CC cost is pure per-job orchestration (see
-    ``connected_components``)."""
-    sym = edges.unionByName(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    mins = sym.groupBy("u").agg(F.min("v").alias("mn"))
-    mins = mins.withColumn("m", F.least("u", "mn")).select("u", "m")
+    ``distinct`` dedupes each full iteration."""
+    m = F.least("u", F.min("v").over(Window.partitionBy("u")))
     return (
-        sym.join(mins, "u")
+        _edges_from(edges, ("u", "v"), ("v", "u"))
+        .select("u", "v", m.alias("m"))
         .where(F.col("v") > F.col("u"))
         .select(F.col("v").alias("u"), F.col("m").alias("v"))
         .where(F.col("u") != F.col("v"))
@@ -54,17 +63,16 @@ def _large_star(edges: DataFrame) -> DataFrame:
 
 
 def _small_star(edges: DataFrame) -> DataFrame:
-    """Within each node's smaller-or-equal neighborhood, restar onto the min."""
+    """Within each node's smaller-or-equal neighborhood, restar onto the min:
+    every directed edge (u, v) emits (v, m) and (u, m), m = min v over u."""
     directed = edges.select(
         F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
+    ).withColumn("m", F.min("v").over(Window.partitionBy("u")))
+    return (
+        _edges_from(directed, ("v", "m"), ("u", "m"))
+        .where(F.col("u") != F.col("v"))
+        .distinct()
     )
-    mins = directed.groupBy("u").agg(F.min("v").alias("m"))
-    joined = directed.join(mins, "u")
-    restar = joined.where(F.col("v") != F.col("m")).select(
-        F.col("v").alias("u"), F.col("m").alias("v")
-    )
-    self_edge = mins.select(F.col("u"), F.col("m").alias("v"))
-    return restar.unionByName(self_edge).where(F.col("u") != F.col("v")).distinct()
 
 
 def _checkpoint_with_checksum(edges: DataFrame) -> tuple[DataFrame, tuple[int, int]]:
@@ -102,19 +110,12 @@ def connected_components(
     """
     import time
 
-    # The input IS materialized (checkpoint + checksum, one observe-fused
-    # job): _large_star references `edges` twice (sym = e ∪ swap(e)), so an
-    # unmaterialized input subtree — which in the pipeline includes the
-    # exact-collapse join over the whole normalized table — would
-    # re-evaluate per reference (measured +14s on the 280k scaling corpus
-    # when round 4 briefly dropped this). The input `.distinct()` IS
-    # dropped, though: _large_star is multiplicity-insensitive and
-    # iteration 1's trailing distinct dedupes, so the extra shuffle bought
-    # nothing.
-    edges, prev = _checkpoint_with_checksum(
-        pairs.select(F.col("a_id").alias("u"), F.col("b_id").alias("v"))
-        .where(F.col("u") != F.col("v"))
-    )
+    edges = pairs.select(
+        F.col("a_id").alias("u"), F.col("b_id").alias("v")
+    ).where(F.col("u") != F.col("v"))
+    # the empty edge set's checksum: a first round that leaves no edge has
+    # converged; any other round's checksum counts at least one edge
+    prev = (0, 0)
     iterations = 0
     walls: list[float] = []
     converged = False

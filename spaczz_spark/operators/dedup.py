@@ -5,7 +5,7 @@ training-data pipeline would use directly on a ``documents(doc_id, text)``
 table (driver testdata shape). Each has an ANSI-SQL-expressible contract so
 the DuckDB oracle can verify it exactly:
 
-- exact_duplicates / fingerprint_duplicates: hash-groupBy on sha256(text) /
+- exact_duplicates / fingerprint_duplicates: one window on sha256(text) /
   on the normalization fingerprint (one shared group plan)
 - ngram_jaccard_pairs: brute-force token-shingle Jaccard via an exploded
   equi-join (the verification measure itself; selective because k-token
@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from ..functions.layout import ensure_min_partitions
 from ..functions.signatures import (
@@ -44,21 +45,16 @@ def _duplicate_groups(docs: DataFrame, key: Column, id_col: str) -> DataFrame:
     """Groups of documents sharing ``key``: (group_id, doc_id, group_size).
 
     group_id = min doc_id of the group; only groups with >1 member returned.
-    One hash shuffle on the key; map-side partial aggregation applies.
+    One window exchange on the key: min and count over the group, no
+    aggregate joined back and no member array.
     """
     keyed = docs.select(F.col(id_col).alias("doc_id"), key.alias("key"))
-    groups = (
-        keyed.groupBy("key")
-        .agg(
-            F.min("doc_id").alias("group_id"),
-            F.count(F.lit(1)).alias("group_size"),
-            F.collect_list("doc_id").alias("members"),
-        )
-        .where(F.col("group_size") > 1)
-    )
-    return groups.select(
-        "group_id", F.explode("members").alias("doc_id"), "group_size"
-    )
+    group = Window.partitionBy("key")
+    return keyed.select(
+        F.min("doc_id").over(group).alias("group_id"),
+        "doc_id",
+        F.count(F.lit(1)).over(group).alias("group_size"),
+    ).where(F.col("group_size") > 1)
 
 
 def exact_duplicates(

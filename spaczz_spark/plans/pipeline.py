@@ -70,8 +70,7 @@ def recommended_session(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1024")
         # collect_list/collect_set plan as ObjectHashAggregate: the
         # components stage's provenance collect_set("stage") per file_id,
-        # pair_prf's per-component collect_list, exact_duplicates' and
-        # fingerprint_duplicates' member lists, and the ANN / ruler-
+        # pair_prf's per-component collect_list, and the ANN / ruler-
         # provenance groupings. Spark's default fallback limit (128
         # keys per partition) demotes them to sort-based aggregation
         # almost at once on file_id-keyed inputs and re-pays a sort per
@@ -184,40 +183,22 @@ class DedupPipeline:
         norm = self._stage("normalized", lambda: normalize(files))
 
         # ---- exact collapse (sha256 groups -> representatives) -------------
-        # narrow shuffle: only (sha, file_id) ever crosses the exchange;
-        # content stays in place until the signature join. NOT a separate
-        # checkpoint: it is a cheap slim aggregate over the committed
-        # `normalized` table, recomputed on resume — one fewer commit/read
-        # round-trip per run (the per-run orchestration constant is what
-        # bounds scaling efficiency at small corpus sizes).
-        rep_map = (
-            norm.select("content_sha256", "file_id")
-            .groupBy("content_sha256")
-            .agg(F.min("file_id").alias("rep_id"))
+        # one window exchange: only (sha, file_id) crosses it; content
+        # stays in place until the signature join. NOT a separate
+        # checkpoint: it is a slim window over the committed `normalized`
+        # table, recomputed on resume — one fewer commit/read round-trip
+        # per run (the per-run orchestration constant is what bounds
+        # scaling efficiency at small corpus sizes).
+        with_rep = norm.select(
+            "file_id",
+            F.min("file_id")
+            .over(Window.partitionBy("content_sha256"))
+            .alias("rep_id"),
         )
-        with_rep = norm.select("content_sha256", "file_id").join(
-            rep_map, "content_sha256"
-        ).select("file_id", "rep_id")
         reps = norm.join(
             with_rep.where(F.col("file_id") == F.col("rep_id")).select("file_id"),
             "file_id",
             "left_semi",
-        )
-        exact_edges = (
-            with_rep.where(F.col("file_id") != F.col("rep_id"))
-            .select(
-                F.col("rep_id").alias("a_id"),
-                F.col("file_id").alias("b_id"),
-                F.lit("exact").alias("stage"),
-                F.lit(1.0).alias("jaccard"),
-                F.lit(100).alias("edit_ratio"),
-                F.lit("sha").alias("verified_by"),
-            )
-            # referenced by BOTH the CC edge union and the provenance union
-            # in the components stage; lazy, as no driver decision waits on
-            # it: computed once in its first consuming job (the CC input
-            # checkpoint), read back by the stage write job
-            .localCheckpoint(eager=False)
         )
 
         # ---- signatures -----------------------------------------------------
@@ -352,6 +333,21 @@ class DedupPipeline:
 
         # ---- components ------------------------------------------------------
         def build_components():
+            # referenced by both the CC edge union and the provenance
+            # union; lazy, so computed once in its first consuming job (CC
+            # round 1), read back by the stage write job
+            exact_edges = (
+                with_rep.where(F.col("file_id") != F.col("rep_id"))
+                .select(
+                    F.col("rep_id").alias("a_id"),
+                    F.col("file_id").alias("b_id"),
+                    F.lit("exact").alias("stage"),
+                    F.lit(1.0).alias("jaccard"),
+                    F.lit(100).alias("edit_ratio"),
+                    F.lit("sha").alias("verified_by"),
+                )
+                .localCheckpoint(eager=False)
+            )
             edges = verified.select("a_id", "b_id").unionByName(
                 exact_edges.select("a_id", "b_id")
             )

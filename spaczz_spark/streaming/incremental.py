@@ -86,10 +86,11 @@ class IncrementalDedup:
             new_sigs if existing is None else existing.unionByName(new_sigs)
         )
         # candidates restricted to pairs touching the new batch: bucket join
-        # over the union, then semi-join on new file ids.
+        # over the union, then semi-join on new file ids. Not deduped here:
+        # `touching` ends in its own distinct.
         new_ids = new_sigs.select("file_id").distinct()
         cand = minhash_candidates(
-            corpus, cfg.bands, cfg.rows, cfg.bucket_cap
+            corpus, cfg.bands, cfg.rows, cfg.bucket_cap, dedup=False
         )
         touching = cand.join(
             new_ids.withColumnsRenamed({"file_id": "a_id"}), "a_id", "left_semi"

@@ -78,6 +78,59 @@ def test_connected_components_chain(spark):
     assert iters <= 5
 
 
+def _union_find_labels(edges):
+    """Min node of each component, by union-find over the non-self-loop
+    edges (the roots are always merged onto the smaller one)."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        if a != b:
+            ra, rb = find(a), find(b)
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def _random_edges(seed):
+    """Sparse random graph with duplicate edges in both orientations and
+    self-loops."""
+    import random
+
+    rng = random.Random(seed)
+    edges = [(rng.randrange(400), rng.randrange(400)) for _ in range(300)]
+    dups = rng.sample(edges, 60)
+    return edges + dups + [(b, a) for a, b in dups] + [(7, 7), (401, 401)]
+
+
+def _hub_edges():
+    """One hub with 4,999 neighbours (more than 4,096) in both orientations
+    and a 40-node path hanging off one neighbour, so the minimum label has
+    to travel several rounds."""
+    hub = 2500
+    edges = [(hub, x) if x % 2 else (x, hub) for x in range(5000) if x != hub]
+    path = list(range(10_000, 10_040))
+    return edges + [(4999, path[0])] + list(zip(path[1:], path[:-1]))
+
+
+@pytest.mark.parametrize(
+    "edges",
+    [_random_edges(1), _random_edges(2), _hub_edges(), []],
+    ids=["random-1", "random-2", "hub", "empty"],
+)
+def test_connected_components_matches_union_find(spark, edges):
+    df = spark.createDataFrame(edges, "a_id long, b_id long")
+    labels, _ = connected_components(df)
+    rows = [(r["file_id"], r["component_id"]) for r in labels.collect()]
+    assert len(rows) == len({f for f, _ in rows})
+    assert dict(rows) == _union_find_labels(edges)
+
+
 def test_attach_components_singletons(spark):
     ids = spark.createDataFrame([(1,), (2,), (99,)], ["file_id"])
     labels = spark.createDataFrame([(2, 1)], ["file_id", "component_id"])

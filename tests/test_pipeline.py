@@ -1,6 +1,11 @@
 """End-to-end pipeline tests: recall vs planted truth, sha invariant, resume."""
 
+import contextlib
+import json
 import os
+import time
+import urllib.parse
+import urllib.request
 
 import pytest
 
@@ -15,8 +20,37 @@ def pipeline_run(spark, tiny_corpus, tiny_files, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("ckpt"))
     cfg = DedupConfig()
     pipe = DedupPipeline(spark, cfg, root)
-    components = pipe.run(tiny_files)
+    with _job_group(spark, "pipeline_run"):
+        components = pipe.run(tiny_files)
     return pipe, components, root, cfg
+
+
+@contextlib.contextmanager
+def _job_group(spark, group):
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def _job_descriptions(spark, job_ids):
+    """Description of each finished job, from the monitoring REST API once
+    its (asynchronous) status store has caught up with the scheduler."""
+    sc = spark.sparkContext
+    port = urllib.parse.urlsplit(sc.uiWebUrl).port
+    url = (f"http://localhost:{port}/api/v1/applications/"
+           f"{sc.applicationId}/jobs")
+    deadline = time.monotonic() + 30
+    while True:
+        with urllib.request.urlopen(url, timeout=30) as r:
+            jobs = {j["jobId"]: j for j in json.load(r)}
+        done = [jobs.get(i, {}).get("status") not in (None, "RUNNING")
+                for i in job_ids]
+        if all(done) or time.monotonic() > deadline:
+            return {i: jobs.get(i, {}).get("description", "") for i in job_ids}
+        time.sleep(0.2)
 
 
 def test_components_schema(pipeline_run):
@@ -26,6 +60,30 @@ def test_components_schema(pipeline_run):
         "repo", "path", "commit", "lang", "file_id", "content_sha256",
         "component_id", "stages", "max_jaccard", "max_edit_ratio",
     } <= cols
+
+
+def test_every_job_is_labeled_and_resume_only_reads(
+    pipeline_run, spark, tiny_files
+):
+    """A fresh run submits no job outside a ``stage:<name>`` label, and a
+    full resume submits nothing beyond reading the committed stages."""
+    _, _, root, cfg = pipeline_run
+    tracker = spark.sparkContext.statusTracker()
+    fresh = tracker.getJobIdsForGroup("pipeline_run")
+    assert fresh
+    unlabeled = {
+        i: d for i, d in _job_descriptions(spark, fresh).items()
+        if not d.startswith("stage:")
+    }
+    assert not unlabeled, unlabeled
+
+    pipe2 = DedupPipeline(spark, cfg, root)
+    with _job_group(spark, "pipeline_resume"):
+        pipe2.run(tiny_files)
+    resumed = [k for k in pipe2.metrics if k.endswith("_resumed")]
+    assert len(resumed) == 5, pipe2.metrics
+    # one parquet schema read per committed stage, nothing else
+    assert len(tracker.getJobIdsForGroup("pipeline_resume")) <= len(resumed)
 
 
 def test_every_file_assigned_exactly_once(pipeline_run, tiny_corpus):
