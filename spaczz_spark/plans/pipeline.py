@@ -69,12 +69,12 @@ def recommended_session(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1024")
         # collect_list/collect_set plan as ObjectHashAggregate: the
-        # components stage's provenance collect_set("stage") per file_id,
-        # pair_prf's per-component collect_list, and the ANN / ruler-
-        # provenance groupings. Spark's default fallback limit (128
-        # keys per partition) demotes them to sort-based aggregation
-        # almost at once on file_id-keyed inputs and re-pays a sort per
-        # aggregate. 4M keys/partition is ~100MB worst case.
+        # components stage's provenance collect_set("stage") per file_id
+        # and the ANN / ruler-provenance groupings. Spark's default
+        # fallback limit (128 keys per partition) demotes them to
+        # sort-based aggregation almost at once on file_id-keyed inputs
+        # and re-pays a sort per aggregate. 4M keys/partition is ~100MB
+        # worst case.
         .config(
             "spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
             "4000000",
@@ -114,8 +114,9 @@ class DedupPipeline:
         """Identity of the input dataset, folded into every checkpoint
         manifest: resuming with the same config but a *different* input must
         rebuild (metadata-only — file listing + per-file (size, mtime) +
-        schema; for in-memory inputs the analyzed logical plan stands in
-        for the file list).
+        schema; for in-memory inputs the plan's ``semanticHash`` stands in
+        for the file list: for a local relation it hashes the rows
+        themselves, so equal rows resume and different rows rebuild).
 
         Size/mtime are included so rewriting data IN PLACE under identical
         file names (external table update, manual fixture edit) changes the
@@ -143,11 +144,11 @@ class DedupPipeline:
                     lines.append(p)
             basis = "\n".join(lines)
         else:
-            basis = files._jdf.queryExecution().analyzed().toString()
+            basis = str(files.semanticHash())
         basis += "\n" + files.schema.simpleString()
         return hashlib.sha256(basis.encode()).hexdigest()[:16]
 
-    def _stage(self, name: str, build, **write_kwargs) -> DataFrame:
+    def _stage(self, name: str, build) -> DataFrame:
         """Resume-or-build one checkpointed stage."""
         import time
 
@@ -164,7 +165,7 @@ class DedupPipeline:
         try:
             df = build()
             committed = self.catalog.write(
-                name, df, h, input_fingerprint=self._input_fp, **write_kwargs
+                name, df, h, input_fingerprint=self._input_fp
             )
         finally:
             self.spark.sparkContext.setJobDescription(None)
@@ -180,7 +181,12 @@ class DedupPipeline:
         cfg = self.config
         self._input_fp = self.input_fingerprint(files)
 
-        norm = self._stage("normalized", lambda: normalize(files))
+        # N files: every consumer reads them as N partitions on its map side
+        n_parts = self.spark.sparkContext.defaultParallelism
+        norm = self._stage(
+            "normalized",
+            lambda: normalize(files).repartition(n_parts, "file_id"),
+        )
 
         # ---- exact collapse (sha256 groups -> representatives) -------------
         # one window exchange: only (sha, file_id) crosses it; content
@@ -213,16 +219,14 @@ class DedupPipeline:
             #
             # Layout (r7, guide §2.3 "shuffle keys and metadata instead of
             # payloads"): the file_id repartition happens HERE, on the slim
-            # input (sha + content), and the checkpoint write skips its own
-            # exchange (prepartitioned=True) — previously the catalog
-            # repartitioned the 3-5x fatter UDF OUTPUT (shingles + minhash
-            # + fingerprints + a second copy of content: 169 MB shuffled
-            # for a 31 MB corpus at bench size). `content` itself is no
-            # longer checkpointed twice: the verify stages join text from
-            # the committed `normalized` table instead (content_df below).
+            # input (sha + content), not on the 3-5x fatter UDF output
+            # (shingles + minhash + fingerprints: 169 MB shuffled for a
+            # 31 MB corpus at bench size). `content` itself is not
+            # checkpointed twice: the verify stages join text from the
+            # committed `normalized` table instead (content_df below).
             pre = reps.select(
                 "file_id", "content_sha256", "content", "n_bytes"
-            ).repartition(self.spark.sparkContext.defaultParallelism, "file_id")
+            ).repartition(n_parts, "file_id")
             return with_fused_signatures(
                 pre, cfg.shingle_k, cfg.num_perm, cfg.seed,
                 cfg.substring_k, cfg.substring_w, cfg.substring_min_len,
@@ -232,9 +236,7 @@ class DedupPipeline:
                 "minhash", "simhash",
             )
 
-        signatures = self._stage(
-            "signatures", build_signatures, prepartitioned=True
-        )
+        signatures = self._stage("signatures", build_signatures)
         # slim content source for the verify stages' kernel/phase-B joins
         # (pair ids are rep ids, a subset of normalized's file_ids)
         content_df = norm.select("file_id", "content")
@@ -271,14 +273,7 @@ class DedupPipeline:
             )
             return sim.unionByName(sub)
 
-        # prepartitioned: both union branches end in a hash exchange
-        # ((a_id, b_id) groupBy / distinct), so the catalog's write-side
-        # repartition would re-shuffle an already-laid-out table (r7:
-        # fewer exchanges == fewer jobs; at bench size the stage wall is
-        # job-count-bound, at scale the saved exchange is real bytes)
-        candidates = self._stage(
-            "candidate_pairs", build_candidates, prepartitioned=True
-        )
+        candidates = self._stage("candidate_pairs", build_candidates)
 
         # ---- verification ---------------------------------------------------
         def build_verified():
@@ -325,11 +320,7 @@ class DedupPipeline:
                 .drop("rn")
             )
 
-        # prepartitioned: the best-per-pair window establishes an
-        # (a_id, b_id) hash layout right before the write
-        verified = self._stage(
-            "verified_pairs", build_verified, prepartitioned=True
-        )
+        verified = self._stage("verified_pairs", build_verified)
 
         # ---- components ------------------------------------------------------
         def build_components():
@@ -374,9 +365,7 @@ class DedupPipeline:
             )
             return assigned.join(prov, "file_id", "left")
 
-        # prepartitioned: the provenance left-join leaves the table hash
-        # partitioned by file_id already
-        return self._stage("components", build_components, prepartitioned=True)
+        return self._stage("components", build_components)
 
     # -- metrics (M8) ----------------------------------------------------------
 
@@ -432,47 +421,23 @@ class DedupPipeline:
         Recall is over the directly planted pairs; precision judges every
         predicted co-clustered pair against truth *component* co-membership
         (transitively implied pairs inside a planted cluster are correct).
-        Predicted pairs are enumerated per component (bounded by the
-        largest cluster).
+        Neither pair set is built: a component of n files predicts
+        C(n, 2) pairs, and the correct ones are the C(n, 2) of each
+        (component, truth component) group. ``truth_components`` holds one
+        row per ``file_key``, as ``generate_corpus`` writes it; a file
+        without one counts as predicted only.
         """
         keyed = components.withColumn(
             "file_key", F.concat_ws("\x1f", "repo", "path", "commit")
         ).select("file_key", "component_id")
-        grouped = keyed.groupBy("component_id").agg(
-            F.sort_array(F.collect_list("file_key")).alias("members")
-        ).where(F.size("members") > 1)
-        pred = grouped.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        "members",
-                        lambda x, i: F.transform(
-                            F.slice("members", i + 2, F.size("members")),
-                            lambda y: F.struct(
-                                x.alias("a_key"), y.alias("b_key")
-                            ),
-                        ),
-                    )
-                )
-            ).alias("p")
-        ).select("p.a_key", "p.b_key")
-        tc = truth_components.select("file_key", "component_key")
-        pred_judged = (
-            pred.join(
-                tc.withColumnsRenamed(
-                    {"file_key": "a_key", "component_key": "a_tc"}
-                ),
-                "a_key",
-            )
-            .join(
-                tc.withColumnsRenamed(
-                    {"file_key": "b_key", "component_key": "b_tc"}
-                ),
-                "b_key",
-            )
+        n_pred = _pairs_within(keyed, "component_id")
+        n_correct = _pairs_within(
+            keyed.join(
+                truth_components.select("file_key", "component_key"),
+                "file_key",
+            ),
+            "component_id", "component_key",
         )
-        n_pred = pred.count()
-        n_correct = pred_judged.where(F.col("a_tc") == F.col("b_tc")).count()
         precision = n_correct / n_pred if n_pred else 1.0
         recall = self.pair_recall(components, truth_pairs)
         f1 = (
@@ -503,3 +468,11 @@ class DedupPipeline:
         self.metrics["sha_mismatches"] = mismatches
         self.metrics["rows_missing"] = missing
         return mismatches == 0 and missing == 0
+
+
+def _pairs_within(df: DataFrame, *keys: str) -> int:
+    """Σ C(n, 2) over the groups of ``keys``: how many unordered row pairs
+    share a group, counted without building them."""
+    n = F.col("count")
+    twice = df.groupBy(*keys).count().agg(F.sum(n * (n - 1))).first()[0]
+    return int(twice or 0) // 2

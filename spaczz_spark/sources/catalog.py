@@ -55,10 +55,10 @@ class CheckpointCatalog:
         *,
         input_fingerprint: str = "",
         metrics: dict | None = None,
-        prepartitioned: bool = False,
     ) -> DataFrame:
-        """Commit a stage table; returns a reader over the committed data
-        (so downstream stages consume the checkpoint, truncating lineage)."""
+        """Commit a stage table as laid out by its builder, one file per
+        partition; returns a reader over the committed data (so downstream
+        stages consume the checkpoint, truncating lineage)."""
         if self.use_iceberg:  # pragma: no cover - needs Iceberg runtime jar
             writer = (
                 df.writeTo(f"{self.namespace}.{name}")
@@ -71,37 +71,6 @@ class CheckpointCatalog:
         path = self._dir(name)
         tmp = path + ".tmp"
         shutil.rmtree(tmp, ignore_errors=True)
-        # Write N files so downstream scans parallelize: small stage outputs
-        # (tens of MB) would otherwise collapse to 1-2 read partitions under
-        # maxPartitionBytes and serialize every UDF stage that follows. On
-        # the Iceberg path this is bucket(file_id) table layout instead.
-        #
-        # ``prepartitioned=True`` skips the exchange: the builder already
-        # established the layout BEFORE its widening computation (e.g. the
-        # signatures stage repartitions the slim input by file_id and only
-        # then runs the Arrow UDF), so repartitioning here would shuffle
-        # the 3-5x fatter output a second time for nothing (guide §2.3:
-        # shuffle the lightweight proxy, not the payload).
-        #
-        # Trade-off, accepted deliberately: a prepartitioned stage whose
-        # final exchange AQE coalesced may commit as 1-2 files at bench
-        # sizes. That is only safe for tables whose downstream consumers
-        # immediately re-shuffle (pair tables feed joins; components feeds
-        # aggregates) — a stage feeding a UDF directly (normalized ->
-        # signatures) must keep the explicit N-way repartition, which is
-        # why `normalized` does not pass prepartitioned.
-        n_out = self.spark.sparkContext.defaultParallelism
-        if not prepartitioned:
-            if "file_id" in df.columns:
-                df = df.repartition(n_out, "file_id")
-            elif "a_id" in df.columns:
-                # pair tables: hash layout on a_id — equivalent spread (ids
-                # are xxhash64 values) without round-robin repartition's
-                # mandatory local sort (sortBeforeRepartition, guide §2.5)
-                df = df.repartition(n_out, "a_id")
-            else:
-                df = df.repartition(n_out)
-
         # Lineage counters ride the write job itself via observe() — no
         # extra count pass over the committed table (north rule: per-stage
         # rows in/out recorded alongside every checkpoint).

@@ -112,6 +112,82 @@ def test_pair_prf(pipeline_run, spark, tiny_corpus):
     assert prf["f1"] >= 0.97
 
 
+def test_pair_prf_matches_bruteforce(spark, tmp_path):
+    """``pair_prf``'s closed-form counts equal a count over every file pair:
+    a predicted component spanning two truth components, a truth component
+    split across two predicted ones, a file with no truth row, singletons."""
+    comp_of = {  # file -> predicted component
+        "f0": 1, "f1": 1, "f2": 1, "f3": 1,  # truth A + truth B
+        "f4": 2, "f5": 2,                    # truth C, first half
+        "f6": 3, "f7": 3, "f8": 3,           # truth C, second half + f8
+        "f9": 4, "f10": 5, "f11": 6,         # singletons
+    }
+    truth_of = {  # f8 has no truth row
+        "f0": "A", "f1": "A", "f2": "B", "f3": "B",
+        "f4": "C", "f5": "C", "f6": "C", "f7": "C",
+        "f9": "D", "f10": "D", "f11": "E",
+    }
+    planted = [("f0", "f1"), ("f2", "f3"), ("f4", "f5"), ("f4", "f6"),
+               ("f6", "f7"), ("f9", "f10")]
+
+    def key(f):
+        return f"r\x1f{f}\x1fc"
+
+    components = spark.createDataFrame(
+        [("r", f, "c", c) for f, c in comp_of.items()],
+        "repo string, path string, commit string, component_id long",
+    )
+    truth_pairs = spark.createDataFrame(
+        [(key(a), key(b)) for a, b in planted], "a_key string, b_key string"
+    )
+    truth_components = spark.createDataFrame(
+        [(key(f), t) for f, t in truth_of.items()],
+        "file_key string, component_key string",
+    )
+    prf = DedupPipeline(spark, DedupConfig(), str(tmp_path)).pair_prf(
+        components, truth_pairs, truth_components
+    )
+
+    files = sorted(comp_of)
+    pred = [(a, b) for i, a in enumerate(files) for b in files[i + 1:]
+            if comp_of[a] == comp_of[b]]
+    correct = [(a, b) for a, b in pred
+               if a in truth_of and b in truth_of
+               and truth_of[a] == truth_of[b]]
+    hit = [p for p in planted if comp_of[p[0]] == comp_of[p[1]]]
+    precision = len(correct) / len(pred)
+    recall = len(hit) / len(planted)
+    assert (len(pred), len(correct)) == (10, 4)
+    assert prf == {
+        "precision": precision,
+        "recall": recall,
+        "f1": 2 * precision * recall / (precision + recall),
+        "predicted_pairs": len(pred),
+        "correct_pairs": len(correct),
+    }
+
+
+def test_normalized_commits_one_file_per_core(pipeline_run, spark):
+    """The ``normalized`` builder lays its table out in defaultParallelism
+    partitions, so its consumers' map sides read that many files."""
+    pipe, _, _, _ = pipeline_run
+    manifest = pipe.catalog.manifest("normalized")
+    assert manifest["n_files"] == spark.sparkContext.defaultParallelism
+
+
+def test_in_memory_input_fingerprint_follows_rows(spark, tiny_corpus):
+    """An in-memory input is identified by its rows: equal rows built by
+    separate ``createDataFrame`` calls resume, different rows rebuild."""
+    rows = tiny_corpus.files
+    fp = DedupPipeline.input_fingerprint
+    first = fp(spark.createDataFrame(rows))
+    assert fp(spark.createDataFrame(rows.copy())) == first
+    edited = rows.copy()
+    edited.loc[0, "content"] += " edited"
+    assert fp(spark.createDataFrame(edited)) != first
+    assert fp(spark.createDataFrame(rows.iloc[1:])) != first
+
+
 def test_sha_invariant(pipeline_run, tiny_files):
     pipe, components, _, _ = pipeline_run
     assert pipe.sha_invariant_holds(tiny_files, components)
