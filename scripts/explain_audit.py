@@ -11,6 +11,7 @@ runs them interpreted).
 import io
 import os
 import sys
+import tempfile
 from contextlib import redirect_stdout
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -23,6 +24,49 @@ def grab(df) -> str:
     with redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+def candidate_pairs_plan(spark, files, root):
+    """The DataFrame the pipeline commits as ``candidate_pairs``: the
+    pipeline runs over ``files`` (checkpoints under ``root``) until that
+    write, which is captured instead of executed."""
+    from spaczz_spark.plans.config import DedupConfig
+    from spaczz_spark.plans.pipeline import DedupPipeline
+
+    class Captured(Exception):
+        pass
+
+    pipe = DedupPipeline(spark, DedupConfig(), root)
+    commit, captured = pipe.catalog.write, {}
+
+    def write(name, df, *args, **kwargs):
+        if name == "candidate_pairs":
+            captured["df"] = df
+            raise Captured
+        return commit(name, df, *args, **kwargs)
+
+    pipe.catalog.write = write
+    try:
+        pipe.run(files)
+    except Captured:
+        return captured["df"]
+    raise RuntimeError("the pipeline never committed candidate_pairs")
+
+
+def one_aggregate_over_union(df) -> str:
+    """Fails unless the physical plan has exactly one aggregate (a partial
+    + final pair) with the sources' Union directly below it (further
+    Unions, each source's all-pairs + star projection, sit deeper)."""
+    tree = df._jdf.queryExecution().executedPlan().toString().splitlines()
+    aggs = [i for i, line in enumerate(tree) if "Aggregate(" in line]
+    unions = [i for i, line in enumerate(tree) if line.endswith("Union")]
+    if len(aggs) != 2 or not unions or unions[0] < aggs[-1]:
+        raise SystemExit(
+            f"candidate_pairs: expected one aggregate over the Union, got "
+            f"{len(aggs)} aggregate nodes:\n" + "\n".join(tree)
+        )
+    return ("Verified by the script: 2 aggregate nodes (partial + final), "
+            "the Union of the sources below them.")
 
 
 def main():
@@ -63,7 +107,7 @@ def main():
     # minhash_candidates checkpoints the sized (bucket_key, fid, bsize,
     # bmin) window table lazily; this plan is the pair join and star
     # projection over it
-    cand = minhash_candidates(sig, dedup=False)
+    cand = minhash_candidates(sig)
     sections.append((
         "MinHash LSH candidates — one salted all-pairs join over the sized "
         "table",
@@ -116,6 +160,20 @@ def main():
         "exactly two ArrowEvalPython nodes (screen, windowed kernel).",
         grab(subv),
     ))
+
+    with tempfile.TemporaryDirectory() as root:
+        cand_plan = candidate_pairs_plan(spark, files, root)
+        sections.append((
+            "candidate_pairs stage — one aggregate over the three-source "
+            "union",
+            "Check: the MinHash, SimHash and substring sources are unioned "
+            "raw (one row per shared bucket) and deduplicated ONCE: a "
+            "single partial + final aggregate pair on (a_id, b_id, stage = "
+            "'substring') above the Union (SortAggregate: min over the "
+            "string stage), and no other aggregate in the stage. "
+            + one_aggregate_over_union(cand_plan),
+            grab(cand_plan),
+        ))
 
     sections.append((
         "TPC-H-style aggregation (tpch_q1)",

@@ -279,8 +279,8 @@ def with_fused_signatures(
 ) -> DataFrame:
     """Add all signature columns via the single-pass fused UDF (see
     :func:`make_fused_signature_udf`). With ``fp_k`` set, also adds
-    ``fingerprints`` (with the winnowing-parameter metadata that
-    ``substring_candidates`` validates) and ``fp_positions``.
+    ``fingerprints`` (with the winnowing-parameter metadata, whose ``fp_k``
+    ``verify_substring_pairs`` reads) and ``fp_positions``.
 
     The three fingerprint knobs travel together: a partial set would only
     fail deep inside the executor UDF (TypeError on a None comparison), so

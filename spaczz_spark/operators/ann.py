@@ -392,7 +392,7 @@ def lsh_cosine_pairs(
         F.col("vec_id").alias("file_id"),
         F.explode(sketch("nvec")).alias("bucket_key"),
     )
-    cand = pairs_from_buckets(buckets, bucket_cap, star_cap=star_cap)
+    cand = pairs_from_buckets(buckets, bucket_cap, star_cap).distinct()
     a, b = _pair_sides(n)
     return _threshold_pairs(cand.join(a, "a_id").join(b, "b_id"), threshold)
 

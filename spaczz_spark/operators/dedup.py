@@ -225,4 +225,4 @@ def minhash_neardup_pairs(
     """
     sigs = _doc_signatures(docs, k, num_perm, seed, id_col, text_col)
     cand = minhash_candidates(sigs, bands, rows, bucket_cap, star_cap=star_cap)
-    return _verify_jaccard(cand.select("a_id", "b_id"), sigs, threshold)
+    return _verify_jaccard(cand.select("a_id", "b_id").distinct(), sigs, threshold)

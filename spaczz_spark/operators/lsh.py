@@ -14,7 +14,11 @@ Scale design:
   ``posexplode``d — one shuffle on the band key.
 - one pair enumerator (``pairs_from_buckets``) under every bucket source
   (MinHash bands, SimHash blocks, substring fingerprints, hyperplane ANN):
-  one salted all-pairs self-join plus a star projection.
+  one salted all-pairs self-join plus a star projection. It returns raw
+  pairs, one row per bucket a pair shares; each consumer deduplicates
+  once, where its pair sets meet (the pipeline's one aggregate over all
+  candidate sources, the streaming probe's one ``distinct``, the pair-set
+  operators' own ``distinct``).
 - **skew**: a bucket larger than ``bucket_cap`` is salted — its join key is
   split ``N_SALT`` ways so one hot bucket is not one straggler task. Above
   ``star_cap`` all-pairs would be O(n²) (a 10k-member boilerplate bucket
@@ -46,7 +50,6 @@ def pairs_from_buckets(
     buckets: DataFrame,
     bucket_cap: int = 64,
     star_cap: int = 4096,
-    dedup: bool = True,
 ) -> DataFrame:
     """Enumerate candidate pairs from (bucket_key, file_id) rows.
 
@@ -65,9 +68,11 @@ def pairs_from_buckets(
       transitive clustering. (Exact-duplicate collapse upstream makes
       this tier rare: it fires only for near-identical-but-not-equal
       mega-families.) With ``bucket_cap > star_cap`` a bucket can hit
-      both; its star edges are a subset of its pairs.
+      both; its star edges repeat some of its pairs.
 
-    Returns distinct (a_id, b_id) with a_id < b_id.
+    Returns (a_id, b_id) with a_id < b_id, one row per bucket the pair
+    shares (per pair of bucket rows, if a bucket repeats an id): not
+    deduplicated, so the caller pays one distinct where its sources meet.
     """
     w = Window.partitionBy("bucket_key")
     sized = buckets.select(
@@ -118,10 +123,7 @@ def pairs_from_buckets(
         .select(F.col("bmin").alias("a_id"), F.col("fid").alias("b_id"))
     )
 
-    out = all_pairs.unionByName(star_pairs)
-    # callers that union several candidate sources and groupBy afterwards
-    # pass dedup=False to avoid paying this shuffle once per source
-    return out.distinct() if dedup else out
+    return all_pairs.unionByName(star_pairs)
 
 
 def minhash_candidates(
@@ -129,10 +131,10 @@ def minhash_candidates(
     bands: int = 64,
     rows: int = 2,
     bucket_cap: int = 64,
-    dedup: bool = True,
     star_cap: int = 4096,
 ) -> DataFrame:
-    """Candidate pairs from MinHash LSH banding: (a_id, b_id, stage).
+    """Candidate pairs from MinHash LSH banding: (a_id, b_id, stage), one
+    row per shared band.
 
     ``sig_df`` needs (file_id, minhash). One explode + one shuffle on the
     band bucket key. Every banded row goes through the bucket-sizing
@@ -143,18 +145,18 @@ def minhash_candidates(
         "file_id",
         F.explode(pack_band_keys(bands, rows)).alias("bucket_key"),
     )
-    return pairs_from_buckets(
-        banded, bucket_cap, dedup=dedup, star_cap=star_cap
-    ).withColumn("stage", F.lit("minhash"))
+    return pairs_from_buckets(banded, bucket_cap, star_cap).withColumn(
+        "stage", F.lit("minhash")
+    )
 
 
 def simhash_candidates(
     sig_df: DataFrame,
     max_hamming: int = 3,
     bucket_cap: int = 64,
-    dedup: bool = True,
 ) -> DataFrame:
-    """Candidate pairs with SimHash hamming distance <= max_hamming.
+    """Candidate pairs with SimHash hamming distance <= max_hamming, one
+    row per shared block.
 
     Pigeonhole blocking: the 64-bit signature is split into
     ``max_hamming + 1`` blocks; any pair within the hamming budget must agree
@@ -178,7 +180,7 @@ def simhash_candidates(
     blocks = sig_df.select(
         "file_id", F.explode(F.array(*block_keys)).alias("bucket_key")
     )
-    pairs = pairs_from_buckets(blocks, bucket_cap, dedup=dedup)
+    pairs = pairs_from_buckets(blocks, bucket_cap)
     return (
         attach_pair_sides(pairs, sig_df, ["simhash"])
         .where(

@@ -223,54 +223,25 @@ def _sliding_first_argmin(h: np.ndarray, w: int) -> np.ndarray:
     return np.where(s_min <= p_min, s_arg, p_arg)
 
 
-def substring_candidates(
-    corpus: DataFrame,
-    *,
-    k: int = 32,
-    w: int = 32,
-    bucket_cap: int = 64,
-    min_bytes: int = 100,
-) -> DataFrame:
-    """Candidate pairs sharing a winnowed fingerprint: (a_id, b_id, stage).
+def substring_candidates(corpus: DataFrame, *, bucket_cap: int = 64) -> DataFrame:
+    """Candidate pairs sharing a winnowed fingerprint: (a_id, b_id, stage),
+    one row per shared fingerprint.
 
     ``corpus`` must carry the precomputed ``fingerprints`` column of the
     fused signatures stage (``functions.signatures.with_fused_signatures``
     with ``fp_k``/``fp_w``/``fp_min_bytes`` set), so this stage is pure
-    JVM: explode + bucket joins, no Arrow pass over content at all.
-    Documents below ``min_bytes`` carry empty arrays — tiny files share
+    JVM: explode + bucket joins, no Arrow pass over content at all. The
+    winnowing parameters are the column's: the fused stage stamps them into
+    its metadata, where :func:`verify_substring_pairs` reads ``k``.
+    Documents below ``fp_min_bytes`` carry empty arrays — tiny files share
     boilerplate k-grams and are already fully covered by the MinHash path —
-    so the explode drops them. The fused stage stamps its winnowing
-    parameters into the column's metadata (which survives parquet
-    checkpoints); they are checked against the requested (k, w, min_bytes)
-    and a mismatch raises — a column merely *named* ``fingerprints`` but
-    computed with different winnowing would silently yield wrong candidate
-    pairs otherwise. Columns without metadata (hand-built inputs) get a
-    warning instead of a hard failure.
+    so the explode drops them.
     """
     if "fingerprints" not in corpus.columns:
         raise ValueError(
             "substring_candidates needs a precomputed `fingerprints` "
-            "column; build the corpus with with_fused_signatures("
-            f"fp_k={k}, fp_w={w}, fp_min_bytes={min_bytes})"
-        )
-    meta = corpus.schema["fingerprints"].metadata or {}
-    have = tuple(meta.get(key) for key in ("fp_k", "fp_w", "fp_min_bytes"))
-    if all(v is not None for v in have):
-        if tuple(int(v) for v in have) != (k, w, min_bytes):
-            raise ValueError(
-                f"precomputed fingerprints were winnowed with "
-                f"(k, w, min_bytes)={tuple(int(v) for v in have)} but "
-                f"this stage was asked for {(k, w, min_bytes)}; "
-                f"recompute the signatures or align the config"
-            )
-    else:
-        import warnings
-
-        warnings.warn(
-            "fingerprints column carries no winnowing-parameter "
-            f"metadata; trusting it matches (k={k}, w={w}, "
-            f"min_bytes={min_bytes})",
-            stacklevel=2,
+            "column; build the corpus with with_fused_signatures(fp_k=..., "
+            "fp_w=..., fp_min_bytes=...)"
         )
     buckets = corpus.select("file_id", F.explode("fingerprints").alias("bucket_key"))
     return pairs_from_buckets(buckets, bucket_cap).withColumn(
@@ -589,6 +560,10 @@ def make_anchor_screen_udf(
     """Screen pandas UDF: (n_bytes, fingerprints, fp_positions) x 2 sides
     -> ``struct<passes boolean, anchors array<int>>`` — NO content input.
 
+    ``k`` is the k-gram length the fingerprints were winnowed with;
+    :func:`verify_substring_pairs` passes the ``fp_k`` metadata of the
+    ``fingerprints`` column.
+
     Runs :func:`anchor_votes` on the slim fingerprint arrays so the verify
     stage can decide which candidate pairs are worth joining ``content``
     onto at all.  On the scale2 corpus ~85% of substring candidates are
@@ -674,7 +649,6 @@ def verify_substring_pairs(
     *,
     min_len: int = 100,
     min_partial: int | None = None,
-    k: int = 32,
     content_df: DataFrame | None = None,
 ) -> DataFrame:
     """Keep candidate pairs where one side is contained in the other.
@@ -694,8 +668,10 @@ def verify_substring_pairs(
     slim/kernel split):
 
     - with ``min_partial`` set, the corpus must carry the signatures
-      stage's ``fingerprints``/``fp_positions``/``n_bytes`` columns. Only
-      those slim arrays are joined first and screened with
+      stage's ``fingerprints``/``fp_positions``/``n_bytes`` columns, and
+      ``fingerprints`` its ``fp_k`` metadata (the k-gram length the
+      screen scores with; it survives parquet checkpoints). Only those
+      slim arrays are joined first and screened with
       :func:`anchor_votes` — ~85% of candidates on the scale2 corpus are
       shared-boilerplate pairs rejected here — so the multi-KB text of
       rejected pairs never crosses the exchange or the Arrow channel;
@@ -717,14 +693,16 @@ def verify_substring_pairs(
     else:
         slim_cols = ["n_bytes", "fingerprints", "fp_positions"]
         missing = [c for c in slim_cols if c not in corpus.columns]
-        if missing:
+        k = None if missing else corpus.schema["fingerprints"].metadata.get("fp_k")
+        if k is None:
             raise ValueError(
                 f"verify_substring_pairs(min_partial={min_partial}) needs "
-                f"the precomputed {missing} column(s); build the corpus "
-                f"with with_fused_signatures(fp_k={k}, fp_w=..., "
-                "fp_min_bytes=...) and octet_length(content) as n_bytes"
+                f"the precomputed {missing or 'fp_k metadata of fingerprints'}; "
+                "build the corpus with with_fused_signatures(fp_k=..., "
+                "fp_w=..., fp_min_bytes=...) and octet_length(content) as "
+                "n_bytes"
             )
-        screen = make_anchor_screen_udf(min_len, min_partial, k)
+        screen = make_anchor_screen_udf(min_len, min_partial, int(k))
         anchored = (
             attach_pair_sides(pairs, corpus, slim_cols)
             .withColumn(

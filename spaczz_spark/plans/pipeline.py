@@ -115,8 +115,14 @@ class DedupPipeline:
         manifest: resuming with the same config but a *different* input must
         rebuild (metadata-only — file listing + per-file (size, mtime) +
         schema; for in-memory inputs the plan's ``semanticHash`` stands in
-        for the file list: for a local relation it hashes the rows
-        themselves, so equal rows resume and different rows rebuild).
+        for the file list).
+
+        File-backed inputs (parquet) and ``createDataFrame`` over pandas,
+        which Spark plans as a local relation hashed by its rows, are the
+        resumable ones: equal rows resume, different rows rebuild.
+        ``createDataFrame`` over a Python list or an RDD plans as a
+        ``LogicalRDD``, whose hash follows the RDD object, so such an input
+        gets a new fingerprint on every call and always rebuilds.
 
         Size/mtime are included so rewriting data IN PLACE under identical
         file names (external table update, manual fixture edit) changes the
@@ -149,29 +155,30 @@ class DedupPipeline:
         return hashlib.sha256(basis.encode()).hexdigest()[:16]
 
     def _stage(self, name: str, build) -> DataFrame:
-        """Resume-or-build one checkpointed stage."""
+        """Resume-or-build one checkpointed stage; either way ``{name}_rows``
+        reports the committed row count from the stage's manifest."""
         import time
 
         h = self.config.config_hash()
-        cached = self.catalog.read_if_valid(name, h, self._input_fp)
-        if cached is not None:
+        committed = self.catalog.read_if_valid(name, h, self._input_fp)
+        if committed is not None:
             self.metrics[f"{name}_resumed"] = 1
-            return cached
-        t0 = time.time()
-        # label every job of this stage (guide §1.5) — any job build()
-        # runs and the write job all carry the stage name in the UI / REST
-        # API, which is what the profiling harness groups wall time by
-        self.spark.sparkContext.setJobDescription(f"stage:{name}")
-        try:
-            df = build()
-            committed = self.catalog.write(
-                name, df, h, input_fingerprint=self._input_fp
-            )
-        finally:
-            self.spark.sparkContext.setJobDescription(None)
+        else:
+            t0 = time.time()
+            # label every job of this stage (guide §1.5) — any job build()
+            # runs and the write job all carry the stage name in the UI /
+            # REST API, which is what the profiling harness groups wall
+            # time by
+            self.spark.sparkContext.setJobDescription(f"stage:{name}")
+            try:
+                committed = self.catalog.write(
+                    name, build(), h, input_fingerprint=self._input_fp
+                )
+            finally:
+                self.spark.sparkContext.setJobDescription(None)
+            self.metrics[f"{name}_sec"] = round(time.time() - t0, 2)
         manifest = self.catalog.manifest(name) or {}
         self.metrics[f"{name}_rows"] = manifest.get("rows", -1)
-        self.metrics[f"{name}_sec"] = round(time.time() - t0, 2)
         return committed
 
     def run(self, files: DataFrame) -> DataFrame:
@@ -247,31 +254,26 @@ class DedupPipeline:
             # (operators/lsh.py): all three are materialized inside the
             # stage's write job. Building them runs only what AQE needs to
             # plan each checkpoint, its window's shuffle-map stage.
-            mh = minhash_candidates(
-                signatures, cfg.bands, cfg.rows, cfg.bucket_cap, dedup=False
-            )
-            sh = simhash_candidates(
-                signatures, cfg.max_hamming, cfg.bucket_cap, dedup=False
-            )
-            # NOTE: substring candidates are NOT anti-joined against the
-            # set-similarity candidates — a pair can band-collide in
-            # MinHash (likely even at Jaccard ~0.25), fail Jaccard/edit
-            # verification there, and still be a true verbatim-containment
-            # duplicate that only the containment verifier can accept. Both
-            # rows survive; the verified union keeps the best record per
-            # pair.
-            sub = substring_candidates(
-                signatures, k=cfg.substring_k, w=cfg.substring_w,
-                bucket_cap=cfg.bucket_cap, min_bytes=cfg.substring_min_len,
-            )
-            # one row per (pair, source-stage); set-similarity pairs deduped
-            # with minhash taking precedence (M4: union of match sources)
-            sim = (
+            mh = minhash_candidates(signatures, cfg.bands, cfg.rows, cfg.bucket_cap)
+            sh = simhash_candidates(signatures, cfg.max_hamming, cfg.bucket_cap)
+            sub = substring_candidates(signatures, bucket_cap=cfg.bucket_cap)
+            # The sources return one row per shared bucket; ONE aggregate
+            # over their union keeps one row per (pair, kind): a
+            # set-similarity row, minhash taking precedence over simhash
+            # (M4: union of match sources), and a substring row. The
+            # substring row is NOT folded into the other — a pair can
+            # band-collide in MinHash (likely even at Jaccard ~0.25), fail
+            # Jaccard/edit verification there, and still be a true
+            # verbatim-containment duplicate that only the containment
+            # verifier can accept. Both rows survive; the verified union
+            # keeps the best record per pair.
+            return (
                 mh.unionByName(sh)
-                .groupBy("a_id", "b_id")
+                .unionByName(sub)
+                .groupBy("a_id", "b_id", F.col("stage") == "substring")
                 .agg(F.min("stage").alias("stage"))
+                .select("a_id", "b_id", "stage")
             )
-            return sim.unionByName(sub)
 
         candidates = self._stage("candidate_pairs", build_candidates)
 
@@ -306,7 +308,6 @@ class DedupPipeline:
                 # reference's partial_ratio, gated at min_r2; the
                 # oracle-exact config disables it (not SQL-expressible)
                 min_partial=cfg.min_r2 if cfg.substring_partial else None,
-                k=cfg.substring_k,
                 content_df=content_df,
             )
             allv = v1.unionByName(v2)

@@ -488,7 +488,7 @@ def q_files_substring_partial(spark, sf_dir):
     ).repartition(
         spark.sparkContext.defaultParallelism, "file_id"
     ).localCheckpoint(eager=False)
-    cand = substring_candidates(corpus)
+    cand = substring_candidates(corpus).distinct()
     return verify_substring_pairs(
         cand, corpus, min_len=100, min_partial=75
     ).select(

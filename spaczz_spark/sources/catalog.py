@@ -14,9 +14,9 @@ matches the current run config — config changes invalidate downstream
 checkpoints automatically (the hash covers every semantic knob: shingle k,
 permutations, bands/rows, thresholds, seeds).
 
-The manifest also records per-stage lineage counters (rows in/out,
-candidates, verified pairs — the north rule's metrics requirement), so a
-resumed run can report the full pipeline history without recomputation.
+The manifest also records each stage's lineage: the rows it committed
+(counted by the write job itself), its file count and its schema, so a
+resumed run reports every stage's row count without recomputation.
 """
 
 from __future__ import annotations

@@ -75,7 +75,7 @@ class IncrementalDedup:
         """Process one micro-batch of new files; returns new verified pairs."""
         cfg = self.config
         # materialized once: referenced by the candidate join, the verify
-        # joins, the new-id semi-join and the final append, and the
+        # joins, the batch-id semi-join and the final append, and the
         # nondeterministic UDF marker blocks subtree reuse, so each
         # reference would re-run the Arrow signature UDF. Lazy, like every
         # intermediate the driver does not need at once: computed inside
@@ -86,20 +86,17 @@ class IncrementalDedup:
             new_sigs if existing is None else existing.unionByName(new_sigs)
         )
         # candidates restricted to pairs touching the new batch: bucket join
-        # over the union, then semi-join on new file ids. Not deduped here:
-        # `touching` ends in its own distinct.
-        new_ids = new_sigs.select("file_id").distinct()
-        cand = minhash_candidates(
-            corpus, cfg.bands, cfg.rows, cfg.bucket_cap, dedup=False
+        # over the union, then ONE semi-join of the pair endpoints on the
+        # batch's ids (a semi join ignores duplicate keys), then one
+        # distinct for the pairs that share several bands or have both
+        # endpoints in the batch
+        cand = minhash_candidates(corpus, cfg.bands, cfg.rows, cfg.bucket_cap)
+        touching = (
+            cand.withColumn("file_id", F.explode(F.array("a_id", "b_id")))
+            .join(new_sigs.select("file_id"), "file_id", "left_semi")
+            .drop("file_id")
+            .distinct()
         )
-        touching = cand.join(
-            new_ids.withColumnsRenamed({"file_id": "a_id"}), "a_id", "left_semi"
-        ).unionByName(
-            cand.join(
-                new_ids.withColumnsRenamed({"file_id": "b_id"}), "b_id",
-                "left_semi",
-            )
-        ).distinct()
         verified = verify_pairs(
             touching, corpus,
             min_r2=cfg.min_r2, jaccard_min=cfg.jaccard_min,

@@ -147,8 +147,9 @@ def test_fused_equals_composed_without_fingerprints(sig_input):
 
 
 def test_fused_fingerprint_metadata_survives(sig_input):
-    """substring_candidates validates winnowing params from the column
-    metadata — the fused path must stamp them identically."""
+    """The substring stage reads its winnowing params from the column
+    metadata (verify_substring_pairs scores with its fp_k) — the fused path
+    must stamp them identically."""
     fused = with_fused_signatures(sig_input, 3, 128, 42, 32, 32, 100)
     meta = fused.schema["fingerprints"].metadata
     assert (meta["fp_k"], meta["fp_w"], meta["fp_min_bytes"]) == (32, 32, 100)

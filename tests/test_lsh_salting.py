@@ -4,13 +4,15 @@
 all pairs of buckets up to ``max(bucket_cap, star_cap)`` members in one
 self-join on (bucket, salt) — salted ``N_SALT`` ways above ``bucket_cap``
 — and emits star edges around the bucket minimum above ``star_cap``.
+The enumerator does not deduplicate: a pair appears once per bucket it
+shares, and its consumers pay one distinct where their sources meet.
 ``simhash_candidates`` runs on top of it and must equal a brute-force
 hamming check. Building a candidate plan materializes nothing: the sized
 bucket table is checkpointed lazily, inside the job that consumes it.
 """
 
 import random
-from collections import defaultdict
+from collections import Counter, defaultdict
 from itertools import combinations
 
 import pytest
@@ -26,22 +28,26 @@ from spaczz_spark.operators.substring import substring_candidates
 
 
 def bruteforce_pairs(rows, bucket_cap, star_cap):
-    """The enumeration rules in plain Python over (bucket_key, id) rows.
-    Salting never changes the pair set, so only the size bound shapes it:
-    all pairs up to ``max(bucket_cap, star_cap)`` members, star edges above
-    ``star_cap`` (both for a bucket in between when ``bucket_cap >
-    star_cap``, whose union is all pairs); bucket size counts duplicate
-    rows, as the sizing window does."""
-    buckets = defaultdict(list)
+    """The enumeration rules in plain Python over (bucket_key, id) rows, as
+    a multiset: one pair per pair of bucket rows, so once per bucket a pair
+    shares when no bucket repeats an id. Salting never changes the pairs,
+    so only the size bound shapes them: all pairs up to ``max(bucket_cap,
+    star_cap)`` members, star edges above ``star_cap`` (both for a bucket
+    in between when ``bucket_cap > star_cap``); bucket size counts
+    duplicate rows, as the sizing window does."""
+    buckets = defaultdict(Counter)
     for key, fid in rows:
-        buckets[key].append(fid)
-    pairs = set()
+        buckets[key][fid] += 1
+    pairs = Counter()
     for members in buckets.values():
-        ids = sorted(set(members))
-        if len(members) <= max(bucket_cap, star_cap):
-            pairs |= set(combinations(ids, 2))
-        else:
-            pairs |= {(ids[0], m) for m in ids[1:]}
+        ids = sorted(members)
+        size = sum(members.values())
+        if size <= max(bucket_cap, star_cap):
+            for a, b in combinations(ids, 2):
+                pairs[a, b] += members[a] * members[b]
+        if size > star_cap:
+            for m in ids[1:]:
+                pairs[ids[0], m] += members[m]
     return pairs
 
 
@@ -72,18 +78,22 @@ def test_salted_tiers_enumerate_exactly_the_small_and_mid_pairs(spark):
     assert got == expect
 
 
-def test_duplicate_bucket_rows_do_not_duplicate_pairs(spark):
+def test_pair_repeats_once_per_shared_bucket(spark):
     df = spark.createDataFrame(
-        [("b", 1), ("b", 2), ("c", 1), ("c", 2)], ["bucket_key", "file_id"]
+        [("b", 1), ("b", 2), ("c", 1), ("c", 2), ("d", 1), ("d", 3)],
+        ["bucket_key", "file_id"],
     )
     out = pairs_from_buckets(df, bucket_cap=8).collect()
-    assert [(r["a_id"], r["b_id"]) for r in out] == [(1, 2)]
+    assert sorted((r["a_id"], r["b_id"]) for r in out) == [
+        (1, 2), (1, 2), (1, 3)
+    ]
 
 
 @pytest.mark.parametrize("bucket_cap,star_cap", [(8, 30), (1, 30), (40, 30)])
 def test_random_layout_pair_set_matches_bruteforce(spark, bucket_cap, star_cap):
     """Property-style cross-check on a pseudo-random bucket layout that
-    hits every tier, with duplicate (bucket, id) rows sprinkled in.
+    hits every tier, with duplicate (bucket, id) rows sprinkled in: the
+    pairs equal the brute-force multiset, repeats included.
     ``bucket_cap=1`` salts every bucket; ``bucket_cap > star_cap`` is the
     cap-above-star case."""
     rng = random.Random(7)
@@ -103,10 +113,9 @@ def test_random_layout_pair_set_matches_bruteforce(spark, bucket_cap, star_cap):
             df, bucket_cap=bucket_cap, star_cap=star_cap
         ).collect()
     ]
-    assert len(got) == len(set(got))
     expect = bruteforce_pairs(rows, bucket_cap, star_cap)
-    assert set(got) == expect
-    assert expect  # non-vacuous
+    assert Counter(got) == expect
+    assert any(n > 1 for n in expect.values())  # repeats are exercised
 
 
 def _signed64(v):
@@ -116,7 +125,8 @@ def _signed64(v):
 def test_simhash_candidates_match_bruteforce_hamming(spark):
     """Seeded random 64-bit signatures plus planted pairs at exactly
     ``max_hamming`` and ``max_hamming + 1`` bits, and one block value
-    shared by more than ``bucket_cap`` ids so the salted path runs."""
+    shared by more than ``bucket_cap`` ids so the salted path runs. Each
+    pair within the budget appears once per block it agrees on."""
     max_hamming, bucket_cap = 3, 8
     rng = random.Random(11)
     sigs = {i: rng.getrandbits(64) for i in range(60)}
@@ -146,10 +156,18 @@ def test_simhash_candidates_match_bruteforce_hamming(spark):
     assert any(bin(sigs[a] ^ sigs[b]).count("1") == max_hamming for a, b in expect)
     assert (1002, 1003) not in expect  # planted at max_hamming + 1
 
-    for dedup in (True, False):
-        out = simhash_candidates(df, max_hamming, bucket_cap, dedup=dedup)
-        got = {(r["a_id"], r["b_id"]) for r in out.distinct().collect()}
-        assert got == expect, dedup
+    def shared_blocks(a, b):
+        bits = 64 // (max_hamming + 1)
+        mask = (1 << bits) - 1
+        return sum(
+            (sigs[a] >> i * bits) & mask == (sigs[b] >> i * bits) & mask
+            for i in range(max_hamming + 1)
+        )
+
+    out = simhash_candidates(df, max_hamming, bucket_cap)
+    got = Counter((r["a_id"], r["b_id"]) for r in out.collect())
+    assert got == Counter({p: shared_blocks(*p) for p in expect})
+    assert any(n > 1 for n in got.values())  # repeats are exercised
 
 
 def test_building_candidates_submits_no_job(spark):

@@ -6,6 +6,7 @@ import os
 import time
 import urllib.parse
 import urllib.request
+from itertools import combinations
 
 import pytest
 
@@ -413,11 +414,11 @@ def test_inplace_rewrite_invalidates_resume(spark, tmp_path_factory):
 
 
 def test_substring_candidates_fingerprint_metadata_guard(spark):
-    """Round-4 advice: substring_candidates must verify the winnowing
-    parameters stamped in the precomputed column's metadata (mismatch ->
-    ValueError), warn when the column carries no provenance at all, and
-    refuse a corpus without the column."""
-    import warnings
+    """The substring stage takes its winnowing parameters from the
+    ``fingerprints`` column: the fused stage stamps them into its metadata,
+    which survives a parquet checkpoint, and the partial verifier reads
+    ``k`` there — a column without it is refused, not guessed at."""
+    import tempfile
 
     import pyspark.sql.functions as F
 
@@ -425,7 +426,10 @@ def test_substring_candidates_fingerprint_metadata_guard(spark):
         normalize,
         with_fused_signatures,
     )
-    from spaczz_spark.operators.substring import substring_candidates
+    from spaczz_spark.operators.substring import (
+        substring_candidates,
+        verify_substring_pairs,
+    )
 
     files = spark.createDataFrame(
         [("r", "p", "c", "py", "token stream " * 20)],
@@ -435,31 +439,97 @@ def test_substring_candidates_fingerprint_metadata_guard(spark):
     assert sig.schema["fingerprints"].metadata == {
         "fp_k": 32, "fp_w": 32, "fp_min_bytes": 100,
     }
-    # matching params: accepted silently
-    substring_candidates(sig, k=32, w=32, min_bytes=100)
-    # mismatched params: hard failure instead of silently-wrong candidates
-    with pytest.raises(ValueError, match="winnowed with"):
-        substring_candidates(sig, k=16, w=32, min_bytes=100)
     # no fingerprints column at all: no fallback pass, the error names the
     # call that builds it
     with pytest.raises(ValueError, match=r"with_fused_signatures\(fp_k="):
         substring_candidates(sig.drop("fingerprints"))
     # metadata survives a parquet checkpoint round-trip
-    import tempfile
-
     d = tempfile.mkdtemp(prefix="spaczz_fpmeta_")
     sig.write.mode("overwrite").parquet(d + "/sig")
     back = spark.read.parquet(d + "/sig")
-    with pytest.raises(ValueError, match="winnowed with"):
-        substring_candidates(back, k=32, w=16, min_bytes=100)
-    # a bare column of the right name (no metadata) only warns
+    assert back.schema["fingerprints"].metadata == sig.schema[
+        "fingerprints"
+    ].metadata
+    pairs = substring_candidates(back)
+    verify_substring_pairs(pairs, back, min_partial=75)
+    # a bare column of the right name (no metadata) has no k to score with
     stripped = back.drop("fingerprints").withColumn(
         "fingerprints", F.array().cast("array<long>")
     )
-    with warnings.catch_warnings(record=True) as wlist:
-        warnings.simplefilter("always")
-        substring_candidates(stripped, k=32, w=32, min_bytes=100)
-    assert any("metadata" in str(w.message) for w in wlist)
+    substring_candidates(stripped)
+    with pytest.raises(ValueError, match="fp_k metadata"):
+        verify_substring_pairs(pairs, stripped, min_partial=75)
+    # verbatim-only verify reads no fingerprints
+    verify_substring_pairs(pairs, stripped)
+
+
+def test_candidate_pairs_equal_bruteforce_union(pipeline_run, spark):
+    """The committed candidate_pairs hold each (pair, kind) once, and equal
+    the union computed here in plain Python from the committed signatures:
+    pairs sharing a MinHash band as ``minhash``, pairs within the SimHash
+    hamming budget that share no band as ``simhash``, and pairs sharing a
+    winnowed fingerprint as ``substring``. (No bucket on the tiny corpus
+    reaches the star tier, so every bucket contributes all its pairs.)"""
+    pipe, _, root, cfg = pipeline_run
+    committed = [
+        (r["a_id"], r["b_id"], r["stage"])
+        for r in spark.read.parquet(os.path.join(root, "candidate_pairs"))
+        .collect()
+    ]
+    assert len(committed) == len(set(committed))
+    assert len(committed) == pipe.metrics["candidate_pairs_rows"]
+
+    sigs = spark.read.parquet(os.path.join(root, "signatures")).select(
+        "file_id", "minhash", "simhash", "fingerprints"
+    ).collect()
+
+    def pairs_sharing(keys_of):
+        buckets = {}
+        for r in sigs:
+            for key in keys_of(r):
+                buckets.setdefault(key, set()).add(r["file_id"])
+        assert max(map(len, buckets.values())) <= 4096  # below the star tier
+        return {
+            p for ids in buckets.values() for p in combinations(sorted(ids), 2)
+        }
+
+    rows = cfg.rows
+    minhash = pairs_sharing(
+        lambda r: [
+            (band, tuple(r["minhash"][band * rows:(band + 1) * rows]))
+            for band in range(cfg.bands)
+        ]
+    )
+    sim = {r["file_id"]: r["simhash"] & (1 << 64) - 1 for r in sigs}
+    simhash = {
+        (a, b)
+        for a, b in combinations(sorted(sim), 2)
+        if bin(sim[a] ^ sim[b]).count("1") <= cfg.max_hamming
+    }
+    substring = pairs_sharing(lambda r: r["fingerprints"] or [])
+    expect = (
+        {(a, b, "minhash") for a, b in minhash}
+        | {(a, b, "simhash") for a, b in simhash - minhash}
+        | {(a, b, "substring") for a, b in substring}
+    )
+    assert set(committed) == expect
+    # non-vacuous: every source finds pairs (on this corpus each SimHash
+    # pair also shares a band, so none is labelled ``simhash``)
+    assert minhash and simhash and substring
+
+
+def test_resumed_stages_report_rows(pipeline_run, spark, tiny_files):
+    """A resumed stage reports the committed row count of its manifest,
+    the same ``_rows`` as the run that built it."""
+    pipe, _, root, cfg = pipeline_run
+    pipe2 = DedupPipeline(spark, cfg, root)
+    pipe2.run(tiny_files)
+    stages = [k[: -len("_resumed")] for k in pipe2.metrics
+              if k.endswith("_resumed")]
+    assert len(stages) == 5, pipe2.metrics
+    for name in stages:
+        assert pipe2.metrics[f"{name}_rows"] == pipe.metrics[f"{name}_rows"]
+        assert pipe.metrics[f"{name}_rows"] > 0, name
 
 
 def test_mega_bucket_skew_bounded_candidates_and_recall(
