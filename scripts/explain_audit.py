@@ -10,6 +10,7 @@ runs them interpreted).
 
 import io
 import os
+import re
 import sys
 import tempfile
 from contextlib import redirect_stdout
@@ -26,10 +27,10 @@ def grab(df) -> str:
     return buf.getvalue()
 
 
-def candidate_pairs_plan(spark, files, root):
-    """The DataFrame the pipeline commits as ``candidate_pairs``: the
-    pipeline runs over ``files`` (checkpoints under ``root``) until that
-    write, which is captured instead of executed."""
+def stage_plan(spark, files, root, name):
+    """The DataFrame the pipeline commits as stage ``name``: the pipeline
+    runs over ``files`` (checkpoints under ``root``) until that write,
+    which is captured instead of executed."""
     from spaczz_spark.plans.config import DedupConfig
     from spaczz_spark.plans.pipeline import DedupPipeline
 
@@ -39,25 +40,29 @@ def candidate_pairs_plan(spark, files, root):
     pipe = DedupPipeline(spark, DedupConfig(), root)
     commit, captured = pipe.catalog.write, {}
 
-    def write(name, df, *args, **kwargs):
-        if name == "candidate_pairs":
+    def write(stage, df, *args, **kwargs):
+        if stage == name:
             captured["df"] = df
             raise Captured
-        return commit(name, df, *args, **kwargs)
+        return commit(stage, df, *args, **kwargs)
 
     pipe.catalog.write = write
     try:
         pipe.run(files)
     except Captured:
         return captured["df"]
-    raise RuntimeError("the pipeline never committed candidate_pairs")
+    raise RuntimeError(f"the pipeline never committed {name}")
+
+
+def executed_tree(df) -> list[str]:
+    return df._jdf.queryExecution().executedPlan().toString().splitlines()
 
 
 def one_aggregate_over_union(df) -> str:
     """Fails unless the physical plan has exactly one aggregate (a partial
     + final pair) with the sources' Union directly below it (further
     Unions, each source's all-pairs + star projection, sit deeper)."""
-    tree = df._jdf.queryExecution().executedPlan().toString().splitlines()
+    tree = executed_tree(df)
     aggs = [i for i, line in enumerate(tree) if "Aggregate(" in line]
     unions = [i for i, line in enumerate(tree) if line.endswith("Union")]
     if len(aggs) != 2 or not unions or unions[0] < aggs[-1]:
@@ -67,6 +72,33 @@ def one_aggregate_over_union(df) -> str:
         )
     return ("Verified by the script: 2 aggregate nodes (partial + final), "
             "the Union of the sources below them.")
+
+
+def cascade_without_window(df) -> str:
+    """Fails unless the verify cascade plans as a plain union: no Window,
+    exactly one LeftAnti join on (a_id, b_id) (substring candidates minus
+    the set-similarity verifier's output), and no edit-ratio
+    ArrowEvalPython, i.e. the kernel runs inside the lazy checkpoint the
+    plan scans, not again above it."""
+    tree = executed_tree(df)
+    anti = [line for line in tree if "LeftAnti" in line]
+    problems = []
+    if any(re.search(r"\bWindow\b", line) for line in tree):
+        problems.append("a Window node")
+    if len(anti) != 1 or not re.search(
+        r"\[a_id#\d+L, b_id#\d+L\], \[a_id#\d+L, b_id#\d+L\], LeftAnti",
+        anti[0],
+    ):
+        problems.append(f"{len(anti)} LeftAnti joins, want one on (a_id, b_id)")
+    if any("ArrowEvalPython" in line and "edit_ratio(" in line
+           for line in tree):
+        problems.append("the edit-ratio kernel above the checkpoint scan")
+    if problems:
+        raise SystemExit(
+            "verified_pairs: " + "; ".join(problems) + ":\n" + "\n".join(tree)
+        )
+    return ("Verified by the script: no Window node, one LeftAnti join on "
+            "(a_id, b_id), no edit-ratio ArrowEvalPython.")
 
 
 def main():
@@ -162,7 +194,7 @@ def main():
     ))
 
     with tempfile.TemporaryDirectory() as root:
-        cand_plan = candidate_pairs_plan(spark, files, root)
+        cand_plan = stage_plan(spark, files, root, "candidate_pairs")
         sections.append((
             "candidate_pairs stage — one aggregate over the three-source "
             "union",
@@ -173,6 +205,24 @@ def main():
             "string stage), and no other aggregate in the stage. "
             + one_aggregate_over_union(cand_plan),
             grab(cand_plan),
+        ))
+        # resumes normalized + signatures, commits candidate_pairs
+        ver_plan = stage_plan(spark, files, root, "verified_pairs")
+        sections.append((
+            "verified_pairs stage — the verify cascade",
+            "Check: the set-similarity verifier's output is a lazy "
+            "checkpoint (Scan ExistingRDD, read twice): once as the first "
+            "branch of the Union and once as the right side of the ONE "
+            "LeftAnti join that leaves the substring verifier only the "
+            "substring candidates it did not accept (planned as a sort-"
+            "merge join: the checkpoint has no size statistics until it "
+            "runs, so AQE decides on a broadcast). The two branches are "
+            "disjoint and one row per pair, so the plan ends in a plain "
+            "Union: no Window and no exchange to pick a best record. The "
+            "only ArrowEvalPython nodes are the substring verifier's "
+            "(anchor screen, windowed containment kernel). "
+            + cascade_without_window(ver_plan),
+            grab(ver_plan),
         ))
 
     sections.append((

@@ -53,9 +53,10 @@ class DedupConfig:
     # to stage outputs (e.g. 5: `content` dropped from the `signatures`
     # checkpoint — verify joins text from `normalized` instead) and config
     # field changes (6: unread `simhash_bits`/`shuffle_partitions` removed;
-    # 7: the unread reference ratio fields removed, `min_r2` read directly)
+    # 7: the unread reference ratio fields removed, `min_r2` read directly;
+    # 8: `verified_pairs` keeps the verify cascade's one record per pair)
     # invalidate incompatible checkpoints from older engine builds
-    layout_version: int = 7
+    layout_version: int = 8
 
     def __post_init__(self):
         if self.bands * self.rows != self.num_perm:

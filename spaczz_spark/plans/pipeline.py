@@ -12,8 +12,10 @@ collapse is a slim recomputed view over ``normalized``, not a commit):
                          fingerprints (one fused pandas UDF)
       -> candidate_pairs MinHash banding ∪ SimHash blocking ∪ winnowed
                          substring fingerprints (skew-capped bucket joins)
-      -> verified_pairs  sha fast path / exact Jaccard (JVM) / InDel kernel
-                         (gated pandas UDF); best-ratio per pair (M4 semantics)
+      -> verified_pairs  cascade: sha fast path / exact Jaccard (JVM) / InDel
+                         kernel (gated pandas UDF) on the set-similarity
+                         candidates, then containment / partial on the
+                         substring candidates they left; one row per pair
       -> components      large-star/small-star CC + final assignment with
                          provenance (M5/M9 semantics)
 
@@ -265,8 +267,9 @@ class DedupPipeline:
             # band-collide in MinHash (likely even at Jaccard ~0.25), fail
             # Jaccard/edit verification there, and still be a true
             # verbatim-containment duplicate that only the containment
-            # verifier can accept. Both rows survive; the verified union
-            # keeps the best record per pair.
+            # verifier can accept. Both rows survive; the verify cascade
+            # runs the substring verifier only on the pairs the
+            # set-similarity verifier left.
             return (
                 mh.unionByName(sh)
                 .unionByName(sub)
@@ -279,29 +282,28 @@ class DedupPipeline:
 
         # ---- verification ---------------------------------------------------
         def build_verified():
-            # COMPOSITION CHOICE (measured, round 6): v1 and v2 are evaluated
-            # FUSED — one union job behind one write barrier — not as two
-            # localCheckpoint'ed jobs. The A/B on scale4
-            # (BENCH/ab_verify_composition_r6.json, interleaved min-of-2,
-            # identical 127,056-row outputs): fused 143.7s vs split 159.8s at
-            # local[4] (split pays two extra materialization barriers that
-            # parallel execution otherwise overlaps), and fused scales 4.17x
-            # (1->4 cores) vs split's 2.81x. Split's one win is the serial
-            # case (449s vs 600s at local[1] — memory-pressure relief), which
-            # production never runs.
-            sim_cand = candidates.where(F.col("stage") != "substring")
-            sub_cand = candidates.where(F.col("stage") == "substring")
+            # Cascade: the cheapest verifier that accepts a pair decides it
+            # (the reference's "already good enough -> don't optimize").
+            # verify_pairs decides the set-similarity rows, most of them
+            # by sha or Jaccard in the JVM; the Python substring verifier
+            # sees only the substring rows it left. The two outputs are
+            # disjoint and each holds one row per pair, so their union
+            # needs no best-record reconciliation. Lazy checkpoint: the
+            # edit-ratio UDF is nondeterministic, so the anti-join's
+            # second reference would otherwise run the kernel again.
             v1 = verify_pairs(
-                sim_cand,
+                candidates.where(F.col("stage") != "substring"),
                 signatures,
                 min_r2=cfg.min_r2,
                 jaccard_min=cfg.jaccard_min,
                 jaccard_floor=cfg.jaccard_floor,
                 ratio_func=cfg.ratio_func,
                 content_df=content_df,
-            )
+            ).localCheckpoint(eager=False)
             v2 = verify_substring_pairs(
-                sub_cand,
+                candidates.where(F.col("stage") == "substring").join(
+                    v1.select("a_id", "b_id"), ["a_id", "b_id"], "left_anti"
+                ),
                 signatures,
                 min_len=cfg.substring_min_len,
                 # S2 semantics: edited near-containment scores like the
@@ -310,16 +312,7 @@ class DedupPipeline:
                 min_partial=cfg.min_r2 if cfg.substring_partial else None,
                 content_df=content_df,
             )
-            allv = v1.unionByName(v2)
-            # best record per pair (reference M4: keep max-ratio entry per key)
-            w = Window.partitionBy("a_id", "b_id").orderBy(
-                F.desc_nulls_last("edit_ratio"), F.desc_nulls_last("jaccard")
-            )
-            return (
-                allv.withColumn("rn", F.row_number().over(w))
-                .where(F.col("rn") == 1)
-                .drop("rn")
-            )
+            return v1.unionByName(v2)
 
         verified = self._stage("verified_pairs", build_verified)
 

@@ -597,3 +597,133 @@ def test_star_tier_keeps_mega_bucket_linear(spark):
     assert labels.select("component_id").distinct().count() == 1
     assert labels.count() == n
 
+
+
+@pytest.fixture(scope="module")
+def cascade_run(spark, tmp_path_factory):
+    """A pipeline run over three kinds of pairs: ``dup``/``dup_ext`` are a
+    Jaccard duplicate that also contains its partner verbatim; ``needle``
+    is pasted into the much longer ``host`` (Jaccard below
+    ``jaccard_floor``); ``other*`` are unrelated. Returns the committed
+    root, the config and the file id of each path."""
+    import random
+
+    import pandas as pd
+
+    rng = random.Random(21)
+
+    def words(n):
+        return " ".join(
+            "".join(rng.choice("abcdefghijklmnop") for _ in range(6))
+            for _ in range(n)
+        )
+
+    dup, needle, host = words(300), words(40), words(800).split(" ")
+    contents = {
+        "dup": dup,
+        "dup_ext": dup + " " + words(10),
+        "needle": needle,
+        "host": " ".join(host[:400] + [needle] + host[400:]),
+        "other1": words(200),
+        "other2": words(200),
+        "other3": words(200),
+    }
+    files = spark.createDataFrame(pd.DataFrame({
+        "repo": "r", "path": list(contents), "commit": "c", "lang": "txt",
+        "content": list(contents.values()),
+    }))
+    root = str(tmp_path_factory.mktemp("cascade_ckpt"))
+    cfg = DedupConfig()
+    DedupPipeline(spark, cfg, root).run(files)
+    ids = {
+        r["path"]: r["file_id"]
+        for r in spark.read.parquet(os.path.join(root, "normalized")).collect()
+    }
+    return root, cfg, ids
+
+
+def _standalone_verified(spark, root, cfg):
+    """Each verifier run on ALL of its committed candidates, with no
+    anti-join between them: (set-similarity rows, substring rows)."""
+    from pyspark.sql import functions as F
+
+    from spaczz_spark.operators.substring import verify_substring_pairs
+    from spaczz_spark.operators.verify import verify_pairs
+
+    def read(name):
+        return spark.read.parquet(os.path.join(root, name))
+
+    cand = read("candidate_pairs")
+    sig = read("signatures")
+    content = read("normalized").select("file_id", "content")
+    v1 = verify_pairs(
+        cand.where(F.col("stage") != "substring"), sig,
+        min_r2=cfg.min_r2, jaccard_min=cfg.jaccard_min,
+        jaccard_floor=cfg.jaccard_floor, ratio_func=cfg.ratio_func,
+        content_df=content,
+    )
+    v2 = verify_substring_pairs(
+        cand.where(F.col("stage") == "substring"), sig,
+        min_len=cfg.substring_min_len, min_partial=cfg.min_r2,
+        content_df=content,
+    )
+    return (
+        {(r["a_id"], r["b_id"]): r["verified_by"] for r in v1.collect()},
+        {(r["a_id"], r["b_id"]): r["verified_by"] for r in v2.collect()},
+    )
+
+
+def test_verify_cascade_one_record_per_pair(cascade_run, spark):
+    """``verified_pairs`` holds one record per pair: a pair both verifiers
+    accept keeps the set-similarity verifier's record, a containment-only
+    pair is still verified by containment, and the components equal a
+    union-find over what both verifiers accept when run standalone."""
+    root, cfg, ids = cascade_run
+    rows = [
+        (r["a_id"], r["b_id"], r["verified_by"])
+        for r in spark.read.parquet(os.path.join(root, "verified_pairs"))
+        .collect()
+    ]
+    by_pair = {(a, b): v for a, b, v in rows}
+    assert len(by_pair) == len(rows), rows
+
+    def pair(x, y):
+        return tuple(sorted((ids[x], ids[y])))
+
+    v1, v2 = _standalone_verified(spark, root, cfg)
+    both, contained = pair("dup", "dup_ext"), pair("needle", "host")
+    # non-vacuous: the corpus has a pair of each kind
+    assert v1[both] == "jaccard" and v2[both] == "containment"
+    assert contained in v2 and contained not in v1
+    assert by_pair[both] == "jaccard"
+    assert by_pair[contained] == "containment"
+
+    parent = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    for a, b in set(v1) | set(v2):
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    comps = {
+        r["file_id"]: r["component_id"]
+        for r in spark.read.parquet(os.path.join(root, "components")).collect()
+    }
+    assert comps == {f: find(f) for f in ids.values()}
+    assert len(set(comps.values())) == len(ids) - 2  # two pairs, 3 others
+
+
+def test_verify_cascade_keeps_pair_set(cascade_run, spark):
+    """Only the record changes: the committed pair set equals the union of
+    both verifiers run standalone on all of their candidates."""
+    root, cfg, _ = cascade_run
+    committed = {
+        (r["a_id"], r["b_id"])
+        for r in spark.read.parquet(os.path.join(root, "verified_pairs"))
+        .collect()
+    }
+    v1, v2 = _standalone_verified(spark, root, cfg)
+    assert committed == set(v1) | set(v2)
